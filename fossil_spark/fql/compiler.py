@@ -278,10 +278,9 @@ def time_bounds(
     """Resolved inclusive [lo, hi] wall-clock bounds of a query's time
     predicate, or (None, None) when unbounded. Spark cannot infer
     `date = to_date(time)` from a `time` filter, so callers that own a
-    date-partitioned layout (EventStore) use these bounds to add a
-    redundant `date` predicate — that is what turns a since/between
-    query into real partition pruning instead of a full directory
-    listing at 100 TB partition counts."""
+    date-partitioned layout (EventStore._read_pruned) use these bounds
+    to pick the date directories to read and to add a redundant `date`
+    predicate (PartitionFilters in the plan)."""
     if isinstance(q, str):
         q = parse(q)
     now = now or datetime.now(timezone.utc)

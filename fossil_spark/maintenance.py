@@ -19,26 +19,19 @@ from __future__ import annotations
 
 import os
 import shutil
-from datetime import date, datetime
+from datetime import date
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-
-def _partitions(root: str) -> list[str]:
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        d for d in os.listdir(root)
-        if d.startswith("date=") and os.path.isdir(os.path.join(root, d))
-    )
+from fossil_spark.store import list_partitions
 
 
 def small_file_report(spark: SparkSession, root: str,
                       small_bytes: int = 8 * 1024 * 1024) -> list[tuple[str, int, int]]:
     """(partition, n_files, n_small_files) per date partition."""
     out = []
-    for part in _partitions(root):
+    for part, _ in list_partitions(root):
         pdir = os.path.join(root, part)
         files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
         small = [
@@ -67,7 +60,7 @@ def compact(
     100 TB. A round-robin repartition here would scatter every topic
     across every file and quietly forfeit that pruning."""
     compacted = []
-    for part in _partitions(root):
+    for part, _ in list_partitions(root):
         pdir = os.path.join(root, part)
         files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
         if len(files) < min_files:
@@ -91,11 +84,11 @@ def compact(
 
 def expire(root: str, older_than: date) -> list[str]:
     """Drop partitions strictly before the horizon (retention).
-    Directory-level: no data is read or rewritten."""
+    Directory-level: no data is read or rewritten. The null-time
+    partition and directories whose name is not a date are kept."""
     dropped = []
-    for part in _partitions(root):
-        part_date = datetime.strptime(part.split("=", 1)[1], "%Y-%m-%d").date()
-        if part_date < older_than:
+    for part, day in list_partitions(root):
+        if day is not None and day < older_than:
             shutil.rmtree(os.path.join(root, part))
             dropped.append(part)
     return dropped

@@ -199,7 +199,6 @@ class _Database:
         # path share the _temporary staging dir and can clobber each
         # other's commit — one flush at a time per database
         self.flush_lock = threading.Lock()
-        self._registry_cache: tuple[float, object] | None = None
         os.makedirs(root, exist_ok=True)
         self._wal_active = os.path.join(root, "_wal.jsonl")
         self._wal_flushing = os.path.join(root, "_wal.flushing.jsonl")
@@ -252,25 +251,13 @@ class _Database:
             os.replace(self._wal_active, self._wal_flushing)
         self._wal_fh = open(self._wal_active, "a", encoding="utf-8")
 
-    def _registry(self):
-        """Topic registry, cached on the sidecar file's mtime — the
-        APPEND hot path must not re-read JSON per datum."""
-        path = self.store._schema_path
-        try:
-            mtime = os.path.getmtime(path)
-        except OSError:
-            mtime = -1.0
-        if self._registry_cache is None or self._registry_cache[0] != mtime:
-            self._registry_cache = (mtime, self.store._load_registry())
-        return self._registry_cache[1]
-
     def append(self, topic: str, data: bytes, flush_every: int) -> None:
         from fossil_spark.encoding import (
             decode_python, to_storage_text, validate_bytes,
         )
         from fossil_spark.schema import SchemaError, conforms
 
-        schema = self._registry().get(topic)
+        schema = self.store._load_registry().get(topic)
         if schema.text == "string":
             value = data.decode("utf-8", "replace")
         else:
@@ -341,12 +328,9 @@ class _Database:
                 compact(self.spark, self.store.root)
 
     def is_empty(self) -> bool:
-        try:
-            return not any(
-                f.startswith("date=") for f in os.listdir(self.store.root)
-            )
-        except FileNotFoundError:
-            return True
+        from fossil_spark.store import list_partitions
+
+        return not list_partitions(self.store.root)
 
     def stats(self, ttl: float = 0.0) -> tuple[int, int]:
         """(segments, topics) — segments = parquet files, the direct
@@ -527,17 +511,17 @@ class FossilServer:
         q = parse(text)
         topic = q.topic
         has_pipeline = bool(q.pipeline)
-        if topic and db.store.schema_for_topic(topic).text != "string":
-            out = db.store.query_typed(text, topic, now=self._now)
+        reg = db.store._load_registry()
+        if topic and reg.get(topic).text != "string":
+            out = db.store.query_typed(q, topic, now=self._now)
         else:
-            out = db.store.query(text, now=self._now)
+            out = db.store.query(q, now=self._now)
         # reference parity: entries stream back in time order
         # (db.go Retrieve walks segments chronologically)
         if "time" in out.columns:
             order = ["time"] + (["topic"] if "topic" in out.columns else [])
             out = out.orderBy(*order)
         rows = out.limit(self.max_query_rows).collect()
-        reg = db.store._load_registry()
         out = []
         for r in rows:
             d = r.asDict()

@@ -249,62 +249,6 @@ def test_tpch_dims_broadcast(plans):
         assert "broadcast" in plans[key].lower(), f"{key} lost its broadcast hint"
 
 
-def test_store_time_predicate_prunes_partitions(spark):
-    # a `since` on an EventStore must reach the scan as a partition
-    # filter on `date`, not just a row filter on `time`
-    import os
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from fossil_spark.store import EventStore, FIXED_NOW, events_store_view
-
-    import re
-
-    root = os.path.join("build", f"prune_{uuid.uuid4().hex[:8]}")
-    try:
-        st = EventStore(spark, root)
-        st.append(events_store_view(spark, SF))
-
-        def partition_filters(df):
-            m = re.search(r"PartitionFilters: \[([^\]]*)\]", _plan_of(df))
-            assert m is not None, "no PartitionFilters in scan"
-            return m.group(1)
-
-        # the FQL path itself must prune: since/before/between compile
-        # to a redundant `date` bound (store._read_pruned)
-        for text in (
-            "all since ~(2024-01-15T00:00:00Z)",
-            "all before ~(2024-01-10T00:00:00Z)",
-            "all between ~(2024-01-10T00:00:00Z), ~(2024-01-20T00:00:00Z)",
-        ):
-            q = st.query(text, now=FIXED_NOW)
-            pf = partition_filters(q)
-            assert "date" in pf, f"{text!r}: date not in partition filters: {pf!r}"
-
-        # an unbounded query has no partition filter (and must not error)
-        assert "date" not in partition_filters(st.query("all", now=FIXED_NOW))
-
-        # topic-prefix selection pushes into the parquet scan as a
-        # StringStartsWith filter (row-group dictionary/stats skip)
-        topic_plan = _plan_of(st.query("all in /events/click", now=FIXED_NOW))
-        assert "StartsWith(topic,/events/click)" in topic_plan.replace(
-            "'", ""
-        ), "topic prefix not pushed to scan"
-
-        # pruning changes which files are read, not the answer
-        since = st.query("all since ~(2024-01-15T00:00:00Z)", now=FIXED_NOW)
-        unpruned = st.read().filter(
-            (F.col("time") >= F.lit("2024-01-15").cast("timestamp"))
-            & (F.col("time") <= F.lit(FIXED_NOW.replace(tzinfo=None)))
-        )
-        assert since.count() == unpruned.count() > 0
-        assert since.count() < st.read().count()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def test_store_scan_prunes_columns(spark):
     # a 2-column FQL projection must not read all event columns
     from fossil_spark.fql import fql

@@ -5,6 +5,7 @@ import json
 import os
 import shutil
 import uuid
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -59,6 +60,17 @@ def test_stream_ingest_to_store(spark, workdir):
     # FQL works on streamed data
     got = store.query("all in /logs").count()
     assert got == 2
+
+    # a bounded query reads the sink root through its commit log, so a
+    # file the sink never committed stays unread
+    day = os.path.join(store_root, "date=2024-01-01")
+    committed = next(f for f in os.listdir(day) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(day, committed), os.path.join(day, "part-uncommitted.parquet"))
+    bounded = store.query("all in /logs since ~(2024-01-01T00:00:00Z)",
+                          now=datetime(2024, 1, 3, tzinfo=timezone.utc))
+    assert bounded.count() == 2
+    assert "MetadataLogFileIndex" in bounded._jdf.queryExecution().toString()
+    os.remove(os.path.join(day, "part-uncommitted.parquet"))
 
     # exactly-once: re-running the same availableNow query ingests nothing new
     q2 = write_to_store(
