@@ -1708,21 +1708,22 @@ def _embedding_knn_classify(spark, sf_dir):
 
 
 def _ann_recall_eval(spark, sf_dir):
+    from fossil_spark.catalog import memo
     from fossil_spark.operators import ann
     from fossil_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id < 8")
     # truth + both candidate tables come from the session catalog
-    # (ann.memo): ann_ndcg scores the SAME three tables — one
+    # (catalog.memo): ann_ndcg scores the SAME three tables — one
     # brute-force pass and one index build each across the suite
     return ann.recall_eval(
         ann.topk_truth(emb, q, k=5, dim=64),
         {
-            "ivf": ann.memo(
+            "ivf": memo(
                 ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64)
             ),
-            "lsh": ann.memo(ann.lsh_ann(emb, q, dim=64, k=5)),
+            "lsh": memo(ann.lsh_ann(emb, q, dim=64, k=5)),
         },
         k=5,
     )
@@ -2045,6 +2046,7 @@ def _dedup_method_compare(spark, sf_dir):
 
 
 def _ann_recall_curve(spark, sf_dir):
+    from fossil_spark.catalog import memo
     from fossil_spark.operators import ann
     from fossil_spark.session import read_table
 
@@ -2053,7 +2055,7 @@ def _ann_recall_curve(spark, sf_dir):
     # the catalog materializes truth at k=10, so this is the SAME
     # persisted table recall_eval/ndcg read at k=5
     truth = ann.topk_truth(emb, q, k=10, dim=64)
-    cand = ann.memo(ann.lsh_ann(emb, q, dim=64, k=10))
+    cand = memo(ann.lsh_ann(emb, q, dim=64, k=10))
     return ann.recall_curve(truth, cand, ks=[1, 3, 5, 10], method="lsh")
 
 
@@ -2205,6 +2207,7 @@ def _ts_staleness(spark, sf_dir):
 
 
 def _ann_index_agreement(spark, sf_dir):
+    from fossil_spark.catalog import memo
     from fossil_spark.operators import ann
     from fossil_spark.session import read_table
 
@@ -2217,8 +2220,8 @@ def _ann_index_agreement(spark, sf_dir):
     # re-paid in the heavy child)
     return ann.index_agreement(
         {
-            "lsh": ann.memo(ann.lsh_ann(emb, q, dim=64, k=5)),
-            "ivf": ann.memo(
+            "lsh": memo(ann.lsh_ann(emb, q, dim=64, k=5)),
+            "ivf": memo(
                 ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64)
             ),
         },
@@ -3068,6 +3071,7 @@ def _ann_ndcg(spark, sf_dir):
     """NDCG@5 of the IVF and LSH indexes vs the exact cosine ranking
     (ann.ndcg_eval): order-aware index quality next to
     ann_recall_eval's set-based recall."""
+    from fossil_spark.catalog import memo
     from fossil_spark.operators import ann
     from fossil_spark.session import read_table
 
@@ -3077,10 +3081,10 @@ def _ann_ndcg(spark, sf_dir):
     return ann.ndcg_eval(
         ann.topk_truth(emb, q, k=5, dim=64),
         {
-            "ivf": ann.memo(
+            "ivf": memo(
                 ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64)
             ),
-            "lsh": ann.memo(ann.lsh_ann(emb, q, dim=64, k=5)),
+            "lsh": memo(ann.lsh_ann(emb, q, dim=64, k=5)),
         },
         k=5,
     )

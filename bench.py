@@ -21,32 +21,13 @@ def force(df) -> None:
 
 
 def clear_session_memos() -> None:
-    """Drop every session-scoped operator result memo (ann truth/
-    candidate catalog, kmeans/pq/bpe/label-prop/theil-sen input-keyed
-    memos, dedup signature/pair tables, the near-dup component
-    catalog). The bench clears these before EVERY timed run so each
-    per-query number measures a COLD query — never a persisted-table
-    read (r13 verdict #1: under min-of-2 a memo hit recorded the
-    cache, not the query). The memos stay on as an engine feature for
-    real sessions; only the measurement path disables them."""
-    try:
-        from fossil_spark.operators.ann import ann_memo_invalidate
+    """Empty the session result catalog. The bench clears it before
+    EVERY timed run so each per-query number measures a COLD query,
+    never a persisted-table read (r13 verdict #1: under min-of-2 a
+    memo hit recorded the cache, not the query)."""
+    from fossil_spark import catalog
 
-        ann_memo_invalidate()
-    except Exception as ex:
-        print(f"# ann memo clear failed: {ex}", file=sys.stderr)
-    try:
-        from fossil_spark.operators.dedup import neardup_components_invalidate
-
-        neardup_components_invalidate()
-    except Exception as ex:
-        print(f"# component cache clear failed: {ex}", file=sys.stderr)
-    try:
-        from fossil_spark.operators.text import bpe_chain_invalidate
-
-        bpe_chain_invalidate()
-    except Exception as ex:
-        print(f"# bpe memo clear failed: {ex}", file=sys.stderr)
+    catalog.invalidate_all()
 
 
 # The driver's test parquet is single-row-group, capping scan

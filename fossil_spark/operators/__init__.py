@@ -3,113 +3,6 @@ sessionization, gap fill, …) and LLM-data-pipeline operators (dedup,
 similarity search, text analysis, multimodal plumbing)."""
 
 
-def session_live(sess) -> bool:
-    """True while a SparkSession's JVM context is still running —
-    after .stop() the underlying _jsc is cleared. Shared by the
-    session-scoped result memos (ann.py, dedup.py) so stopped-session
-    cache entries are never served and get swept from the LRUs."""
-    try:
-        return sess is not None and sess.sparkContext._jsc is not None
-    except Exception:
-        return False
-
-
-def plan_files_tag(df) -> str:
-    """Staleness component for plan-keyed memo caches: md5 over the
-    sorted (path, mtime_ns, size) triples of the plan's leaf input
-    files (the bench prep_multirg pattern). Rewriting parquet behind
-    a previously-seen plan changes the tag, so the memo misses and
-    rebuilds instead of serving stale rows. Purely in-memory plans
-    (no files) share the empty-list hash — the plan's semanticHash
-    still separates them.
-
-    Walks the ANALYZED logical plan's leaves via the JVM rather than
-    calling df.inputFiles(): once an equivalent subtree is persisted,
-    Spark's CacheManager substitution makes inputFiles() on the full
-    derived plan return [] (the scan became an InMemoryRelation), so
-    every cached-adjacent plan would collapse onto the same empty tag
-    and a post-rewrite plan could HIT a pre-rewrite entry. The
-    analyzed plan is resolved BEFORE cache substitution, so its
-    file-source leaves are always visible."""
-    import hashlib
-    import os
-
-    files = None
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        files = []
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            try:
-                files.extend(leaf.relation().location().inputFiles())
-            except Exception:
-                pass  # non-file leaf (LocalRelation, InMemoryRelation, …)
-    except Exception:
-        files = None
-    if files is None:
-        try:
-            files = df.inputFiles()
-        except Exception:
-            return "nofiles"
-    parts = []
-    for uri in sorted(files):
-        path = uri
-        if path.startswith("file://"):
-            path = path[7:]
-        elif path.startswith("file:"):
-            path = path[5:]
-        try:
-            st = os.stat(path)
-            parts.append(f"{path}:{st.st_mtime_ns}:{st.st_size}")
-        except OSError:
-            parts.append(path)  # remote/virtual path — name-only tag
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-def plan_input_bytes(df) -> int | None:
-    """Total bytes of the plan's leaf input files, or None when the
-    plan has no file-backed leaves (in-memory, RDD-checkpointed).
-    The size-admission signal for the session memos (ann._memo_admit):
-    a memoized table derived from a corpus-scale scan is itself
-    corpus-scale in the worst case, and the leaf bytes are the one
-    size estimate that is stable (Catalyst's optimized-plan stats
-    inflate through joins/Generate to petabytes even at sf0.1, and
-    LogicalRDD leaves report defaultSizeInBytes)."""
-    import os
-
-    files = None
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        files = []
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            try:
-                files.extend(leaf.relation().location().inputFiles())
-            except Exception:
-                pass
-    except Exception:
-        files = None
-    if not files:
-        try:
-            files = df.inputFiles()
-        except Exception:
-            return None
-    if not files:
-        return None
-    total = 0
-    for uri in set(files):
-        path = uri
-        if path.startswith("file://"):
-            path = path[7:]
-        elif path.startswith("file:"):
-            path = path[5:]
-        try:
-            total += os.stat(path).st_size
-        except OSError:
-            pass  # remote path: unknown size contributes 0
-    return total
-
-
 def fixed_rounds_guard(op: str, rounds: int, limit: int = 12) -> None:
     """Loud call-time guard for FIXED-round iterative operators
     (sigma_clip, kcore, label_propagation, …): each round stacks

@@ -17,13 +17,14 @@
 
 from __future__ import annotations
 
-import collections
 import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
+
+from fossil_spark.catalog import Slot, memo
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -316,150 +317,7 @@ def _rank_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-# --- session-scoped result memo + exact-truth catalog -------------------
-#
-# Every retrieval AUDIT (recall@k, NDCG, recall curve, truncation/BQ/
-# two-stage comparisons) consumes the SAME exact brute-force truth —
-# and often the same IVF/LSH/BQ candidate tables. A production
-# evaluation materializes those once per corpus snapshot and joins
-# every audit against them; recomputing the |corpus| x |queries| scan
-# per audit multiplies the most expensive pass in the retrieval suite
-# (r11 verdict #1: 7 keys x ~1 rebuild each = the 100 s heavy child).
-# This is the dedup component-catalog precedent (dedup.py, r7:
-# 30.2 s -> 1.8 s) applied to retrieval: session-scoped, keyed by the
-# input plan's semantic hash PLUS a snapshot of the plan's leaf input
-# files (path, mtime, size — the bench prep_multirg pattern), so
-# rewriting parquet behind a previously-seen plan misses the cache and
-# rebuilds fresh truth instead of serving stale rows. Entries hold the
-# owning session directly (the cached DataFrame already pins it, so a
-# weakref could never die — r12 ADVICE) and a hit is honored only
-# while that session is still live AND the cached schema matches the
-# request: a semanticHash collision between two genuinely different
-# plans falls through to a recompute instead of silently serving the
-# wrong table. Stopped-session entries are swept on the next insert.
-# ann_memo_invalidate() remains for exotic cases (e.g. an in-place
-# rewrite that preserves every file's mtime and size).
-_MEMO_CACHE: collections.OrderedDict = collections.OrderedDict()
-_MEMO_CACHE_MAX = 16
-
-
-def _memo_drop(key) -> None:
-    entry = _MEMO_CACHE.pop(key, None)
-    if entry is not None:
-        try:
-            entry[1].unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to free
-
-
-def _session_live(sess) -> bool:
-    from fossil_spark.operators import session_live
-
-    return session_live(sess)
-
-
-def _files_tag(df: DataFrame) -> str:
-    from fossil_spark.operators import plan_files_tag
-
-    return plan_files_tag(df)
-
-
-def ann_memo_invalidate() -> None:
-    """Unpersist and drop every memoized truth/candidate table (use
-    after rewriting the files behind a previously-seen plan)."""
-    for key in list(_MEMO_CACHE):
-        _memo_drop(key)
-
-
-def memo(df: DataFrame, tag: str = "") -> DataFrame:
-    """Persist-once session memo: the first caller of a semantically
-    identical plan materializes it (MEMORY_AND_DISK); later callers in
-    the same session get the persisted table back and the expensive
-    scan never re-runs. Results are bitwise unchanged — all memoized
-    builders here are deterministic (rounded scores, id tie-breaks).
-    `tag` separates same-plan uses that must not share. Falls back to
-    the raw df for plans that can't semantic-hash."""
-    from pyspark import StorageLevel
-
-    sess = df.sparkSession
-    try:
-        key = (id(sess), tag, df.semanticHash(), _files_tag(df))
-    except Exception:
-        return df
-    cached = _memo_lookup(sess, key, df.schema)
-    if cached is not None:
-        return cached
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _memo_store(sess, key, out)
-    return out
-
-
-def _memo_lookup(sess, key, want_schema) -> DataFrame | None:
-    """Honor a hit only for the live owning session AND when the
-    cached schema matches the request — a 32-bit semanticHash
-    collision between different plans must recompute, not serve
-    wrong rows."""
-    hit = _MEMO_CACHE.get(key)
-    if hit is None:
-        return None
-    owner, cached = hit
-    if owner is sess and _session_live(sess) \
-            and cached.schema == want_schema:
-        _MEMO_CACHE.move_to_end(key)
-        return cached
-    _memo_drop(key)
-    return None
-
-
-def memo_max_bytes() -> int:
-    """Size-admission cap for memo entries, in LEAF INPUT bytes of
-    the candidate plan (no action is run; Catalyst's optimized-plan
-    stats were measured inflating to petabytes through joins even at
-    sf0.1, so leaf bytes are the stable proxy — a memoized table
-    derived from a corpus-scale scan is itself corpus-scale in the
-    worst case). Entries over the cap are not persisted: pinning a
-    corpus-sized signature matrix or pair graph MEMORY_AND_DISK for
-    the whole session is an executor-storage time bomb (r13 verdict
-    #3). Default 8 GiB — far above the sf0.1 inputs (~100 MB), so
-    local behavior is unchanged; set SPARK_GRAFT_MEMO_MAX_BYTES per
-    deployment (e.g. a few % of cluster storage memory)."""
-    return int(
-        os.environ.get("SPARK_GRAFT_MEMO_MAX_BYTES", str(8 * 1024**3))
-    )
-
-
-def _memo_admit(out: DataFrame) -> bool:
-    """True when the plan's leaf input bytes are under the cap.
-    Unknown sizes admit (in-memory/checkpointed plans, estimation
-    failures — preserves pre-cap behavior): the cap exists to stop
-    KNOWN-huge tables, not to disable the memo."""
-    from fossil_spark.operators import plan_input_bytes
-
-    try:
-        est = plan_input_bytes(out)
-    except Exception:
-        return True
-    return est is None or est <= memo_max_bytes()
-
-
-def _memo_store(sess, key, out: DataFrame) -> None:
-    # size-aware admission (r13 verdict #3): never pin a corpus-scale
-    # table for the session; callers persist before storing, so a
-    # rejected entry is unpersisted again (no action ran in between)
-    if not _memo_admit(out):
-        try:
-            out.unpersist()
-        except Exception:
-            pass
-        return
-    # sweep stopped-session entries — they can never hit again and
-    # would crowd live entries out of the 16-slot LRU
-    for stale in [k for k, (s, _) in _MEMO_CACHE.items()
-                  if not _session_live(s)]:
-        _memo_drop(stale)
-    while len(_MEMO_CACHE) >= _MEMO_CACHE_MAX:
-        _memo_drop(next(iter(_MEMO_CACHE)))
-    _MEMO_CACHE[key] = (sess, out)
+# --- exact-truth catalog ------------------------------------------------
 
 
 _TRUTH_KMAX = 10  # the largest k any shipped audit asks of the truth
@@ -832,53 +690,24 @@ def pq_ann(
     qplan = queries.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__qv")
     )
-    # INPUT-keyed session memo (r13, the kmeans_cluster shape): the
-    # codebook training runs a sample collect + numpy Lloyd and the
-    # query chunking runs toLocalIterator jobs at plan-BUILD time, so
-    # an output-keyed memo() would still pay them per call. Key on
-    # both input plans + every training/scan param BEFORE collecting;
-    # hit requires the live owning session and the exact output
-    # columns (a 32-bit collision must recompute).
-    sess = corpus.sparkSession
-    out_cols = ["query_id", id_col, "cos_sim", "rank"]
-    try:
-        mkey = (
-            id(sess),
-            f"pq:{k}:{m}:{n_cents}:{n_iter}:{rerank_factor}"
-            f":{train_sample}:{q_batch}:{round_to}:{id_col}",
-            vecs.semanticHash(),
-            qplan.semanticHash(),
-            _files_tag(vecs),
-            _files_tag(qplan),
-        )
-    except Exception:
-        mkey = None
-    if mkey is not None:
-        hit = _MEMO_CACHE.get(mkey)
-        if hit is not None:
-            owner, cached = hit
-            # full-schema guard, not just column names (r13 ADVICE):
-            # a semanticHash collision between plans with same-named
-            # but differently-TYPED id columns must recompute
-            # query_id carries the CORPUS id type: the candidate
-            # table's schema types both id fields from corpus, and
-            # the rerank join keeps the candidate side's column
-            want_types = (
-                vecs.schema[id_col].dataType,
-                vecs.schema[id_col].dataType,
-                T.DoubleType(),
-                T.IntegerType(),
-            )
-            if (
-                owner is sess
-                and _session_live(sess)
-                and cached.columns == out_cols
-                and tuple(f.dataType for f in cached.schema.fields)
-                == want_types
-            ):
-                _MEMO_CACHE.move_to_end(mkey)
-                return cached
-            _memo_drop(mkey)
+    # INPUT-keyed session memo (r13): the codebook training runs a
+    # sample collect + numpy Lloyd and the query chunking runs
+    # toLocalIterator jobs at plan-BUILD time, so an output-keyed
+    # memo() would still pay them per call. The hit check compares
+    # types, not just names: query_id carries the CORPUS id type (the
+    # rerank join keeps the candidate side's column).
+    slot = Slot(
+        f"pq:{k}:{m}:{n_cents}:{n_iter}:{rerank_factor}"
+        f":{train_sample}:{q_batch}:{round_to}:{id_col}",
+        vecs, qplan,
+    )
+    id_type = vecs.schema[id_col].dataType
+    want = [("query_id", id_type), (id_col, id_type),
+            ("cos_sim", T.DoubleType()), ("rank", T.IntegerType())]
+    hit = slot.get(lambda cached: [
+        (f.name, f.dataType) for f in cached.schema.fields] == want)
+    if hit is not None:
+        return hit
     sample = (
         vecs.withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
@@ -1006,12 +835,7 @@ def pq_ann(
     out = rer.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-    if mkey is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_store(sess, mkey, out)
-    return out
+    return slot.put(out)
 
 
 def kmeans_cluster(
@@ -1047,32 +871,13 @@ def kmeans_cluster(
     # INPUT-keyed session memo (r13): the Lloyd loop runs collect()
     # jobs at plan-BUILD time (seeds + one centroid pull per round),
     # so the output-keyed memo() would still pay them on every call.
-    # Key on the input plan + params BEFORE iterating; the fixed run
-    # is shared by cluster_kmeans_fixed, embedding_cluster_purity and
-    # pipeline_semdedup. Hit-time guard: live owning session + the
-    # exact output column triple (a 32-bit collision must recompute).
-    sess = corpus.sparkSession
-    try:
-        mkey = (
-            id(sess),
-            f"kmeans:{k}:{n_iter}:{round_to}:{id_col}",
-            vecs.semanticHash(),
-            _files_tag(vecs),
-        )
-    except Exception:
-        mkey = None
-    if mkey is not None:
-        hit = _MEMO_CACHE.get(mkey)
-        if hit is not None:
-            owner, cached = hit
-            if (
-                owner is sess
-                and _session_live(sess)
-                and cached.columns == [id_col, "cluster", "cos_sim"]
-            ):
-                _MEMO_CACHE.move_to_end(mkey)
-                return cached
-            _memo_drop(mkey)
+    # The fixed run is shared by cluster_kmeans_fixed,
+    # embedding_cluster_purity and pipeline_semdedup.
+    slot = Slot(f"kmeans:{k}:{n_iter}:{round_to}:{id_col}", vecs)
+    hit = slot.get(
+        lambda cached: cached.columns == [id_col, "cluster", "cos_sim"])
+    if hit is not None:
+        return hit
     seed_rows = (
         vecs.withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
@@ -1134,12 +939,7 @@ def kmeans_cluster(
     out = with_assignment(vecs, cents).select(
         id_col, "cluster", F.round(F.col("cos_sim"), round_to).alias("cos_sim")
     )
-    if mkey is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_store(sess, mkey, out)
-    return out
+    return slot.put(out)
 
 
 def cluster_purity(
@@ -2417,18 +2217,10 @@ def kcenter_select(
             T.StructField("sel_d2", T.DoubleType(), True),
         ]
     )
-    memo_key = None
-    try:
-        memo_key = (
-            id(spark), f"kcenter:{k}:{id_col}:{vec_col}",
-            df.semanticHash(), _files_tag(df),
-        )
-    except Exception:
-        pass  # exotic plan that can't hash: compute uncached
-    if memo_key is not None:
-        cached = _memo_lookup(spark, memo_key, out_schema)
-        if cached is not None:
-            return cached
+    slot = Slot(f"kcenter:{k}:{id_col}:{vec_col}", df)
+    hit = slot.get(lambda cached: cached.schema == out_schema)
+    if hit is not None:
+        return hit
     v = df.select(
         F.col(id_col).alias("__id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
@@ -2471,13 +2263,12 @@ def kcenter_select(
     out = spark.createDataFrame(
         [(o, i, d) for o, i, d in picked], out_schema
     ).withColumn("sel_d2", F.round("sel_d2", 6))
-    if memo_key is not None:
+    if slot.key is not None:
         # collapse to a LocalRelation NOW (k rows) so the memoized
         # frame is detached from the greedy plan and its checkpoints,
         # and so the schema matches out_schema exactly on lookup
         out = spark.createDataFrame(out.collect(), out_schema)
-        _memo_store(spark, memo_key, out)
-    return out
+    return slot.put(out, persist=False)
 
 
 def kcenter_assign(

@@ -16,11 +16,10 @@ deterministic across engines, partitionings, and runs.
 
 from __future__ import annotations
 
-import collections
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fossil_spark.catalog import Slot, memo
 from fossil_spark.operators.text import shingles
 
 
@@ -345,15 +344,12 @@ def _signature_matrix(
         F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("shingle")))).alias(f"__mh{s}")
         for s in range(num_hashes)
     ]
-    # r13: session-memoize the matrix itself (ann.memo — persist-once,
-    # files-tagged, schema-checked). Four operators build the SAME
-    # matrix from the same corpus (lsh pairs, jaccard estimate, b-bit
-    # audit, unpivoted signatures); the pair-level memo shared only
-    # the first one's downstream. Each still pays its own shingle
+    # r13: session-memoize the matrix itself. Four operators build the
+    # SAME matrix from the same corpus (lsh pairs, jaccard estimate,
+    # b-bit audit, unpivoted signatures); the pair-level memo shared
+    # only the first one's downstream. Each still pays its own shingle
     # pipeline on a memo miss; on a hit the corpus-scale shuffle runs
     # once per session instead of once per key.
-    from fossil_spark.operators.ann import memo
-
     return memo(
         sh.groupBy(id_col).agg(*aggs),
         tag=f"mh_matrix:{id_col}:{num_hashes}:{shingle_n}:{text_col}",
@@ -415,17 +411,10 @@ def minhash_lsh_pairs(
     this, the standard production LSH practice."""
     sigs = _signature_matrix(df, text_col, id_col, num_hashes, shingle_n)
     pairs = _pairs_from_sigs(sigs, id_col, num_hashes, rows_per_band)
-    # Session memo (the ANN truth-catalog pattern, ann.memo): the
-    # near-dup pair graph is the shared substrate of ~15 downstream
-    # operators (graph_*, dedup audits, split_leakage, label prop) —
-    # each used to re-run the whole shingle+signature+bucket pipeline
-    # from the scan. First caller materializes, later callers in the
-    # same session read the persisted table; keyed on the input plan's
-    # semanticHash + leaf-file snapshot, schema-checked on hit, exact
-    # same rows (deterministic pipeline). Falls back to the raw plan
-    # when the plan can't hash.
-    from fossil_spark.operators.ann import memo
-
+    # Session memo: the near-dup pair graph is the shared substrate of
+    # ~15 downstream operators (graph_*, dedup audits, split_leakage,
+    # label prop) — each used to re-run the whole shingle+signature+
+    # bucket pipeline from the scan.
     return memo(
         pairs,
         tag=f"mh_pairs:{id_col}:{num_hashes}:{rows_per_band}:{shingle_n}",
@@ -840,90 +829,19 @@ def lsh_diagnosis(
     )
 
 
-# --- shared component catalog -------------------------------------------
-#
-# Every post-dedup readout (representative selection, per-source rates,
-# method comparison, savings pricing) consumes the SAME near-dup
-# component table. A production curation run materializes that table
-# once and joins everything against it; recomputing the LSH + iterative
-# label-propagation pipeline per readout multiplies the most expensive
-# shuffle in the whole corpus pass. This memo is that materialization:
-# session-scoped, keyed by the input plan's semantic hash, persisted
-# MEMORY_AND_DISK (the table is tiny — only docs that appear in a
-# near-dup pair). Callers that need non-default LSH parameters bypass
-# the cache by composing the primitives directly.
-#
-# The cache is capped (LRU); entries hold the owning session directly
-# (the cached DataFrame already pins it, so a weakref could never die
-# — r12 ADVICE on the ann.py twin) and a hit is honored only while
-# that session is live. The key includes a snapshot of the plan's
-# input files (path, mtime, size — plan_files_tag), so rewriting
-# parquet behind a previously-seen plan misses and recomputes instead
-# of serving stale components. Evicted/invalidated entries are
-# unpersisted; stopped-session entries are swept on the next insert.
-# neardup_components_invalidate() remains for exotic cases (in-place
-# rewrites that preserve every file's mtime and size).
-_COMPONENT_CACHE: collections.OrderedDict = collections.OrderedDict()
-_COMPONENT_CACHE_MAX = 8
-
-
-def _cache_drop(key) -> None:
-    entry = _COMPONENT_CACHE.pop(key, None)
-    if entry is not None:
-        try:
-            entry[1].unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to free
-
-
-def neardup_components_invalidate() -> None:
-    """Unpersist and drop every cached component table (use after
-    rewriting the files behind a previously-seen plan)."""
-    for key in list(_COMPONENT_CACHE):
-        _cache_drop(key)
-
-
 def neardup_components(docs: DataFrame) -> DataFrame:
     """Near-dup component table for `docs` under the default MinHash
     LSH parameters: connected_components(minhash_lsh_pairs(docs)),
-    computed once per session per input plan and persisted. Returns
-    (doc_id, component) for every doc in at least one near-dup pair."""
-    from pyspark import StorageLevel
-
-    from fossil_spark.operators import plan_files_tag, session_live
-
-    sess = docs.sparkSession
-    try:
-        key = (id(sess), docs.semanticHash(), plan_files_tag(docs))
-    except Exception:  # exotic plan that can't hash: just recompute
-        return connected_components(minhash_lsh_pairs(docs))
-    hit = _COMPONENT_CACHE.get(key)
+    computed once per session per input plan and kept in the session
+    catalog (every post-dedup readout consumes the same table; callers
+    that need non-default LSH parameters compose the primitives
+    directly). Returns (doc_id, component) for every doc in at least
+    one near-dup pair."""
+    slot = Slot("neardup_components", docs)
+    hit = slot.get()
     if hit is not None:
-        owner, comp = hit
-        if owner is sess and session_live(sess):
-            _COMPONENT_CACHE.move_to_end(key)
-            return comp
-        _cache_drop(key)
-    for stale in [k for k, (s, _) in _COMPONENT_CACHE.items()
-                  if not session_live(s)]:
-        _cache_drop(stale)
-    comp = connected_components(minhash_lsh_pairs(docs)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # size-aware admission (r13 verdict #3, shared with ann._memo_store):
-    # never pin a corpus-scale table for the whole session
-    from fossil_spark.operators.ann import _memo_admit
-
-    if not _memo_admit(comp):
-        try:
-            comp.unpersist()
-        except Exception:
-            pass
-        return comp
-    while len(_COMPONENT_CACHE) >= _COMPONENT_CACHE_MAX:
-        _cache_drop(next(iter(_COMPONENT_CACHE)))
-    _COMPONENT_CACHE[key] = (sess, comp)
-    return comp
+        return hit
+    return slot.put(connected_components(minhash_lsh_pairs(docs)))
 
 
 def simhash(

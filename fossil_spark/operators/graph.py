@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from fossil_spark.catalog import Slot
+
 
 def _symmetric_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     # explode, NOT union-of-two-selects: a union re-executes the whole
@@ -230,38 +232,15 @@ def label_propagation(
     from fossil_spark.operators import fixed_rounds_guard
 
     fixed_rounds_guard("label_propagation", n_rounds, max_rounds)
-    # INPUT-keyed session memo (r13, the kmeans_cluster precedent):
-    # each round's lazy localCheckpoint materializes under AQE at
-    # build time, so graph_modularity re-paid the full 3-round
-    # propagation graph_label_prop had just run (~2.6 s warm).
-    # Keyed on both input plans + params before the loop; hit honored
-    # only for the live owning session with the exact output columns.
-    from fossil_spark.operators.ann import (
-        _MEMO_CACHE, _files_tag, _memo_drop, _memo_store, _session_live,
-    )
-
-    sess = pairs.sparkSession
-    try:
-        mkey = (
-            id(sess),
-            f"labelprop:{n_rounds}:{a_col}:{b_col}",
-            (pairs.semanticHash(), seeds.semanticHash()),
-            _files_tag(pairs) + _files_tag(seeds),
-        )
-    except Exception:
-        mkey = None
-    if mkey is not None:
-        hit = _MEMO_CACHE.get(mkey)
-        if hit is not None:
-            owner, cached = hit
-            if (
-                owner is sess
-                and _session_live(sess)
-                and cached.columns == ["doc_id", "label", "is_seed"]
-            ):
-                _MEMO_CACHE.move_to_end(mkey)
-                return cached
-            _memo_drop(mkey)
+    # INPUT-keyed session memo (r13): each round's lazy
+    # localCheckpoint materializes under AQE at build time, so
+    # graph_modularity re-paid the full 3-round propagation
+    # graph_label_prop had just run (~2.6 s warm).
+    slot = Slot(f"labelprop:{n_rounds}:{a_col}:{b_col}", pairs, seeds)
+    hit = slot.get(
+        lambda cached: cached.columns == ["doc_id", "label", "is_seed"])
+    if hit is not None:
+        return hit
     edges = _symmetric_edges(pairs, a_col, b_col).localCheckpoint(eager=False)
     from pyspark.sql import Window
 
@@ -302,13 +281,8 @@ def label_propagation(
             )
             .localCheckpoint(eager=False)
         )
-    out = labels.select(F.col("id").alias("doc_id"), "label", "is_seed")
-    if mkey is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_store(sess, mkey, out)
-    return out
+    return slot.put(
+        labels.select(F.col("id").alias("doc_id"), "label", "is_seed"))
 
 
 def kcore(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fossil_spark.catalog import Slot
 from fossil_spark.operators.timeseries import round6_half_up
 
 # Small, fixed stopword families for the language-ID heuristic.
@@ -1642,52 +1643,20 @@ def char_entropy(
     )
 
 
-# INPUT-keyed session memo for the BPE learning chain (r13): four
-# registry keys (bpe_train, bpe_encode, bpe_vocab_coverage,
-# tokenizer_fertility) learn the SAME merge table from the same
-# corpus, and the chain's n_merges localCheckpoint rounds plus the
-# per-round lambda trees cost ~2 s of plan-build each. Keyed on the
-# input plan + params (the kmeans_cluster precedent in ann.py):
-# live-owning-session only, files-snapshot staleness tag, and a
-# hit-time shape check so a 32-bit semanticHash collision recomputes
-# instead of serving the wrong table. Session-scoped — dies with the
-# session, nothing persists across bench/oracle runs.
-_BPE_CHAIN_MEMO: dict = {}
-_BPE_CHAIN_MEMO_MAX = 8
-
-
-def bpe_chain_invalidate() -> None:
-    """Drop every memoized BPE merge chain (the bench clears all
-    session memos before each timed run — r13 verdict #1; the chain's
-    localCheckpoint RDDs are released by the ContextCleaner once the
-    Python references go)."""
-    _BPE_CHAIN_MEMO.clear()
-
-
 def _bpe_chain(df: DataFrame, n_merges: int, text_col: str):
     """Shared BPE learning chain: returns (list of 1-row best-pair
-    DataFrames, final word->symbols DataFrame). See bpe_train."""
-    from fossil_spark.operators import plan_files_tag, session_live
+    DataFrames, final word->symbols DataFrame). See bpe_train.
 
-    sess = df.sparkSession
-    try:
-        mkey = (
-            id(sess), f"bpe:{n_merges}:{text_col}",
-            df.semanticHash(), plan_files_tag(df),
-        )
-    except Exception:
-        mkey = None
-    if mkey is not None:
-        hit = _BPE_CHAIN_MEMO.get(mkey)
-        if hit is not None:
-            owner, hbests, hsyms = hit
-            if (
-                owner is sess and session_live(sess)
-                and len(hbests) == n_merges
-                and hsyms.columns == ["word", "freq", "sym"]
-            ):
-                return list(hbests), hsyms
-            _BPE_CHAIN_MEMO.pop(mkey, None)
+    Memoized on the input plan + params (r13): four registry keys
+    (bpe_train, bpe_encode, bpe_vocab_coverage, tokenizer_fertility)
+    learn the SAME merge table from the same corpus, and the chain's
+    n_merges localCheckpoint rounds plus the per-round lambda trees
+    cost ~2 s of plan-build each."""
+    slot = Slot(f"bpe:{n_merges}:{text_col}", df)
+    hit = slot.get(lambda cached: len(cached[0]) == n_merges
+                   and cached[1].columns == ["word", "freq", "sym"])
+    if hit is not None:
+        return list(hit[0]), hit[1]
     words = (
         df.select(F.explode(tokens(F.col(text_col))).alias("word"))
         # byte == char guard: train on printable-ASCII words only, so
@@ -1750,15 +1719,7 @@ def _bpe_chain(df: DataFrame, n_merges: int, text_col: str):
             .select("word", "freq", merged_sym.alias("sym"))
             .localCheckpoint(eager=False)  # cut lineage per round
         )
-    if mkey is not None:
-        for stale in [
-            k for k, entry in _BPE_CHAIN_MEMO.items()
-            if not session_live(entry[0])
-        ]:
-            _BPE_CHAIN_MEMO.pop(stale, None)
-        while len(_BPE_CHAIN_MEMO) >= _BPE_CHAIN_MEMO_MAX:
-            _BPE_CHAIN_MEMO.pop(next(iter(_BPE_CHAIN_MEMO)))
-        _BPE_CHAIN_MEMO[mkey] = (sess, tuple(bests), syms)
+    slot.put((tuple(bests), syms), persist=False)
     return bests, syms
 
 

@@ -1923,11 +1923,10 @@ def theil_sen_trend(
             "percentile(__v - sen_slope_per_sec * CAST(__t AS DOUBLE), 0.5)"
         ).alias("intercept"),
     )
-    # Session memo of the fitted trend table (the ann.memo kcenter
-    # precedent): capacity_eta composes the EXACT trend ts_trend_robust
-    # just fitted — one O(buckets²) fit per session instead of one per
-    # consumer. Rows-per-key output, dies with the session.
-    from fossil_spark.operators.ann import memo
+    # Session memo of the fitted trend table: capacity_eta composes the
+    # EXACT trend ts_trend_robust just fitted — one O(buckets²) fit
+    # per session instead of one per consumer.
+    from fossil_spark.catalog import memo
 
     out = memo(out, tag="theil_sen")
     return out.select(

@@ -15,17 +15,6 @@ sys.path.insert(0, REPO)
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def clear_memos() -> None:
-    from fossil_spark.operators.ann import ann_memo_invalidate
-    from fossil_spark.operators.dedup import neardup_components_invalidate
-
-    ann_memo_invalidate()
-    neardup_components_invalidate()
-    from fossil_spark.operators.text import bpe_chain_invalidate
-
-    bpe_chain_invalidate()
-
-
 def main() -> int:
     keys = sys.argv[1:]
     import __spark_entry__ as entry
@@ -42,14 +31,14 @@ def main() -> int:
 
     print(f"{'key':32s} {'cold1':>7s} {'warm2':>7s} {'cold2':>7s}")
     for key in keys:
-        clear_memos()
+        bench.clear_session_memos()
         t0 = time.perf_counter()
         bench.force(qs[key](spark, sf_dir))
         c1 = time.perf_counter() - t0
         t0 = time.perf_counter()
         bench.force(qs[key](spark, sf_dir))
         w2 = time.perf_counter() - t0
-        clear_memos()
+        bench.clear_session_memos()
         t0 = time.perf_counter()
         bench.force(qs[key](spark, sf_dir))
         c2 = time.perf_counter() - t0

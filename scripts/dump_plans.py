@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for named driver queries into
-plans/r13/<key>_<suffix>.txt (the optimization-round evidence files).
+plans/<round>/<key>_<suffix>.txt (the optimization-round evidence
+files).
 
-Usage: python scripts/dump_plans_r13.py <before|after> key [key ...]
-       python scripts/dump_plans_r13.py <before|after> --all-bench
+Usage: python scripts/dump_plans.py <round> <before|after> key [key ...]
+       python scripts/dump_plans.py <round> <before|after> --all-bench
 """
 
 from __future__ import annotations
@@ -20,20 +21,20 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    suffix = sys.argv[1]
-    keys = sys.argv[2:]
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    keys = sys.argv[3:]
 
     import __spark_entry__ as entry
     from fossil_spark.session import get_spark
 
-    spark = get_spark("plan-dump-r13")
+    spark = get_spark(f"plan-dump-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     if keys == ["--all-bench"]:
         import bench
         keys = [k for k in bench.HEAVY_ISOLATED if k in qs]
 
-    out_dir = os.path.join(REPO, "plans", "r13")
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for key in keys:
         try:

@@ -2,9 +2,10 @@
 """Per-key phase profile: split a driver query's wall time into
 (a) DataFrame construction (Python + analysis), (b) planning
 (explain cost = Catalyst optimize + physical planning), and
-(c) execution (noop sink), min-of-N. Isolates where an sf0.1 key's
-seconds actually go — tiny-data keys are often planner/overhead-bound,
-which changes what's worth optimizing.
+(c) execution (noop sink), min-of-N, with the session result catalog
+emptied before every run so each reading is memo-cold. Isolates where
+an sf0.1 key's seconds actually go — tiny-data keys are often
+planner/overhead-bound, which changes what's worth optimizing.
 
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/profile_keys.py key [key ...]
 """
@@ -47,6 +48,7 @@ def main() -> int:
         try:
             b_best = p_best = e_best = float("inf")
             for _ in range(RUNS):
+                bench.clear_session_memos()
                 t0 = time.perf_counter()
                 df = qs[key](spark, sf_dir)
                 t1 = time.perf_counter()

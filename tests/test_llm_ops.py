@@ -2357,25 +2357,6 @@ def test_bq_recall_rejects_dim_past_one_word(spark):
         ann.bq_recall(df, df, k=1, dim=0)
 
 
-def test_neardup_component_cache_lru_and_invalidate(spark):
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
-    dedup.neardup_components_invalidate()
-    c1 = dedup.neardup_components(docs)
-    assert len(dedup._COMPONENT_CACHE) == 1
-    # same plan -> same cached DataFrame object, no duplicate entry
-    assert dedup.neardup_components(docs) is c1
-    assert len(dedup._COMPONENT_CACHE) == 1
-    # distinct plans evict LRU-first at the cap
-    for i in range(dedup._COMPONENT_CACHE_MAX):
-        dedup.neardup_components(docs.filter(F.col("doc_id") > i))
-    assert len(dedup._COMPONENT_CACHE) == dedup._COMPONENT_CACHE_MAX
-    assert all(
-        owner is spark for owner, _ in dedup._COMPONENT_CACHE.values()
-    )
-    dedup.neardup_components_invalidate()
-    assert len(dedup._COMPONENT_CACHE) == 0
-
-
 def test_source_health_planted(spark):
     from fossil_spark.pipelines import source_health
 

@@ -297,13 +297,19 @@ def test_ann_memo_and_truth_catalog_invariants(spark):
     )
     q = emb.filter("vec_id < 3")
 
-    ann.ann_memo_invalidate()
+    from collections import Counter
+
+    from fossil_spark import catalog
+
+    catalog.invalidate_all()
+    before = catalog.COUNTS.copy()
     t5 = ann.topk_truth(emb, q, k=5)
     t5_again = ann.topk_truth(emb, q, k=5)
     # the underlying memo entry is shared (one materialization);
     # k=10 reads the same persisted table unfiltered
     t10 = ann.topk_truth(emb, q, k=10)
-    assert len(ann._MEMO_CACHE) == 1
+    assert catalog.COUNTS - before == Counter(miss=1, hit=2)
+    assert catalog.size() == 1
     got5 = sorted(map(tuple, t5.collect()))
     got5_again = sorted(map(tuple, t5_again.collect()))
     assert got5 == got5_again
@@ -316,13 +322,18 @@ def test_ann_memo_and_truth_catalog_invariants(spark):
 
     # a semantically DIFFERENT query set must not share the entry
     q2 = emb.filter("vec_id < 4")
+    before = catalog.COUNTS.copy()
     ann.topk_truth(emb, q2, k=5).collect()
-    assert len(ann._MEMO_CACHE) == 2
+    assert catalog.COUNTS - before == Counter(miss=1)
+    assert catalog.size() == 2
 
     # invalidate unpersists and clears every entry
-    ann.ann_memo_invalidate()
-    assert len(ann._MEMO_CACHE) == 0
+    persisted = ann.topk_truth(emb, q, k=10)
+    assert persisted.is_cached
+    catalog.invalidate_all()
+    assert catalog.size() == 0
+    assert persisted.storageLevel.useMemory is False
     # and the catalog rebuilds cleanly afterwards
     assert sorted(map(tuple, ann.topk_truth(emb, q, k=5).collect())) \
         == got5
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()

@@ -1,10 +1,13 @@
 """Round-13 regression tests: memo staleness (files-tag keys), the
 stopped-session sweep, and the new operators of this round."""
 
+from collections import Counter
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
+
+from fossil_spark import catalog
 
 
 # --------------------------------------------------------------------------
@@ -24,12 +27,12 @@ def test_ann_memo_files_tag_staleness(spark, tmp_path):
     """topk_truth called on the same plan before and after the parquet
     behind it is rewritten: the files-tag component of the memo key
     must force a rebuild — the old plan-only key served stale truth
-    until ann_memo_invalidate() was called by hand."""
+    until the memo was invalidated by hand."""
     from fossil_spark.operators import ann
 
     path = str(tmp_path / "emb.parquet")
     _write_emb(spark, path, scale=1)
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
     def truth_ids():
         emb = spark.read.parquet(path)
@@ -40,9 +43,10 @@ def test_ann_memo_files_tag_staleness(spark, tmp_path):
         )
 
     first = truth_ids()
-    # same files, same plan: the second call must HIT (one entry)
+    # same files, same plan: the second call must HIT
+    before = catalog.COUNTS.copy()
     assert truth_ids() == first
-    n_before = len(ann._MEMO_CACHE)
+    assert catalog.COUNTS - before == Counter(hit=1)
 
     # rewrite the corpus: vec 7's neighborhood flips because every
     # vector is scaled but vec-id identity stays; cosine is scale
@@ -53,17 +57,18 @@ def test_ann_memo_files_tag_staleness(spark, tmp_path):
         "vec_id long, embedding array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
+    before = catalog.COUNTS.copy()
     fresh = truth_ids()
-    # a fresh entry was created (no stale serve), and the result is
-    # the true brute-force answer on the NEW files
-    assert len(ann._MEMO_CACHE) > n_before
+    # a MISS (no stale serve), and the result is the true brute-force
+    # answer on the NEW files
+    assert catalog.COUNTS - before == Counter(miss=1)
     emb2 = spark.read.parquet(path)
     direct = sorted(
         r["vec_id"]
         for r in ann.cosine_topk(emb2, emb2.filter("vec_id = 7"), k=5).collect()
     )
     assert fresh == direct
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 def test_dedup_component_cache_files_tag_staleness(spark, tmp_path):
@@ -78,11 +83,13 @@ def test_dedup_component_cache_files_tag_staleness(spark, tmp_path):
          (3, "totally different words here nothing shared at all")],
         "doc_id long, text string",
     ).coalesce(1).write.mode("overwrite").parquet(path)
-    dedup.neardup_components_invalidate()
+    catalog.invalidate_all()
 
     comp1 = dedup.neardup_components(spark.read.parquet(path))
     assert {r["doc_id"] for r in comp1.collect()} == {1, 2}
-    n_before = len(dedup._COMPONENT_CACHE)
+    before = catalog.COUNTS.copy()
+    assert dedup.neardup_components(spark.read.parquet(path)) is comp1
+    assert catalog.COUNTS - before == Counter(hit=1)
 
     # rewrite: now 2 and 3 are the near-dup pair
     spark.createDataFrame(
@@ -92,10 +99,12 @@ def test_dedup_component_cache_files_tag_staleness(spark, tmp_path):
         "doc_id long, text string",
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
+    before = catalog.COUNTS.copy()
     comp2 = dedup.neardup_components(spark.read.parquet(path))
     assert {r["doc_id"] for r in comp2.collect()} == {2, 3}
-    assert len(dedup._COMPONENT_CACHE) > n_before
-    dedup.neardup_components_invalidate()
+    assert catalog.COUNTS["miss"] > before["miss"]
+    assert catalog.COUNTS["hit"] == before["hit"]
+    catalog.invalidate_all()
 
 
 def test_memo_sweeps_stopped_session_entries(spark):
@@ -111,23 +120,25 @@ def test_memo_sweeps_stopped_session_entries(spark):
         sparkContext = _DeadContext()
 
     class _Unpersistable:
+        is_cached = True
         unpersisted = False
 
         def unpersist(self):
             self.unpersisted = True
 
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
     dead_df = _Unpersistable()
-    ann._MEMO_CACHE[("dead", "t", 0, "tag")] = (_DeadSession(), dead_df)
+    catalog._ENTRIES[("dead", "t", 0, "tag")] = (_DeadSession(), dead_df)
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(5)],
         "vec_id long, embedding array<double>",
     )
     ann.topk_truth(emb, emb.filter("vec_id = 0"), k=3).collect()
-    assert ("dead", "t", 0, "tag") not in ann._MEMO_CACHE
+    assert ("dead", "t", 0, "tag") not in catalog._ENTRIES
     assert dead_df.unpersisted
-    ann.ann_memo_invalidate()
+    assert catalog.size() == 1  # the live entry just stored
+    catalog.invalidate_all()
 
 
 def test_bucketed_events_content_tag_and_supersede_sweep(spark, tmp_path):
@@ -183,18 +194,19 @@ def test_memo_schema_mismatch_falls_through(spark):
     key memo() would compute."""
     from fossil_spark.operators import ann
 
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(5)],
         "vec_id long, embedding array<double>",
     )
     plan = ann.cosine_topk(emb, emb.filter("vec_id = 0"), k=3)
-    key = (id(spark), "", plan.semanticHash(), ann._files_tag(plan))
     wrong = spark.createDataFrame([(1,)], "other_col long")
-    ann._MEMO_CACHE[key] = (spark, wrong)
-    served = ann.memo(plan)
+    catalog._ENTRIES[catalog.Slot("memo:", plan).key] = (spark, wrong)
+    before = catalog.COUNTS.copy()
+    served = catalog.memo(plan)
     assert served.schema == plan.schema  # not the planted frame
-    ann.ann_memo_invalidate()
+    assert catalog.COUNTS - before == Counter(miss=1)
+    catalog.invalidate_all()
 
 
 def test_jaccard_truncation_self_describing(spark):
@@ -476,7 +488,7 @@ def test_minhash_pairs_session_memo(spark, tmp_path):
     plan, files): the second call returns identical rows without
     rebuilding, and rewriting the parquet behind the same plan misses
     the memo and reflects the new corpus."""
-    from fossil_spark.operators import ann, dedup
+    from fossil_spark.operators import dedup
 
     path = str(tmp_path / "docs.parquet")
     base = "the quick brown fox jumps over the lazy dog again and again "
@@ -485,7 +497,7 @@ def test_minhash_pairs_session_memo(spark, tmp_path):
         [base + "alpha", base + "alpha", base + "beta beta beta beta",
          "completely different text with nothing shared at all here"],
     )
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
     def pairs_rows():
         docs = spark.read.parquet(path)
@@ -496,11 +508,12 @@ def test_minhash_pairs_session_memo(spark, tmp_path):
 
     first = pairs_rows()
     assert (0, 1) in first  # the near-identical pair is found
-    n_entries = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("mh_pairs:") for k in ann._MEMO_CACHE)
-    # same session, same files: HIT — no new entry
+    # same session, same files: the pair table HITs (as does the
+    # signature matrix under it); nothing is recomputed
+    before = catalog.COUNTS.copy()
     assert pairs_rows() == first
-    assert len(ann._MEMO_CACHE) == n_entries
+    assert catalog.COUNTS["hit"] > before["hit"]
+    assert catalog.COUNTS["miss"] == before["miss"]
 
     # rewrite the corpus behind the same plan: MISS + fresh pairs
     _write_docs(
@@ -510,7 +523,7 @@ def test_minhash_pairs_session_memo(spark, tmp_path):
     )
     fresh = pairs_rows()
     assert (0, 2) in fresh  # the NEW near-identical pair
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 def test_theil_sen_sort_median_matches_percentile(spark):
@@ -524,7 +537,7 @@ def test_theil_sen_sort_median_matches_percentile(spark):
 
     import pyspark.sql.functions as F
 
-    from fossil_spark.operators import ann, timeseries as ts
+    from fossil_spark.operators import timeseries as ts
 
     base = datetime(2024, 3, 1)
     rows = []
@@ -541,7 +554,7 @@ def test_theil_sen_sort_median_matches_percentile(spark):
     df = spark.createDataFrame(
         rows, "event_id long, event_type string, ts timestamp, value double"
     )
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
     got = {
         r["event_type"]: r
         for r in ts.theil_sen_trend(
@@ -598,7 +611,7 @@ def test_theil_sen_sort_median_matches_percentile(spark):
             "d", round(ref[k]["slope"], 15)
         ), (k, have, want)
         assert got[k]["mk_s"] == ref[k]["mk_s"]
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 def test_kmeans_input_keyed_session_memo(spark, tmp_path):
@@ -620,7 +633,7 @@ def test_kmeans_input_keyed_session_memo(spark, tmp_path):
         ).write.mode("overwrite").parquet(path)
 
     write([[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.1, 0.9]])
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
     def assign():
         emb = spark.read.parquet(path)
@@ -630,15 +643,16 @@ def test_kmeans_input_keyed_session_memo(spark, tmp_path):
         )
 
     first = assign()
-    n = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("kmeans:") for k in ann._MEMO_CACHE)
+    before = catalog.COUNTS.copy()
     assert assign() == first          # same session, same files: HIT
-    assert len(ann._MEMO_CACHE) == n  # no new entry
+    assert catalog.COUNTS - before == Counter(hit=1)
 
-    # different params -> different key, coexisting entry
+    # different params -> different key (MISS), coexisting entry
     emb = spark.read.parquet(path)
+    before = catalog.COUNTS.copy()
     ann.kmeans_cluster(emb, k=2, n_iter=2).collect()
-    assert len(ann._MEMO_CACHE) == n + 1
+    assert assign() == first
+    assert catalog.COUNTS - before == Counter(miss=1, hit=1)
 
     # rewrite behind the same plan: MISS + fresh fit on the new data
     write([[0.0, 1.0], [1.0, 0.0], [0.05, 0.95], [0.95, 0.05]])
@@ -647,7 +661,7 @@ def test_kmeans_input_keyed_session_memo(spark, tmp_path):
     # vec 0 and 2 now point the same way and must co-cluster
     d = dict(fresh)
     assert d[0] == d[2] and d[1] == d[3] and d[0] != d[1]
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 def test_bpe_chain_input_keyed_session_memo(spark, tmp_path):
@@ -666,7 +680,7 @@ def test_bpe_chain_input_keyed_session_memo(spark, tmp_path):
         ).write.mode("overwrite").parquet(path)
 
     write(["low lower lowest", "low low newer", "wider new newer"])
-    text._BPE_CHAIN_MEMO.clear()
+    catalog.invalidate_all()
 
     def merges():
         docs = spark.read.parquet(path)
@@ -676,24 +690,24 @@ def test_bpe_chain_input_keyed_session_memo(spark, tmp_path):
         ]
 
     first = merges()
-    n = len(text._BPE_CHAIN_MEMO)
-    assert n == 1 and any(
-        k[1].startswith("bpe:") for k in text._BPE_CHAIN_MEMO
-    )
+    assert catalog.size() == 1
+    before = catalog.COUNTS.copy()
     assert merges() == first              # same session, same files: HIT
-    assert len(text._BPE_CHAIN_MEMO) == n
+    assert catalog.COUNTS - before == Counter(hit=1)
 
-    # different n_merges -> different key, coexisting entry
+    # different n_merges -> different key (MISS), coexisting entry
     docs = spark.read.parquet(path)
+    before = catalog.COUNTS.copy()
     text.bpe_train(docs, n_merges=2).collect()
-    assert len(text._BPE_CHAIN_MEMO) == n + 1
+    assert merges() == first
+    assert catalog.COUNTS - before == Counter(miss=1, hit=1)
 
     # rewrite behind the same plan: MISS + relearn on the new corpus
     write(["zz zz zzz", "zz zzz zzzz", "zzzz zz"])
     fresh = merges()
     assert fresh != first
     assert fresh[0][1:] == ("z", "z")  # 'zz' is the new top pair
-    text._BPE_CHAIN_MEMO.clear()
+    catalog.invalidate_all()
 
 
 def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
@@ -701,7 +715,7 @@ def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
     (pairs, seeds, params) input plans — graph_modularity reuses the
     table graph_label_prop just built instead of re-running the
     3-round propagation at plan-build time."""
-    from fossil_spark.operators import ann, graph
+    from fossil_spark.operators import graph
 
     pairs_path = str(tmp_path / "pairs.parquet")
     spark.createDataFrame(
@@ -710,7 +724,7 @@ def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
     seeds = spark.createDataFrame(
         [(1, "a"), (10, "b")], "doc_id long, label string"
     )
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
     def labels():
         pairs = spark.read.parquet(pairs_path)
@@ -725,16 +739,17 @@ def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
     assert dict((d, l) for d, l, _ in first) == {
         1: "a", 2: "a", 3: "a", 10: "b", 11: "b"
     }
-    n = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("labelprop:") for k in ann._MEMO_CACHE)
+    before = catalog.COUNTS.copy()
     assert labels() == first          # same session, same inputs: HIT
-    assert len(ann._MEMO_CACHE) == n  # no new entry
+    assert catalog.COUNTS - before == Counter(hit=1)
 
-    # different n_rounds -> different key
+    # different n_rounds -> different key (MISS), coexisting entry
     pairs = spark.read.parquet(pairs_path)
+    before = catalog.COUNTS.copy()
     graph.label_propagation(pairs, seeds, n_rounds=1).collect()
-    assert len(ann._MEMO_CACHE) == n + 1
-    ann.ann_memo_invalidate()
+    assert labels() == first
+    assert catalog.COUNTS - before == Counter(miss=1, hit=1)
+    catalog.invalidate_all()
 
 
 def test_pq_ann_input_keyed_session_memo(spark, tmp_path):
@@ -759,7 +774,7 @@ def test_pq_ann_input_keyed_session_memo(spark, tmp_path):
         [0.0, 1.0, 0.0, 0.0], [0.0, 0.9, 0.1, 0.0],
         [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0],
     ])
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
     def topk(n_iter=1):
         emb = spark.read.parquet(path)
@@ -775,14 +790,15 @@ def test_pq_ann_input_keyed_session_memo(spark, tmp_path):
     first = topk()
     # exact rerank: each query's nearest is its co-directional partner
     assert (0, 1, 1) in first and (1, 0, 1) in first
-    n = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("pq:") for k in ann._MEMO_CACHE)
+    before = catalog.COUNTS.copy()
     assert topk() == first            # same session, same files: HIT
-    assert len(ann._MEMO_CACHE) == n  # no new entry
+    assert catalog.COUNTS - before == Counter(hit=1)
 
-    # different params -> different key, coexisting entry
+    # different params -> different key (MISS), coexisting entry
+    before = catalog.COUNTS.copy()
     topk(n_iter=2)
-    assert len(ann._MEMO_CACHE) == n + 1
+    assert topk() == first
+    assert catalog.COUNTS - before == Counter(miss=1, hit=1)
 
     # rewrite behind the same plan: MISS + fresh train on the new data
     write([
@@ -792,7 +808,7 @@ def test_pq_ann_input_keyed_session_memo(spark, tmp_path):
     ])
     fresh = topk()
     assert (0, 1, 1) in fresh and (1, 0, 1) in fresh
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 def test_cosine_topk_engines_bit_identical(spark):

@@ -3,9 +3,12 @@ vector-hygiene Arrow cosine grid, LSH membership equivalence, and the
 join-free jaccard-estimate restructure."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+
+from fossil_spark import catalog
 
 
 # --------------------------------------------------------------------------
@@ -24,38 +27,39 @@ def _write_docs(spark, path: str, n: int = 40) -> None:
 
 
 def test_memo_size_cap_rejects_large_inputs(spark, tmp_path, monkeypatch):
-    from fossil_spark.operators import ann
-
     path = str(tmp_path / "docs.parquet")
     _write_docs(spark, path)
     df = spark.read.parquet(path).select("doc_id", F.length("text").alias("n"))
 
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
     monkeypatch.setenv("SPARK_GRAFT_MEMO_MAX_BYTES", "1")
-    out = ann.memo(df, tag="cap-test")
+    before = catalog.COUNTS.copy()
+    out = catalog.memo(df, tag="cap-test")
     # rejected: no cache entry, result not persisted, rows still right
-    assert len(ann._MEMO_CACHE) == 0
+    assert catalog.COUNTS - before == Counter(miss=1, reject=1)
+    assert catalog.size() == 0
     assert out.storageLevel.useMemory is False
     assert out.count() == 40
 
     monkeypatch.setenv("SPARK_GRAFT_MEMO_MAX_BYTES", str(8 * 1024**3))
-    out2 = ann.memo(df, tag="cap-test")
-    assert len(ann._MEMO_CACHE) == 1
+    out2 = catalog.memo(df, tag="cap-test")
+    assert catalog.size() == 1
     assert out2.count() == 40
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
-def test_memo_cap_unknown_size_admits(spark):
+def test_memo_cap_unknown_size_admits(spark, monkeypatch):
     """In-memory plans (no file leaves) have unknown size and must
     keep memoizing — the cap stops KNOWN-huge tables only."""
-    from fossil_spark.operators import ann, plan_input_bytes
-
     df = spark.createDataFrame([(1, 2.0)], "id long, v double")
-    assert plan_input_bytes(df) is None
-    ann.ann_memo_invalidate()
-    ann.memo(df, tag="mem-test")
-    assert len(ann._MEMO_CACHE) == 1
-    ann.ann_memo_invalidate()
+    assert catalog.Slot("mem-test", df).nbytes is None
+    catalog.invalidate_all()
+    monkeypatch.setenv("SPARK_GRAFT_MEMO_MAX_BYTES", "1")
+    before = catalog.COUNTS.copy()
+    catalog.memo(df, tag="mem-test")
+    assert catalog.COUNTS - before == Counter(miss=1)
+    assert catalog.size() == 1
+    catalog.invalidate_all()
 
 
 # --------------------------------------------------------------------------
@@ -129,7 +133,7 @@ def test_cosine_topk_arrow_drops_null_and_ragged(spark):
 # --------------------------------------------------------------------------
 
 def test_lsh_membership_matches_pair_ids(spark, tmp_path):
-    from fossil_spark.operators import ann, dedup
+    from fossil_spark.operators import dedup
 
     path = str(tmp_path / "docs.parquet")
     rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(6)]
@@ -141,7 +145,7 @@ def test_lsh_membership_matches_pair_ids(spark, tmp_path):
     ).write.mode("overwrite").parquet(path)
     docs = spark.read.parquet(path)
 
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
     pairs = dedup.minhash_lsh_pairs(docs)
     want = sorted(
         set(r["doc_a"] for r in pairs.collect())
@@ -150,7 +154,7 @@ def test_lsh_membership_matches_pair_ids(spark, tmp_path):
     got = sorted(r["doc_id"] for r in dedup.lsh_membership(docs).collect())
     assert got == want
     assert len(got) >= 10  # the two planted dup families are members
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 # --------------------------------------------------------------------------
@@ -159,7 +163,7 @@ def test_lsh_membership_matches_pair_ids(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
-    from fossil_spark.operators import ann, dedup
+    from fossil_spark.operators import dedup
 
     path = str(tmp_path / "docs.parquet")
     rows = [(i, "shared boilerplate text block repeated verbatim") for i in range(5)]
@@ -169,7 +173,7 @@ def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
     ).write.mode("overwrite").parquet(path)
     docs = spark.read.parquet(path)
 
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
     est = dedup.minhash_jaccard_estimate(docs).collect()
     got = sorted((r["doc_a"], r["doc_b"], r["n_match"], r["jaccard_est"]) for r in est)
 
@@ -198,7 +202,7 @@ def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
     want = sorted((r["doc_a"], r["doc_b"], r["n_match"], r["jaccard_est"]) for r in ref)
     assert got == want
     assert len(got) > 0
-    ann.ann_memo_invalidate()
+    catalog.invalidate_all()
 
 
 # --------------------------------------------------------------------------
