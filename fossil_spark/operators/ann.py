@@ -687,27 +687,6 @@ def pq_ann(
     vecs = corpus.select(
         F.col(id_col), _unit(F.col(vec_col).cast("array<double>")).alias("__v")
     )
-    qplan = queries.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    # INPUT-keyed session memo (r13): the codebook training runs a
-    # sample collect + numpy Lloyd and the query chunking runs
-    # toLocalIterator jobs at plan-BUILD time, so an output-keyed
-    # memo() would still pay them per call. The hit check compares
-    # types, not just names: query_id carries the CORPUS id type (the
-    # rerank join keeps the candidate side's column).
-    slot = Slot(
-        f"pq:{k}:{m}:{n_cents}:{n_iter}:{rerank_factor}"
-        f":{train_sample}:{q_batch}:{round_to}:{id_col}",
-        vecs, qplan,
-    )
-    id_type = vecs.schema[id_col].dataType
-    want = [("query_id", id_type), (id_col, id_type),
-            ("cos_sim", T.DoubleType()), ("rank", T.IntegerType())]
-    hit = slot.get(lambda cached: [
-        (f.name, f.dataType) for f in cached.schema.fields] == want)
-    if hit is not None:
-        return hit
     sample = (
         vecs.withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
@@ -832,10 +811,9 @@ def pq_ann(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col(id_col)
     )
-    out = rer.withColumn("rank", F.row_number().over(w)).filter(
+    return rer.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-    return slot.put(out)
 
 
 def kmeans_cluster(

@@ -645,6 +645,10 @@ def connected_components(
     round-4 shape ran an eager-checkpoint job plus a count job (two
     driver round-trips per iteration).
 
+    Fails loudly instead of truncating: if the last of `max_iter`
+    rounds still changed a label, a component longer than the cap
+    would come back split, so it raises and names `max_iter`.
+
     This is the canonical 'pick one representative per duplicate
     cluster' step after LSH + verification."""
     # checkpoint the edge list: it is consumed EVERY round, and a lazy
@@ -679,6 +683,7 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
+    n_changed = 0
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
@@ -701,6 +706,11 @@ def connected_components(
         labels = updated.drop("__changed")
         if n_changed == 0:
             break
+    if n_changed:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; raise max_iter"
+        )
     return labels.select(F.col("node").alias("doc_id"), "component")
 
 

@@ -59,6 +59,23 @@ def _time_norm(df: DataFrame, *time_cols: str) -> DataFrame:
     return df
 
 
+def _per_key(df: DataFrame, by: list[str], order: list[str], fn,
+             schema) -> DataFrame:
+    """The one pandas boundary of the sequential per-key operators:
+    `fn` gets each `by` group (the whole frame as one group when `by`
+    is empty) stable-sorted by `order` with nulls last — the order
+    DuckDB's ORDER BY gives the oracles — with a fresh 0..n-1 index,
+    and returns that group's rows in `schema`, or None for none."""
+    import pandas as pd
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order, kind="mergesort", na_position="last")
+        out = fn(pdf.reset_index(drop=True))
+        return pd.DataFrame(columns=schema.names) if out is None else out
+
+    return df.groupBy(*by).applyInPandas(run, schema)
+
+
 # ---------------------------------------------------------------------------
 # resample / rollup
 # ---------------------------------------------------------------------------
@@ -877,9 +894,9 @@ def ewma(
     y[0] = x[0]; y[t] = alpha*x[t] + (1-alpha)*y[t-1].
 
     Inherently sequential per key, so it runs as one Arrow batch per
-    key group (applyInPandas) — parallel ACROSS keys, sequential
+    key group (_per_key) — parallel ACROSS keys, sequential
     within, which is the best possible shape for this recurrence.
-    Within-group order is (time, tiebreak) for determinism."""
+    Within-group order is (time, tiebreak), nulls last."""
     import pandas as pd
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -890,15 +907,10 @@ def ewma(
     out_schema = StructType(df.schema.fields + [StructField("ewma", DoubleType())])
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
         pdf["ewma"] = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
         return pdf
 
-    if not by:
-        return df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return df.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(df, by, sort_cols, per_key, out_schema)
 
 
 def holt_forecast(
@@ -918,7 +930,7 @@ def holt_forecast(
     series forecasts its own continuation exactly.
 
     Like ewma, the recurrence is inherently sequential per key, so it
-    runs as one Arrow batch per key group (applyInPandas) — parallel
+    runs as one Arrow batch per key group (_per_key) — parallel
     ACROSS keys, sequential within; the forecast fan-out is `horizon`
     rows per key, negligible against the input. Returns
     (*by, step, forecast, level, trend)."""
@@ -942,7 +954,6 @@ def holt_forecast(
     )
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
         x = pdf[value_col].to_numpy(dtype=float)
         lvl = x[0]
         trd = x[1] - x[0] if len(x) > 1 else 0.0
@@ -960,11 +971,7 @@ def holt_forecast(
             rows[c] = [pdf[c].iloc[0]] * horizon
         return pd.DataFrame(rows)[[f.name for f in out_schema.fields]]
 
-    if not by:
-        return df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return df.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(df, by, sort_cols, per_key, out_schema)
 
 
 def decompose_classical(
@@ -1116,7 +1123,6 @@ def holt_winters_forecast(
     )
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
         x = pdf[value_col].to_numpy(dtype=float)
         lvl, trd = x[0], 0.0
         s = [0.0] * m
@@ -1141,11 +1147,7 @@ def holt_winters_forecast(
             rows[c] = [pdf[c].iloc[0]] * horizon
         return pd.DataFrame(rows)[[f.name for f in out_schema.fields]]
 
-    if not by:
-        return df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return df.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(df, by, sort_cols, per_key, out_schema)
 
 
 def lttb(
@@ -1187,7 +1189,6 @@ def lttb(
     out_schema = df.schema
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
         n = len(pdf)
         if n <= n_out:
             return pdf
@@ -1224,11 +1225,7 @@ def lttb(
         keep.append(n - 1)
         return pdf.iloc[keep]
 
-    if not by:
-        return df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return df.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(df, by, sort_cols, per_key, out_schema)
 
 
 def anomaly_mad(
@@ -2023,7 +2020,7 @@ def greedy_sample(df: DataFrame, every: timedelta,
     datum, then skip until last_kept + Δ. This is an inherently
     sequential scan over the global time order — O(n) on one worker —
     so it exists only for bit-parity; fql's bucketed sample is the
-    scale path. Implemented as a single applyInPandas group (Arrow
+    scale path. Implemented as a single _per_key group (Arrow
     batch, not a driver collect)."""
     import logging
 
@@ -2040,7 +2037,6 @@ def greedy_sample(df: DataFrame, every: timedelta,
     schema = df.schema
 
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col, kind="mergesort")
         times = pdf[time_col].astype("int64")  # ns
         keep = []
         next_t = None
@@ -2050,11 +2046,7 @@ def greedy_sample(df: DataFrame, every: timedelta,
                 next_t = t + every_us * 1000
         return pdf.iloc[keep]
 
-    return (
-        df.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(lambda pdf: pick(pdf.drop(columns="__g")), schema)
-    )
+    return _per_key(df, [], [time_col], pick, schema)
 
 
 def drawdown(
@@ -2391,7 +2383,6 @@ def dtw_distance(
     big = 1e308
 
     def dp(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket", kind="mergesort")
         a = [float(x) for x in pdf["__a"]]
         b = [float(x) for x in pdf["__b"]]
         n = len(a)
@@ -2417,11 +2408,7 @@ def dtw_distance(
             }
         )
 
-    return (
-        bucketed.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(lambda pdf: dp(pdf.drop(columns="__g")), out_schema)
-    )
+    return _per_key(bucketed, [], ["bucket"], dp, out_schema)
 
 
 def time_weighted_avg(
@@ -2567,7 +2554,6 @@ def rolling_median(
     by: list[str] | None = None,
     value_col: str = "value",
     order_tiebreak: list[str] | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Exact rolling median per key over the trailing `window_rows`
     samples — the robust rolling baseline (a rolling MEAN chases the
@@ -2578,53 +2564,16 @@ def rolling_median(
     exact median is the middle order statistic — an element of the
     data, selected with pure rank arithmetic, NO interpolation kernel
     — so no engine pair can disagree by an ulp (the ts_psi_drift
-    lesson; same rule as [[ts_cadence]]'s rank quantiles). The frame
-    is materialized as a bounded collect_list + array_sort (25
-    doubles per row, map-side only, one sort per key, zero joins) —
-    O(rows x w log w) with w a small constant, scale-linear.
-
-    engine="auto" resolves to the Arrow rank-median engine
-    (_rolling_rank_arrow) for per-key double series — r14 A/B:
-    1.79 s hof vs 0.78 s arrow at sf0.1, rows identical (pure rank
-    selection on the same doubles; no interpolation, no sums);
-    "hof" keeps the pure-JVM window shape. Returns
+    lesson; same rule as [[ts_cadence]]'s rank quantiles). A frame
+    holding a null value is not full. The value type picks the engine
+    (_rolling_rank): numpy windows for doubles, a bounded
+    collect_list + array_sort window otherwise, same rows. Returns
     (*by, ts rows w/ value, rolling_median, deviation)."""
-    if window_rows % 2 == 0:
-        raise ValueError("window_rows must be odd for an exact median")
     by = by or []
-    df = _time_norm(df, time_col)
-    if _rank_window_engine(df, engine, by, value_col) == "arrow":
-        scored = _rolling_rank_arrow(
-            df, window_rows, time_col, by, value_col,
-            order_tiebreak or [], want_mad=False,
-        )
-        return scored.select(
-            *by, F.col(time_col), F.col(value_col),
-            F.col("__med").alias("rolling_median"),
-            (F.col(value_col) - F.col("__med")).alias("deviation"),
-        )
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(-(window_rows - 1), Window.currentRow)
-    )
-    frame = F.array_sort(F.collect_list(F.col(value_col)).over(w))
-    mid = window_rows // 2 + 1  # element_at is 1-based
-    s = df.select(
-        *by,
-        F.col(time_col),
-        F.col(value_col),
-        # try_element_at: short leading frames yield NULL instead of an
-        # ANSI out-of-bounds error; the full-frame filter drops them
-        F.try_element_at(frame, F.lit(mid)).alias("__med"),
-        F.size(frame).alias("__n"),
-        *[F.col(c) for c in (order_tiebreak or [])],
-    )
-    return s.filter(F.col("__n") == window_rows).select(
-        *by,
-        F.col(time_col),
-        F.col(value_col),
+    s = _rolling_rank(df, window_rows, time_col, by, value_col,
+                      order_tiebreak or [], want_mad=False)
+    return s.select(
+        *by, F.col(time_col), F.col(value_col),
         F.col("__med").alias("rolling_median"),
         (F.col(value_col) - F.col("__med")).alias("deviation"),
     )
@@ -3562,6 +3511,35 @@ def completeness(
     )
 
 
+def _rolling_rank(
+    df: DataFrame,
+    window_rows: int,
+    time_col: str,
+    by: list[str],
+    value_col: str,
+    order_tiebreak: list[str],
+    want_mad: bool,
+) -> DataFrame:
+    """Trailing-window exact rank medians (and optionally MADs) of
+    FULL odd frames over rows ordered by (time, tiebreak) with nulls
+    last; a frame holding a null value is not full. Emits the input's
+    (by, time, value, tiebreak) columns plus __med (+ __mad). The
+    value type picks the engine: doubles run the numpy windows of
+    _rolling_rank_arrow (r14 A/B at sf0.1: hampel 3.11 -> 0.85 s,
+    rolling_median 1.79 -> 0.78 s against the JVM windows); any other
+    type runs _rolling_rank_hof, which keeps that type (a float64
+    window would not). Both engines give the same rows."""
+    from pyspark.sql import types as T
+
+    if window_rows % 2 == 0:
+        raise ValueError("window_rows must be odd for exact medians")
+    df = _time_norm(df, time_col)
+    is_double = isinstance(df.schema[value_col].dataType, T.DoubleType)
+    engine = _rolling_rank_arrow if is_double else _rolling_rank_hof
+    return engine(df, window_rows, time_col, by, value_col,
+                  order_tiebreak, want_mad)
+
+
 def _rolling_rank_arrow(
     df: DataFrame,
     window_rows: int,
@@ -3571,28 +3549,22 @@ def _rolling_rank_arrow(
     order_tiebreak: list[str],
     want_mad: bool,
 ) -> DataFrame:
-    """Trailing-window exact rank medians (and optionally MADs) in
-    numpy behind ONE FlatMapGroupsInPandas boundary — the
+    """_rolling_rank in numpy behind the _per_key boundary — the
     matrix_profile engine precedent (guide §4.2). Bit-parity rule:
     the median is the middle element of the SORTED window and the
     MAD the middle element of the sorted |x - med| window — pure
     rank selection on the same float64 values the JVM holds, no
     interpolation, no summation — so np.sort vs array_sort select
-    the identical element (A/B: rows str-identical at sf0.01 AND
-    sf0.1 for both consumers). Requires DOUBLE values with no nulls
-    (collect_list skips nulls; a numpy window would carry NaN) —
-    callers guard before routing here. Emits the input columns plus
-    __med (+ __mad) for FULL frames only, exactly the hof path's
-    full-frame filter."""
+    the identical element, NaN last in both. Pandas reads a null
+    double as NaN, so a null flag rides along and every window
+    holding a null drops, as collect_list's short frame does."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
     w = window_rows
     mid = w // 2
-    cols = by + [time_col, value_col] + order_tiebreak
-    base = df.select(*cols)
+    base = df.select(*by, time_col, value_col, *order_tiebreak)
     out_fields = list(base.schema.fields) + [
         T.StructField("__med", T.DoubleType())
     ]
@@ -3600,46 +3572,70 @@ def _rolling_rank_arrow(
         out_fields.append(T.StructField("__mad", T.DoubleType()))
     out_schema = T.StructType(out_fields)
 
-    def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            [time_col] + order_tiebreak, kind="mergesort"
-        )
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        if len(v) < w:
-            out = pdf.iloc[:0].copy()
-            out["__med"] = np.array([], dtype=np.float64)
-            if want_mad:
-                out["__mad"] = np.array([], dtype=np.float64)
-            return out
-        sw = np.lib.stride_tricks.sliding_window_view(v, w)
+    def per_key(pdf):
+        if len(pdf) < w:
+            return None
+        view = np.lib.stride_tricks.sliding_window_view
+        full = ~view(pdf.pop("__null").to_numpy(), w).any(axis=1)
+        sw = view(pdf[value_col].to_numpy(dtype=np.float64), w)[full]
         med = np.sort(sw, axis=1)[:, mid]
-        out = pdf.iloc[w - 1:].copy()
+        out = pdf.iloc[w - 1:][full].copy()
         out["__med"] = med
         if want_mad:
             out["__mad"] = np.sort(np.abs(sw - med[:, None]), axis=1)[:, mid]
         return out
 
-    return base.groupBy(*by).applyInPandas(per_key, out_schema)
+    flagged = base.withColumn("__null", F.col(value_col).isNull())
+    return _per_key(flagged, by, [time_col] + order_tiebreak, per_key,
+                    out_schema)
 
 
-def _rank_window_engine(
-    df: DataFrame, engine: str, by: list[str], value_col: str
-) -> str:
-    """Resolve engine='auto' for the rolling rank-median operators:
-    the Arrow path needs per-key grouping and double values (its
-    float64 windows must hold the exact JVM doubles); anything else
-    keeps the proven JVM window shape."""
-    if engine not in ("auto", "hof", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine != "auto":
-        return engine
-    from pyspark.sql import types as T
+def _rolling_rank_hof(
+    df: DataFrame,
+    window_rows: int,
+    time_col: str,
+    by: list[str],
+    value_col: str,
+    order_tiebreak: list[str],
+    want_mad: bool,
+) -> DataFrame:
+    """_rolling_rank as JVM window expressions: one bounded
+    collect_list per row (it skips nulls, so a frame holding one is
+    short and drops), median/MAD as array expressions — zero joins,
+    one sort per key, the value type kept."""
+    cols = [*by, time_col, value_col, *order_tiebreak]
+    order = [F.col(c).asc_nulls_last() for c in [time_col, *order_tiebreak]]
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(*order)
+        .rowsBetween(-(window_rows - 1), Window.currentRow)
+    )
+    mid = window_rows // 2 + 1  # element_at is 1-based
+    s = df.select(
+        *cols, F.collect_list(F.col(value_col)).over(w).alias("__f")
+    ).filter(F.size("__f") == window_rows)
+    # CollapseProject re-inlines a projected expression into every
+    # downstream reference — inside the 25-element transform lambda
+    # that re-sorts the frame PER ELEMENT (the round-5 50x pitfall,
+    # measured 10x here). A current-row-frame window is a real plan
+    # barrier that materializes the value once per row AND reuses the
+    # existing (key, time) sort — no extra exchange.
+    w_row = Window.partitionBy(*by).orderBy(*order).rowsBetween(0, 0)
 
-    try:
-        is_double = isinstance(df.schema[value_col].dataType, T.DoubleType)
-    except Exception:
-        is_double = False
-    return "arrow" if (by and is_double) else "hof"
+    def once(col):
+        return F.last(col).over(w_row)
+
+    med = F.try_element_at(F.array_sort(F.col("__f")), F.lit(mid))
+    s = s.select(*cols, "__f", once(med).alias("__med"))
+    if not want_mad:
+        return s.drop("__f")
+    mad = F.try_element_at(
+        F.array_sort(
+            F.transform(F.col("__f"), lambda x: F.abs(x - F.col("__med")))
+        ),
+        F.lit(mid),
+    )
+    return s.select(*cols, "__med", once(mad).alias("__mad"))
 
 
 def hampel(
@@ -3650,7 +3646,6 @@ def hampel(
     by: list[str] | None = None,
     value_col: str = "value",
     order_tiebreak: list[str] | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Hampel filter per key: flag samples whose modified z-score
     against the TRAILING window's median/MAD exceeds `k` — the
@@ -3659,94 +3654,19 @@ def hampel(
     regime change doesn't flag a whole era). Only full (odd) frames
     score, so every median/MAD is the exact middle order statistic —
     rank selection, no interpolation kernel, engine-ulp safe (the
-    ts_rolling_median rule).
-
-    engine="auto" resolves to the Arrow rank-median engine
-    (_rolling_rank_arrow) for per-key double series — r14 A/B: 3.11 s
-    hof vs 0.85 s arrow at sf0.1, rows identical, and the gap widens
-    with rows since the JVM side pays an interpreted per-row array
-    sort; "hof" keeps the pure-JVM window shape (one bounded
-    collect_list per row, median/MAD/score as array expressions —
-    zero joins, one sort per key). The score expression and the
-    flag filter stay Spark-side under BOTH engines, shared with the
-    oracle. Returns flagged rows only:
-    (*by, ts, value, local_median, local_mad, score)."""
-    if window_rows % 2 == 0:
-        raise ValueError("window_rows must be odd for exact medians")
+    ts_rolling_median rule). The value type picks the median/MAD
+    engine (_rolling_rank); the score expression and the flag filter
+    are Spark-side, shared with the oracle. Returns flagged rows
+    only: (*by, ts, value, local_median, local_mad, score)."""
     by = by or []
-    df = _time_norm(df, time_col)
-    if _rank_window_engine(df, engine, by, value_col) == "arrow":
-        scored = _rolling_rank_arrow(
-            df, window_rows, time_col, by, value_col,
-            order_tiebreak or [], want_mad=True,
-        )
-        score = F.round(
-            F.lit(0.6745)
-            * (F.col(value_col) - F.col("__med"))
-            / F.col("__mad"),
-            6,
-        )
-        return (
-            scored.select(
-                *by, F.col(time_col), F.col(value_col),
-                F.col("__med").alias("local_median"),
-                F.col("__mad").alias("local_mad"),
-                F.when(F.col("__mad") > 0, score).alias("score"),
-            )
-            .filter(F.col("score").isNotNull() & (F.abs("score") > F.lit(k)))
-        )
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(-(window_rows - 1), Window.currentRow)
-    )
-    mid = window_rows // 2 + 1
-    frame = F.collect_list(F.col(value_col)).over(w)
-    s = df.select(
-        *by,
-        F.col(time_col),
-        F.col(value_col),
-        frame.alias("__f"),
-        *[F.col(c) for c in (order_tiebreak or [])],
-    ).filter(F.size("__f") == window_rows)
-    # CollapseProject re-inlines a projected expression into every
-    # downstream reference — inside the 25-element transform lambda
-    # that re-sorts the frame PER ELEMENT (the round-5 50x pitfall,
-    # measured 10x here). A current-row-frame window is a real plan
-    # barrier that materializes the value once per row AND reuses the
-    # existing (key, time) sort — no extra exchange.
-    w_row = (
-        Window.partitionBy(*by).orderBy(*order).rowsBetween(0, 0)
-    )
-
-    def once(col):
-        return F.last(col).over(w_row)
-
-    med = F.try_element_at(F.array_sort(F.col("__f")), F.lit(mid))
-    s2 = s.select(
-        *by, F.col(time_col), F.col(value_col), "__f",
-        once(med).alias("__med"),
-        *[F.col(c) for c in (order_tiebreak or [])],
-    )
-    mad = F.try_element_at(
-        F.array_sort(
-            F.transform(F.col("__f"), lambda x: F.abs(x - F.col("__med")))
-        ),
-        F.lit(mid),
-    )
-    s3 = s2.select(
-        *by, F.col(time_col), F.col(value_col), "__med",
-        once(mad).alias("__mad"),
-    )
+    s = _rolling_rank(df, window_rows, time_col, by, value_col,
+                      order_tiebreak or [], want_mad=True)
     score = F.round(
-        F.lit(0.6745)
-        * (F.col(value_col) - F.col("__med"))
-        / F.col("__mad"),
+        F.lit(0.6745) * (F.col(value_col) - F.col("__med")) / F.col("__mad"),
         6,
     )
     return (
-        s3.select(
+        s.select(
             *by, F.col(time_col), F.col(value_col),
             F.col("__med").alias("local_median"),
             F.col("__mad").alias("local_mad"),
@@ -4125,10 +4045,10 @@ def burstiness(
     gap = F.unix_micros(F.col(time_col)) - F.unix_micros(
         F.lag(time_col).over(w)
     )
-    g = df.select(*by, gap.alias("__g")).filter(F.col("__g").isNotNull())
+    g = df.select(*by, gap.alias("__gap")).filter(F.col("__gap").isNotNull())
     agg = g.groupBy(*by).agg(
         F.count(F.lit(1)).alias("n_gaps"),
-        F.round(F.sum(F.col("__g").cast("decimal(38,6)")), 6)
+        F.round(F.sum(F.col("__gap").cast("decimal(38,6)")), 6)
         .cast("double")
         .alias("__s1"),
         # the square stays in EXACT integer decimals: routing a
@@ -4136,8 +4056,8 @@ def burstiness(
         # diverged by engine (DuckDB rounds the cast in scaled-double
         # space, Spark via exact BigDecimal — caught live at sf0.001)
         F.sum(
-            F.col("__g").cast("decimal(19,0)")
-            * F.col("__g").cast("decimal(19,0)")
+            F.col("__gap").cast("decimal(19,0)")
+            * F.col("__gap").cast("decimal(19,0)")
         )
         .cast("double")
         .alias("__s2"),
@@ -4654,9 +4574,6 @@ def cusum_chart(
     kk, hh = float(k_slack), float(h_limit)
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket", kind="mergesort").reset_index(
-            drop=True
-        )
         zs = pdf["z"].to_numpy(dtype=float)
         sp = sn = 0.0
         pos, neg = [], []
@@ -4670,11 +4587,7 @@ def cusum_chart(
         pdf["alarm"] = [(p > hh) or (q > hh) for p, q in zip(pos, neg)]
         return pdf[[f.name for f in out_schema.fields]]
 
-    if not by:
-        return z.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return z.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(z, by, ["bucket"], per_key, out_schema)
 
 
 def gapfill_eval(
@@ -5282,53 +5195,45 @@ def availability(
 
 def _matrix_profile_arrow(b: DataFrame, w: int, excl: int,
                           by: list[str]) -> DataFrame:
-    """Dense-grid matrix-profile engine: the O(nsub²·w) scan per key
-    as ONE Arrow batch (numpy), bit-identical to the HOF path.
+    """Dense-grid matrix-profile scan: the O(nsub²·w) grid per key in
+    numpy behind the _per_key boundary, bit-identical to the nested
+    higher-order-function JVM grid the tests keep as the reference.
 
     IEEE parity is the whole design: the w dimension runs as an
     explicit k-loop (`acc += t*t`, 0.0-init) so every per-pair fold
-    accumulates in the HOF fold's exact left-to-right order — numpy's
+    accumulates in the oracle's exact left-to-right order — numpy's
     own axis-sum uses pairwise blocking and would drift in the last
     ulp. Window means/sigmas accumulate the same way. np.argmin
     returns the FIRST minimum, matching the strict-< fold's
-    earliest-neighbor tie rule; excluded pairs carry the same 1e308
-    sentinel. sqrt + round@6 happen Spark-side so both engines share
-    one rounding semantic (and one oracle).
+    earliest-neighbor tie rule; excluded pairs carry a 1e308
+    sentinel. sqrt + round@6 happen Spark-side, replayed by the
+    oracle.
 
     The i-axis runs in blocks (~4M pairs) to bound peak memory at
     ~100 MB per task regardless of nsub; keys parallelize across
-    tasks exactly like the HOF path."""
+    tasks."""
     import numpy as np
     import pandas as pd
 
-    spark = b.sparkSession
-    dummy = not by
-    if dummy:
-        b = b.withColumn("__g", F.lit(1))
-    gcols = by or ["__g"]
-    fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in b.schema if f.name in gcols
-    )
-    out_schema = (
-        f"{fields}, idx long, bucket timestamp, __d2 double, __j long"
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType(
+        [f for f in b.schema if f.name in by]
+        + [
+            T.StructField("idx", T.LongType()),
+            T.StructField("bucket", T.TimestampType()),
+            T.StructField("__d2", T.DoubleType()),
+            T.StructField("__j", T.LongType()),
+        ]
     )
 
-    def profile(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket")
+    def profile(pdf: pd.DataFrame) -> pd.DataFrame | None:
         vals = pdf["__v"].to_numpy(dtype=np.float64)
         n = len(vals)
         nsub = n - w + 1
-        empty = pdf.iloc[0:0]
         if nsub < 1:
-            return empty[gcols].assign(
-                idx=pd.Series(dtype="int64"),
-                bucket=pd.Series(dtype=pdf["bucket"].dtype),
-                __d2=pd.Series(dtype="float64"),
-                __j=pd.Series(dtype="int64"),
-            )
+            return None
         # window mean/sigma, accumulated k = 0..w-1 left-to-right
-        # (identical order to the HOF win_sum / dev_sum folds)
         acc = np.zeros(nsub)
         for k in range(w):
             acc = acc + vals[k:k + nsub]
@@ -5355,14 +5260,17 @@ def _matrix_profile_arrow(b: DataFrame, w: int, excl: int,
             sel = v < 1e308
             best[i0:i1] = np.where(sel, v, 1e308)
             bestj[i0:i1] = np.where(sel, j, -1)
-        out = pd.DataFrame({c: [pdf.iloc[0][c]] * nsub for c in gcols})
-        out["idx"] = np.arange(nsub, dtype=np.int64)
-        out["bucket"] = pdf["bucket"].to_numpy()[:nsub]
-        out["__d2"] = best
-        out["__j"] = bestj
+        out = pd.DataFrame({
+            "idx": np.arange(nsub, dtype=np.int64),
+            "bucket": pdf["bucket"].to_numpy()[:nsub],
+            "__d2": best,
+            "__j": bestj,
+        })
+        for c in by:
+            out[c] = pdf[c].iloc[0]
         return out
 
-    prof = b.groupBy(*gcols).applyInPandas(profile, out_schema)
+    prof = _per_key(b, by, ["bucket"], profile, out_schema)
     return prof.select(
         *by,
         F.col("idx"),
@@ -5381,8 +5289,7 @@ def matrix_profile(
     time_col: str = "time",
     by: list[str] | None = None,
     value_col: str = "value",
-    max_buckets: int | None = None,
-    engine: str = "auto",
+    max_buckets: int = 65536,
 ) -> DataFrame:
     """Matrix profile per key: for every length-`w` subsequence of the
     bucketed series, the z-normalized Euclidean distance to its
@@ -5398,165 +5305,34 @@ def matrix_profile(
     gapfill_interp first when calendar alignment matters.
 
     Spark shape: one decimal-mean bucket aggregation (calendar-
-    bounded, guarded at `max_buckets`), one per-key ordered array,
-    then the O(n_sub² · w) distance scan as PURE nested higher-order
-    JVM expressions (sequence/aggregate/slice) — no Python, no
-    joins; keys parallelize across tasks and the per-key grid is
-    bounded by the calendar, not the corpus. Exclusion zone w//2
-    (trivial-match suppression). Flat windows get sigma floored at
-    1e-12 (their z-profile is ~0, distances stay finite and
-    deterministic). All folds are sequential left-to-right IEEE
-    doubles, so the DuckDB oracle replays them bit-for-bit.
+    bounded, guarded at `max_buckets` per key), then the O(n_sub² ·
+    w) distance scan as a per-key numpy grid behind one Arrow
+    boundary (_matrix_profile_arrow) — no joins; keys parallelize
+    across tasks and the per-key grid is bounded by the calendar, not
+    the corpus. 4096 buckets measured 2.9 s, against 123 s for the
+    interpreted nested-HOF JVM grid it replaced (r9 verdict #3).
+    Exclusion zone w//2 (trivial-match suppression). Flat windows get
+    sigma floored at 1e-12 (their z-profile is ~0, distances stay
+    finite and deterministic). All folds are sequential left-to-right
+    IEEE doubles, so the DuckDB oracle replays them bit-for-bit.
 
     Returns (key..., idx, bucket, mp, mp_idx): subsequence index, its
     start bucket, round@6 profile value, and the neighbor index
-    (NULL/NULL when every candidate falls in the exclusion zone).
-
-    Engines (r9 verdict #3 — the interpreted HOF grid is quadratic
-    and single-task per key, measured 8.1 s at nsub=1024 but 123 s at
-    the old 4096 guard):
-    - `hof` — the pure-JVM nested-HOF scan above; guard defaults to
-      1024 buckets/key (the largest interactive grid).
-    - `arrow` — per-key numpy grid behind ONE applyInPandas boundary
-      (the sanctioned ts_ewma shape); the w-dimension runs as an
-      explicit left-to-right k-loop so every fold is BIT-IDENTICAL to
-      the HOF path (same IEEE order, same strict-< earliest-neighbor
-      argmin; asserted in tests), and sqrt/round@6 stay Spark-side so
-      rounding semantics are shared. Guard defaults to 65536
-      buckets/key; 4096 measured at 2.9 s vs the HOF path's 123 s.
-    - `auto` (default) — `arrow` (r13: the interpreted HOF grid loses
-      at EVERY size once the series is long enough to matter —
-      measured 7.3 s hof vs 1.9 s arrow at nsub=349, sf0.1, bitwise
-      identical; hof remains for pure-JVM callers)."""
+    (NULL/NULL when every candidate falls in the exclusion zone)."""
     by = by or []
-    if engine == "auto":
-        engine = "arrow"
-    if engine not in ("hof", "arrow"):
-        raise ValueError(f"engine must be auto|hof|arrow, got {engine!r}")
-    if max_buckets is None:
-        max_buckets = 1024 if engine == "hof" else 65536
     df = _time_norm(df, time_col)
     # NULL values drop before bucketing (the streaming_psi rule): an
     # all-NULL bucket would otherwise put a NULL mean into the series
-    # array and NULL-poison every distance fold that touches it —
-    # blanking mp for w windows and diverging from the oracle's
-    # NULL-ordering min
+    # and NULL-poison every distance fold that touches it — blanking
+    # mp for w windows and diverging from the oracle's NULL-ordering
+    # min
     b = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.window(F.col(time_col), every).start.alias("bucket"), *by)
         .agg(_dec_avg(value_col).alias("__v"))
     )
     b = _bucket_count_guard(b, by, "matrix_profile", max_buckets)
-    excl = max(1, w // 2)
-    if engine == "arrow":
-        return _matrix_profile_arrow(b, w, excl, by)
-    arr = (
-        b.groupBy(*by)
-        .agg(F.array_sort(F.collect_list(F.struct("bucket", "__v"))).alias("__s"))
-        .select(
-            *by,
-            F.transform("__s", lambda s: s["bucket"]).alias("__bks"),
-            F.transform("__s", lambda s: s["__v"]).alias("__vals"),
-        )
-        .withColumn("__nsub", F.size("__vals") - F.lit(w) + F.lit(1))
-        .filter(F.col("__nsub") >= 1)
-        .withColumn("__idx", F.sequence(F.lit(0), F.col("__nsub") - 1))
-    )
-    win_sum = lambda i: F.aggregate(
-        F.slice("__vals", i + 1, w), F.lit(0.0), lambda a, x: a + x
-    )
-    arr = arr.withColumn(
-        "__mu", F.transform("__idx", lambda i: win_sum(i) / F.lit(float(w)))
-    )
-    dev_sum = lambda i: F.aggregate(
-        F.slice("__vals", i + 1, w),
-        F.lit(0.0),
-        lambda a, x: a
-        + (x - F.element_at("__mu", i + 1)) * (x - F.element_at("__mu", i + 1)),
-    )
-    arr = arr.withColumn(
-        "__sg",
-        F.transform(
-            "__idx",
-            lambda i: F.greatest(
-                F.sqrt(F.greatest(dev_sum(i) / F.lit(float(w)), F.lit(0.0))),
-                F.lit(1e-12),
-            ),
-        ),
-    )
-    # HOF-shape notes (all measured at sf0.1): HOFs evaluate
-    # interpreted — node count per element IS the runtime. Flat
-    # primitive arrays index O(1); precomputing per-subsequence
-    # z-profiles as array<array<double>> is 3-4x SLOWER (nested
-    # element_at copies the inner list per call). The fast shape:
-    # hoist the i-side (mu, sg) as per-row columns, hand the j-side
-    # (mu, sg, j) to the lambda as ONE arrays_zip struct (field reads,
-    # no array lookups), zip_with the two value slices (array args
-    # evaluate once per pair), and bind each difference once in the
-    # fold (acc + t*t — identical IEEE order to summing squared terms
-    # 0.0-init, which is what the oracle replays).
-    rows = (
-        arr.select(*by, "__bks", "__vals", "__mu", "__sg", "__nsub",
-                   F.explode("__idx").alias("idx"))
-        .withColumn("__mu_i", F.element_at("__mu", F.col("idx") + 1))
-        .withColumn("__sg_i", F.element_at("__sg", F.col("idx") + 1))
-        .withColumn("__win_i", F.slice("__vals", F.col("idx") + 1, w))
-        .withColumn(
-            "__jseq", F.sequence(F.lit(0), F.col("__nsub") - 1)
-        )
-        .withColumn("__jzip", F.arrays_zip("__mu", "__sg", "__jseq"))
-    )
-
-    def znd2(i, s):
-        # z-normalized squared distance vs subsequence s (a struct of
-        # the j-side mu/sg/index): sequential fold, term bound once;
-        # the i-side window is the hoisted per-row __win_i (re-slicing
-        # it here would copy the same 12 doubles once per candidate j)
-        return F.aggregate(
-            F.zip_with(
-                F.col("__win_i"),
-                F.slice("__vals", s["__jseq"] + 1, F.lit(w)),
-                lambda a, b: (a - F.col("__mu_i")) / F.col("__sg_i")
-                - (b - s["__mu"]) / s["__sg"],
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t * t,
-        )
-
-    i = F.col("idx")
-    # candidates first (one znd2 eval per j; the exclusion zone gets
-    # the [1e308,-1] sentinel), then a strict-< min fold — keeps the
-    # earliest neighbor on ties, sentinel rows can never win
-    cands = F.transform(
-        "__jzip",
-        lambda s: F.when(
-            F.abs(s["__jseq"] - i) < F.lit(excl),
-            F.array(F.lit(1e308), F.lit(-1.0)),
-        ).otherwise(
-            F.array(znd2(i, s), s["__jseq"].cast("double"))
-        ),
-    )
-    best = F.aggregate(
-        cands,
-        F.array(F.lit(1e308), F.lit(-1.0)),
-        lambda acc, c: F.when(
-            F.element_at(c, 1) < F.element_at(acc, 1), c
-        ).otherwise(acc),
-    )
-    out = rows.withColumn("__best", best).select(
-        *by,
-        F.col("idx").cast("long").alias("idx"),
-        F.element_at("__bks", i + 1).alias("bucket"),
-        F.when(
-            F.element_at("__best", 2) >= 0,
-            F.round(F.sqrt(F.element_at("__best", 1)), 6),
-        ).alias("mp"),
-        F.when(
-            F.element_at("__best", 2) >= 0,
-            F.element_at("__best", 2).cast("long"),
-        ).alias("mp_idx"),
-    )
-    return out
+    return _matrix_profile_arrow(b, w, max(1, w // 2), by)
 
 
 def runs_test(
@@ -6350,7 +6126,6 @@ def theta_forecast(
     aa = float(alpha)
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__rn", kind="mergesort")
         t2 = pdf["__t2"].to_numpy(dtype=float)
         s = t2[0]
         for v in t2[1:]:
@@ -6371,11 +6146,7 @@ def theta_forecast(
             rows_out[c] = [pdf[c].iloc[0]] * horizon
         return pd.DataFrame(rows_out)[[f.name for f in out_schema.fields]]
 
-    if not by:
-        return staged.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return staged.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(staged, by, ["__rn"], per_key, out_schema)
 
 
 def kalman_level(
@@ -6439,7 +6210,6 @@ def kalman_level(
         # banker's (half-even) — rounding here would diverge from the
         # engines' HALF_UP; the @6 output round happens in the Spark
         # plan below, mirrored by the oracle
-        pdf = pdf.sort_values("bucket", kind="mergesort")
         x = pdf["__v"].to_numpy(dtype=float)
         lvl = x[0]
         p = rr  # diffuse-ish init: one observation's worth of variance
@@ -6464,12 +6234,7 @@ def kalman_level(
             row[c] = [pdf[c].iloc[0]]
         return pd.DataFrame(row)[[f.name for f in out_schema.fields]]
 
-    if not by:
-        folded = b.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    else:
-        folded = b.groupBy(*by).applyInPandas(per_key, out_schema)
+    folded = _per_key(b, by, ["bucket"], per_key, out_schema)
     return folded.select(
         *by, "n_buckets",
         F.round("level", 6).alias("level"),
@@ -7072,7 +6837,7 @@ def croston(
     exists only when demand > 0 — absent buckets ARE the intervals,
     so no zero-filled spine is materialized), one distributed
     groupBy; the recurrence then runs as one Arrow batch per key
-    (the [[ts_ewma]] applyInPandas precedent) over the BUCKETED
+    (the [[ts_ewma]] _per_key precedent) over the BUCKETED
     series, whose length is calendar-bounded, not data-bounded — the
     batch stays small at any SF. Bucket epochs use integer `div`, so
     intervals are exact; the smoothing arithmetic is the same
@@ -7109,14 +6874,11 @@ def croston(
     )
     a = float(alpha)
 
-    def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__e", kind="mergesort")
+    def per_key(pdf: pd.DataFrame) -> pd.DataFrame | None:
         es = pdf["__e"].tolist()
         ds = pdf["__d"].tolist()
         if len(es) < 2:
-            return pd.DataFrame(
-                columns=[f.name for f in out_schema.fields]
-            ).astype({"n_demands": "int64"})
+            return None
         z = float(ds[0])
         q = None
         for i in range(1, len(es)):
@@ -7129,11 +6891,7 @@ def croston(
         ]
         return pd.DataFrame([row], columns=[f.name for f in out_schema.fields])
 
-    if not by:
-        return b.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: per_key(pdf.drop(columns="__g")), out_schema
-        )
-    return b.groupBy(*by).applyInPandas(per_key, out_schema)
+    return _per_key(b, by, ["__e"], per_key, out_schema)
 
 
 def iact(

@@ -174,6 +174,18 @@ def test_connected_components_long_chain(spark):
     assert set(got.values()) == {0}
 
 
+def test_connected_components_fails_loudly_past_max_iter(spark):
+    # label 0 needs 29 rounds to cross a 30-node path: a cap below
+    # that raises instead of returning the path split in pieces
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=25"):
+        dedup.connected_components(pairs, max_iter=25)
+    got = dedup.connected_components(pairs, max_iter=32).collect()
+    assert len(got) == 30 and {r["component"] for r in got} == {0}
+
+
 def test_hash_split_deterministic_and_partitioned(docs):
     out1 = {r["doc_id"]: (r["bucket"], r["split"]) for r in
             text.hash_split(docs).collect()}

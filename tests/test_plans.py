@@ -66,7 +66,7 @@ PYTHON_OK = {
     # batch replay of the streaming CUSUM state fold — same
     # sequential-per-key Arrow boundary as ts_cusum
     "streaming_cusum_replay",
-    # r13: engine="auto" resolves to the Arrow grid at every size —
+    # r13: the numpy grid replaced the nested-HOF JVM grid —
     # measured 7.27 s hof vs 1.87 s arrow at sf0.1 (nsub=349),
     # bit-identical rows (engine-identity test); one
     # FlatMapGroupsInPandas per key, parallel across keys
@@ -81,8 +81,8 @@ PYTHON_OK = {
     # FlatMapGroupsInPandas per key (timeseries._rolling_rank_arrow)
     # — A/B at sf0.1: hampel 3.11 -> 0.85 s, rolling_median 1.79 ->
     # 0.78 s, rows identical (rank selection, no interpolation);
-    # engine-identity test pins parity. anomaly_summary composes
-    # hampel, so it inherits the boundary.
+    # double values pick this engine, the engine-identity tests pin
+    # parity. anomaly_summary composes hampel, so it inherits it.
     "ts_hampel",
     "ts_rolling_median",
     "pipeline_anomaly_summary",

@@ -752,65 +752,6 @@ def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
     catalog.invalidate_all()
 
 
-def test_pq_ann_input_keyed_session_memo(spark, tmp_path):
-    """r13: pq_ann memoizes on the input plans + params before the
-    codebook training (the sample collect, numpy Lloyd and per-chunk
-    toLocalIterator all run at plan-BUILD time, so an output-keyed
-    memo would still pay them). Second call returns the identical
-    top-k; rewriting the parquet behind the same plan misses and
-    retrains on the new corpus."""
-    from fossil_spark.operators import ann
-
-    path = str(tmp_path / "emb.parquet")
-
-    def write(vecs):
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vecs)],
-            "vec_id long, embedding array<double>",
-        ).write.mode("overwrite").parquet(path)
-
-    write([
-        [1.0, 0.0, 0.0, 0.0], [0.9, 0.1, 0.0, 0.0],
-        [0.0, 1.0, 0.0, 0.0], [0.0, 0.9, 0.1, 0.0],
-        [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0],
-    ])
-    catalog.invalidate_all()
-
-    def topk(n_iter=1):
-        emb = spark.read.parquet(path)
-        q = emb.filter("vec_id < 2")
-        return sorted(
-            (r["query_id"], r["vec_id"], r["rank"])
-            for r in ann.pq_ann(
-                emb, q, k=1, m=2, n_cents=2, n_iter=n_iter,
-                rerank_factor=2,
-            ).collect()
-        )
-
-    first = topk()
-    # exact rerank: each query's nearest is its co-directional partner
-    assert (0, 1, 1) in first and (1, 0, 1) in first
-    before = catalog.COUNTS.copy()
-    assert topk() == first            # same session, same files: HIT
-    assert catalog.COUNTS - before == Counter(hit=1)
-
-    # different params -> different key (MISS), coexisting entry
-    before = catalog.COUNTS.copy()
-    topk(n_iter=2)
-    assert topk() == first
-    assert catalog.COUNTS - before == Counter(miss=1, hit=1)
-
-    # rewrite behind the same plan: MISS + fresh train on the new data
-    write([
-        [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.9, 0.1],
-        [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
-        [0.9, 0.1, 0.0, 0.0], [0.1, 0.9, 0.0, 0.0],
-    ])
-    fresh = topk()
-    assert (0, 1, 1) in fresh and (1, 0, 1) in fresh
-    catalog.invalidate_all()
-
-
 def test_cosine_topk_engines_bit_identical(spark):
     """r13: engine="arrow" (the cogrouped numpy pair grid behind
     knn_classify's 500-probe scan) must return the exact rows of the

@@ -206,8 +206,9 @@ def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# rolling rank-median Arrow engine (hampel / rolling_median): the numpy
-# path must be bit-identical to the JVM window shape, full frames only
+# rolling rank-median engines (hampel / rolling_median): the value type
+# picks the engine, and the numpy path must be bit-identical to the JVM
+# window shape — full frames only, nulls included
 # --------------------------------------------------------------------------
 
 def _spiky_events(spark):
@@ -220,65 +221,86 @@ def _spiky_events(spark):
             # deterministic wiggle + planted spikes; exact float ties
             # included (i%5 repeats values) to bait ordering bugs
             v = float((i * 7) % 5) + (50.0 if i in (20, 41) else 0.0)
-            rows.append((key, base + timedelta(minutes=i), v, i))
+            t = base + timedelta(minutes=i)
+            # one null value (key a) and one null timestamp (key b):
+            # windows holding the null drop, the null-time row sorts last
+            if key == "a" and i == 30:
+                v = None
+            if key == "b" and i == 45:
+                t = None
+            rows.append((key, t, v, i))
     return spark.createDataFrame(
         rows, "event_type string, ts timestamp, value double, event_id long"
     )
+
+
+_RANK_ARGS = dict(window_rows=11, time_col="ts", by=["event_type"],
+                  value_col="value", order_tiebreak=["event_id"])
+
+
+def _str_rows(df, cols):
+    return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_hampel_engines_bit_identical(spark):
     from fossil_spark.operators import timeseries as ts
 
     ev = _spiky_events(spark)
-
-    def rows(df):
-        return sorted(
-            tuple(str(r[c]) for c in (
-                "event_type", "ts", "value", "local_median",
-                "local_mad", "score",
-            ))
-            for r in df.collect()
-        )
-
-    kw = dict(window_rows=11, k=2.0, time_col="ts", by=["event_type"],
-              value_col="value", order_tiebreak=["event_id"])
-    hof = rows(ts.hampel(ev, engine="hof", **kw))
-    arr = rows(ts.hampel(ev, engine="arrow", **kw))
-    auto = rows(ts.hampel(ev, **kw))
+    cols = ("event_type", "ts", "value", "event_id", "__med", "__mad")
+    hof = _str_rows(ts._rolling_rank_hof(ev, want_mad=True, **_RANK_ARGS), cols)
+    arr = _str_rows(
+        ts._rolling_rank_arrow(ev, want_mad=True, **_RANK_ARGS), cols
+    )
     assert arr == hof
-    assert auto == hof
-    assert len(hof) >= 2  # the planted spikes flag
+    # key a: the null at i=30 empties the 11 frames ending at 30..40;
+    # key b: the null-time row is the last of 60, all 50 frames full
+    assert len(hof) == 39 + 50
+    assert all(r[2] != "None" for r in hof)
+    flagged = ts.hampel(ev, k=2.0, **_RANK_ARGS)
+    assert "FlatMapGroupsInPandas" in _plan(flagged)  # doubles -> numpy
+    assert flagged.count() >= 2  # the planted spikes flag
 
 
 def test_rolling_median_engines_bit_identical(spark):
     from fossil_spark.operators import timeseries as ts
 
     ev = _spiky_events(spark)
-
-    def rows(df):
-        return sorted(
-            tuple(str(r[c]) for c in (
-                "event_type", "ts", "value", "rolling_median", "deviation",
-            ))
-            for r in df.collect()
-        )
-
-    kw = dict(window_rows=11, time_col="ts", by=["event_type"],
-              value_col="value", order_tiebreak=["event_id"])
-    hof = rows(ts.rolling_median(ev, engine="hof", **kw))
-    arr = rows(ts.rolling_median(ev, engine="arrow", **kw))
+    cols = ("event_type", "ts", "value", "event_id", "__med")
+    hof = _str_rows(
+        ts._rolling_rank_hof(ev, want_mad=False, **_RANK_ARGS), cols
+    )
+    arr = _str_rows(
+        ts._rolling_rank_arrow(ev, want_mad=False, **_RANK_ARGS), cols
+    )
     assert arr == hof
-    # 60 rows per key, full frames only: 50 rows per key
-    assert len(hof) == 100
+    out = ts.rolling_median(ev, **_RANK_ARGS)
+    assert len(hof) == out.count() == 39 + 50
+    # the null-time row (key b, i=45) ends the last full frame
+    assert ("b", "None") in {(r[0], r[1]) for r in hof}
 
 
-def test_rank_window_auto_falls_back_without_keys_or_doubles(spark):
+def test_rank_window_engine_follows_value_type(spark):
+    from pyspark.sql import types as T
+
     from fossil_spark.operators import timeseries as ts
 
-    ev = _spiky_events(spark)
-    # no by-keys -> hof (single global group would serialize in arrow)
-    assert ts._rank_window_engine(ev, "auto", [], "value") == "hof"
-    # int values -> hof (the numpy float64 window would change types)
-    ev_int = ev.withColumn("value", ev["value"].cast("long"))
-    assert ts._rank_window_engine(ev_int, "auto", ["event_type"], "value") == "hof"
-    assert ts._rank_window_engine(ev, "auto", ["event_type"], "value") == "arrow"
+    ev = _spiky_events(spark).filter("event_type = 'a'")
+    kw = dict(_RANK_ARGS, by=[])
+    # doubles run the numpy windows, with no by-keys as one group
+    dbl = ts.rolling_median(ev, **kw)
+    assert "FlatMapGroupsInPandas" in _plan(dbl)
+    # longs run the JVM windows, which keep the value type
+    ev_long = ev.withColumn("value", F.col("value").cast("long"))
+    lng = ts.rolling_median(ev_long, **kw)
+    assert "FlatMapGroupsInPandas" not in _plan(lng)
+    assert isinstance(lng.schema["rolling_median"].dataType, T.LongType)
+    # integral values: both engines select the same medians
+    cols = ("ts", "rolling_median")
+    assert _str_rows(lng, cols) == [
+        (t, str(int(float(m)))) for t, m in _str_rows(dbl, cols)
+    ]
+    assert lng.count() == 60 - 10 - 11

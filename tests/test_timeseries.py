@@ -2379,8 +2379,119 @@ def test_matrix_profile_drops_null_values(spark):
         assert r["mp"] is not None and r["mp_idx"] is not None, r
 
 
+def _matrix_profile_hof(df, w=12, every="2 hours", time_col="time",
+                        by=None, value_col="value"):
+    """Reference matrix profile as pure nested higher-order JVM
+    expressions (sequence/aggregate/slice) over matrix_profile's own
+    bucketing: the engine the numpy grid replaced, kept as the
+    bit-identity reference. Every fold is a sequential left-to-right
+    IEEE sum and the neighbor is a strict-< min fold (earliest
+    neighbor on ties)."""
+    by = by or []
+    df = ts._time_norm(df, time_col)
+    b = (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(F.window(F.col(time_col), every).start.alias("bucket"), *by)
+        .agg(ts._dec_avg(value_col).alias("__v"))
+    )
+    excl = max(1, w // 2)
+    arr = (
+        b.groupBy(*by)
+        .agg(F.array_sort(F.collect_list(F.struct("bucket", "__v"))).alias("__s"))
+        .select(
+            *by,
+            F.transform("__s", lambda s: s["bucket"]).alias("__bks"),
+            F.transform("__s", lambda s: s["__v"]).alias("__vals"),
+        )
+        .withColumn("__nsub", F.size("__vals") - F.lit(w) + F.lit(1))
+        .filter(F.col("__nsub") >= 1)
+        .withColumn("__idx", F.sequence(F.lit(0), F.col("__nsub") - 1))
+    )
+
+    def win_sum(i):
+        return F.aggregate(
+            F.slice("__vals", i + 1, w), F.lit(0.0), lambda a, x: a + x
+        )
+
+    arr = arr.withColumn(
+        "__mu", F.transform("__idx", lambda i: win_sum(i) / F.lit(float(w)))
+    )
+
+    def dev_sum(i):
+        mu = F.element_at("__mu", i + 1)
+        return F.aggregate(
+            F.slice("__vals", i + 1, w), F.lit(0.0),
+            lambda a, x: a + (x - mu) * (x - mu),
+        )
+
+    arr = arr.withColumn(
+        "__sg",
+        F.transform(
+            "__idx",
+            lambda i: F.greatest(
+                F.sqrt(F.greatest(dev_sum(i) / F.lit(float(w)), F.lit(0.0))),
+                F.lit(1e-12),
+            ),
+        ),
+    )
+    # the i-side (mu, sg, window) hoisted as per-row columns, the
+    # j-side handed to the lambda as one arrays_zip struct
+    rows = (
+        arr.select(*by, "__bks", "__vals", "__mu", "__sg", "__nsub",
+                   F.explode("__idx").alias("idx"))
+        .withColumn("__mu_i", F.element_at("__mu", F.col("idx") + 1))
+        .withColumn("__sg_i", F.element_at("__sg", F.col("idx") + 1))
+        .withColumn("__win_i", F.slice("__vals", F.col("idx") + 1, w))
+        .withColumn("__jseq", F.sequence(F.lit(0), F.col("__nsub") - 1))
+        .withColumn("__jzip", F.arrays_zip("__mu", "__sg", "__jseq"))
+    )
+
+    def znd2(s):
+        # z-normalized squared distance vs subsequence s, folded
+        # acc + t*t from 0.0
+        return F.aggregate(
+            F.zip_with(
+                F.col("__win_i"),
+                F.slice("__vals", s["__jseq"] + 1, F.lit(w)),
+                lambda a, b: (a - F.col("__mu_i")) / F.col("__sg_i")
+                - (b - s["__mu"]) / s["__sg"],
+            ),
+            F.lit(0.0),
+            lambda acc, t: acc + t * t,
+        )
+
+    i = F.col("idx")
+    cands = F.transform(
+        "__jzip",
+        lambda s: F.when(
+            F.abs(s["__jseq"] - i) < F.lit(excl),
+            F.array(F.lit(1e308), F.lit(-1.0)),
+        ).otherwise(F.array(znd2(s), s["__jseq"].cast("double"))),
+    )
+    best = F.aggregate(
+        cands,
+        F.array(F.lit(1e308), F.lit(-1.0)),
+        lambda acc, c: F.when(
+            F.element_at(c, 1) < F.element_at(acc, 1), c
+        ).otherwise(acc),
+    )
+    return rows.withColumn("__best", best).select(
+        *by,
+        F.col("idx").cast("long").alias("idx"),
+        F.element_at("__bks", i + 1).alias("bucket"),
+        F.when(
+            F.element_at("__best", 2) >= 0,
+            F.round(F.sqrt(F.element_at("__best", 1)), 6),
+        ).alias("mp"),
+        F.when(
+            F.element_at("__best", 2) >= 0,
+            F.element_at("__best", 2).cast("long"),
+        ).alias("mp_idx"),
+    )
+
+
 def test_matrix_profile_arrow_engine_bit_identical(spark):
-    """The dense-grid Arrow engine must reproduce the HOF path
+    """The numpy grid must reproduce the nested-HOF JVM grid
     BIT-FOR-BIT (r9 verdict #3): same IEEE fold order via explicit
     k-loops, same strict-< earliest-neighbor tie rule, same round@6 —
     on both a real multi-key feed and a synthetic dense series."""
@@ -2390,47 +2501,46 @@ def test_matrix_profile_arrow_engine_bit_identical(spark):
     ev = read_table(spark, "/root/testdata/sf0.001", "events")
     kw = dict(w=12, every="2 hours", time_col="ts",
               by=["event_type"], value_col="value")
-    hof = sorted(map(tuple, matrix_profile(ev, engine="hof", **kw).collect()))
-    arw = sorted(map(tuple, matrix_profile(ev, engine="arrow", **kw).collect()))
+    hof = sorted(map(tuple, _matrix_profile_hof(ev, **kw).collect()))
+    arw = sorted(map(tuple, matrix_profile(ev, **kw).collect()))
     assert len(hof) > 100
     assert hof == arw
-    # dense synthetic grid right at the HOF interactive guard
+    # dense synthetic grid, no by-keys (one group)
     n = 512
     df = spark.range(n).select(
         (F.to_timestamp(F.lit("2024-01-01 00:00:00"))
          + F.make_interval(mins=F.col("id"))).alias("time"),
         (F.sin(F.col("id").cast("double") / 7.0) * 10
          + F.col("id").cast("double") % 5).alias("value"))
-    h2 = sorted(map(tuple, matrix_profile(
-        df, w=12, every="1 minute", engine="hof").collect()))
+    h2 = sorted(map(tuple, _matrix_profile_hof(
+        df, w=12, every="1 minute").collect()))
     a2 = sorted(map(tuple, matrix_profile(
-        df, w=12, every="1 minute", engine="arrow").collect()))
+        df, w=12, every="1 minute").collect()))
     assert h2 == a2 and len(h2) == n - 11
 
 
-def test_matrix_profile_engine_resolution_and_guards(spark):
-    """auto = arrow since r13 (the interpreted HOF grid loses at every
-    size that matters — 7.3 s vs 1.9 s at nsub=349, bitwise
-    identical); explicit hof keeps its loud 1024-bucket guard."""
+def test_matrix_profile_arrow_grid_and_guard(spark):
+    """One engine: the numpy grid behind the per-key Arrow boundary,
+    with no by-keys as one group; the bucket guard fails loudly at
+    `max_buckets` (default 65536, which admits 1100 buckets)."""
     import pytest
 
     from fossil_spark.operators.timeseries import matrix_profile
 
-    n = 1100  # past the hof guard
+    n = 1100
     df = spark.range(n).select(
         (F.to_timestamp(F.lit("2024-01-01 00:00:00"))
          + F.make_interval(mins=F.col("id"))).alias("time"),
         F.col("id").cast("double").alias("value"))
-    auto_small = matrix_profile(df.limit(100), w=12, every="1 minute")
-    plan = auto_small._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan  # auto = arrow engine
+    small = matrix_profile(df.limit(100), w=12, every="1 minute")
+    plan = small._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan
     with pytest.raises(Exception, match="more than 1024 buckets"):
-        matrix_profile(df, w=12, every="1 minute", engine="hof").count()
-    # auto's arrow guard (65536) admits the 1100-bucket series
+        matrix_profile(df, w=12, every="1 minute", max_buckets=1024).count()
     dense = matrix_profile(df, w=12, every="1 minute")
     assert dense.count() == n - 11
-    with pytest.raises(ValueError, match="engine"):
-        matrix_profile(df, engine="stomp")
+    with pytest.raises(TypeError, match="engine"):
+        matrix_profile(df, engine="arrow")
 
 
 def test_runs_test_known_answer(spark):
