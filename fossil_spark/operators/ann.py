@@ -481,10 +481,17 @@ def ivf_ann(
     # expression — the earlier crossJoin(corpus x centroids) +
     # row_number() argmin shuffled n_lists x |corpus| rows just to pick
     # a minimum, which does not survive 100 TB.
-    cent_rows = [(i, [float(x) for x in row["__cent"]]) for i, row in enumerate(cents)]
+    # Built from pandas (Arrow, a LocalRelation): a Python-list input
+    # plans as a Python-RDD scan that starts a Python worker per task.
+    import pandas as pd
+
+    cent_rows = [
+        {"list_id": i, "vec": [float(x) for x in row["__cent"]]}
+        for i, row in enumerate(cents)
+    ]
     cents_one = broadcast(
         spark.createDataFrame(
-            [(cent_rows,)],
+            pd.DataFrame({"__cents": [cent_rows]}),
             "__cents array<struct<list_id:int, vec:array<double>>>",
         )
     )

@@ -16,10 +16,14 @@ deterministic across engines, partitionings, and runs.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from fossil_spark.catalog import Slot, memo
+from fossil_spark.operators.graph import _symmetric_edges
 from fossil_spark.operators.text import shingles
 
 
@@ -230,13 +234,18 @@ def minhash_jaccard_estimate(
     matrix checkpoint that existed to feed them: the matrix now has
     ONE consumer); the cost is num_bands copies of the num_hashes
     signature values through the bucket shuffle — O(1) per row, the
-    standard banded-LSH verify layout. Same buckets, same pair set,
-    same per-pair agreement count: rows identical to the joined
-    shape. Returns (doc_a, doc_b, n_match, jaccard_est)."""
+    standard banded-LSH verify layout. The riding signatures are
+    16-byte binary (unhex of the md5 hex), half the 32-char strings:
+    a hot bucket's single collected array value carries every
+    member's signature, so this halves its payload. Band hashes still
+    hash the hex strings, and unhex is a bijection on md5 hex, so the
+    buckets, the pair set and the per-pair agreement count are
+    unchanged: rows identical to the joined shape. Returns (doc_a,
+    doc_b, n_match, jaccard_est)."""
     sigs = _signature_matrix(df, text_col, id_col, num_hashes, shingle_n)
     mem = F.struct(
         F.col(id_col).alias("id"),
-        *[F.col(f"__mh{s}").alias(f"s{s}") for s in range(num_hashes)],
+        *[F.unhex(f"__mh{s}").alias(f"s{s}") for s in range(num_hashes)],
     )
     bands = sigs.select(
         mem.alias("m"),
@@ -501,11 +510,12 @@ def lsh_membership(
     in-bucket pair explosion, the pair distinct, or the iterative
     component labeling. The right substrate for consumers that only
     test MEMBERSHIP (near-dup rates), never pair structure or
-    component ids: connected_components runs O(diameter) join+count
-    rounds as driver actions at plan-build time, which membership
+    component ids: connected_components materializes the whole pair
+    list at plan-build time (and above its driver-path size runs
+    O(diameter) join+count rounds as driver actions), which membership
     readouts were paying for a column they reduce to IS NOT NULL
     (r13: pipeline_source_health spent 13.8 of its 15.3 cold seconds
-    there). Returns one `id_col` row per member doc."""
+    in the rounds). Returns one `id_col` row per member doc."""
     sigs = _signature_matrix(df, text_col, id_col, num_hashes, shingle_n)
     buckets = _lsh_buckets(sigs, id_col, num_hashes, rows_per_band)
     return buckets.select(F.explode("ids").alias(id_col)).distinct()
@@ -635,49 +645,60 @@ def connected_components(
 ) -> DataFrame:
     """Duplicate-group assignment: treat near-dup pairs as edges and
     label every node with the minimum id reachable from it (its
-    component). Iterative min-label propagation — each round is one
-    join + one aggregation, converging in O(graph diameter) rounds;
-    localCheckpoint cuts lineage so plans don't grow per iteration.
+    component). A pair with a null endpoint connects nothing: its
+    other endpoint is still a node, and a null id is its own row with
+    a null component. Ids take the common type of both columns
+    (int/long -> long). This is the canonical 'pick one representative
+    per duplicate cluster' step after LSH + verification.
 
-    Driver-sync budget: ONE action per round. The checkpoint is lazy,
-    so the convergence `count()` both materializes the round's labels
-    into block storage and returns the changed-row count — the
-    round-4 shape ran an eager-checkpoint job plus a count job (two
-    driver round-trips per iteration).
+    The pair list is localCheckpointed once, so the upstream pair
+    pipeline (minhash LSH, phash decode, ...) executes once on either
+    path. The path depends on the list's size:
 
-    Fails loudly instead of truncating: if the last of `max_iter`
-    rounds still changed a label, a component longer than the cap
-    would come back split, so it raises and names `max_iter`.
+    - at most B pairs: one Arrow collect, union-find on the driver
+      (the root is the smallest id), labels returned as a
+      LocalRelation. Near-dup graphs are mostly this size, where every
+      Spark job costs a fixed ~0.1 s and the rounds below would be
+      O(diameter) of them.
+    - more than B pairs: min-label propagation on the cluster. Each
+      round is one join + one aggregation, converging in O(graph
+      diameter) rounds; localCheckpoint cuts lineage so plans don't
+      grow per round. ONE action per round: the convergence `count()`
+      materializes the round's lazy checkpoint and returns the
+      changed-row count. Fails loudly instead of truncating: if the
+      last of `max_iter` rounds still changed a label, a component
+      longer than the cap would come back split, so it raises and
+      names `max_iter`.
 
-    This is the canonical 'pick one representative per duplicate
-    cluster' step after LSH + verification."""
-    # checkpoint the edge list: it is consumed EVERY round, and a lazy
-    # plan would re-execute the whole upstream pair pipeline (minhash
-    # LSH, phash decode, ...) once per iteration — O(diameter) extra
-    # executions of the most expensive stage.
-    # r13: symmetrize by EXPLODE, not union — the union carried the
-    # full upstream pair pipeline TWICE (one copy per branch), and
-    # the checkpoint materializes under AQE at call time, so the
-    # heaviest stage ran double (phash groups: edge build 13.2 s cold
-    # / 3.2-4.0 warm with union -> 6.2 / 2.2 with one exploded
-    # subtree; same rows, same distinct).
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select("__e.src", "__e.dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    B = spark.sql.autoBroadcastJoinThreshold / 16 bytes per pair (two
+    longs): the size the session already lets Spark pull to the driver
+    for a broadcast, so the driver path adds no setting of its own
+    (32 MB -> ~2M pairs). A threshold <= 0 turns broadcasts off and
+    the driver path with them: the rounds always run."""
+    spark = pairs.sparkSession
+    ids = pairs.select(F.array(F.col(a_col), F.col(b_col)).alias("ids"))
+    id_type = ids.schema["ids"].dataType
+    edges = pairs.select(
+        F.col(a_col).cast(id_type.elementType).alias("src"),
+        F.col(b_col).cast(id_type.elementType).alias("dst"),
+    ).localCheckpoint(eager=False)
+    max_pairs = _bytes_conf(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    ) // 16
+    if max_pairs > 0:
+        # one action: fills the lazy checkpoint with every partition and
+        # brings back at most B+1 pairs
+        tbl = edges.limit(max_pairs + 1).toArrow()
+        if tbl.num_rows <= max_pairs:
+            nullable = id_type.containsNull
+            return spark.createDataFrame(
+                _components_on_driver(tbl),
+                StructType([
+                    StructField("doc_id", id_type.elementType, nullable),
+                    StructField("component", id_type.elementType, nullable),
+                ]),
+            )
+    edges = _symmetric_edges(edges, "src", "dst").localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -712,6 +733,48 @@ def connected_components(
             f"max_iter={max_iter} rounds; raise max_iter"
         )
     return labels.select(F.col("node").alias("doc_id"), "component")
+
+
+def _bytes_conf(value: str) -> int:
+    """A Spark byte-size setting ("33554432", "10MB", "-1") in bytes."""
+    m = re.fullmatch(r"(-?)(\d+)([kmgtp]?)b?", value.strip().lower())
+    sign, digits, unit = m.groups()
+    scale = 1024 ** ("kmgtp".index(unit) + 1) if unit else 1
+    return (-1 if sign else 1) * int(digits) * scale
+
+
+def _components_on_driver(edges):
+    """Union-find over an Arrow (src, dst) table: (doc_id, component)
+    per distinct id, component = the smallest id reachable. Ids are
+    indexed in sorted order, so the smallest index in a tree is its
+    smallest id; each pass hooks every edge's larger root under the
+    smaller one (the root count drops every pass) and pointer jumping
+    then points every index straight at its root."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    src = edges.column("src").combine_chunks()
+    dst = edges.column("dst").combine_chunks()
+    ends = pa.concat_arrays([src, dst])
+    nodes = pc.unique(ends.drop_null())
+    nodes = nodes.take(pc.sort_indices(nodes))
+    linked = pc.and_(src.is_valid(), dst.is_valid())
+    a = pc.index_in(src.filter(linked), nodes).to_numpy()
+    b = pc.index_in(dst.filter(linked), nodes).to_numpy()
+    root = np.arange(len(nodes))
+    while not (root[a] == root[b]).all():
+        ra, rb = root[a], root[b]
+        low = np.minimum(ra, rb)
+        np.minimum.at(root, ra, low)
+        np.minimum.at(root, rb, low)
+        while not (root[root] == root).all():
+            root = root[root]
+    comp = nodes.take(pa.array(root))
+    if ends.null_count:
+        nodes = pa.concat_arrays([nodes, pa.nulls(1, nodes.type)])
+        comp = pa.concat_arrays([comp, pa.nulls(1, comp.type)])
+    return pa.table({"doc_id": nodes, "component": comp})
 
 
 def winnowing_pairs(

@@ -167,12 +167,13 @@ def semantic_dedup(
     unique subset.
 
     Scale shape: pair generation is LSH-bucketed (never all-pairs),
-    clustering is O(diameter) join+agg rounds, the final assignment is
-    one broadcast-friendly join."""
+    clustering is connected_components (one driver-side union-find up
+    to the broadcast-sized pair count, O(diameter) join+agg rounds
+    above it), the final assignment is one broadcast-friendly join."""
     pairs = dedup.embedding_neardup_pairs(
         embeddings, threshold=threshold, dim=dim, id_col=id_col
     ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    # component labels ARE the min reachable id (min-label propagation)
+    # component labels ARE the min reachable id
     mapped = dedup.connected_components(pairs).select(
         F.col("doc_id").alias(id_col), F.col("component").alias("__keep")
     )

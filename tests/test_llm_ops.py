@@ -1,5 +1,8 @@
 """LLM-data-pipeline operators vs DuckDB / invariants."""
 
+import contextlib
+import io
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -153,37 +156,77 @@ def test_ngram_jaccard(spark, docs):
         assert got[(a, b)] == j
 
 
-def test_connected_components(spark):
-    # two triangles + an isolated edge: components = min node id
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (11, 12), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    got = {r["doc_id"]: r["component"] for r in
-           dedup.connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-
 def test_connected_components_long_chain(spark):
-    # a path graph needs label propagation across the full diameter
+    # a 60-node path needs 59 label-propagation rounds, past the
+    # max_iter=25 default: the rounds raise, the driver path is exact
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(59)], "doc_a long, doc_b long"
     )
-    got = {r["doc_id"]: r["component"] for r in
-           dedup.connected_components(pairs).collect()}
-    assert set(got.values()) == {0}
+    got = dedup.connected_components(pairs).collect()
+    assert len(got) == 60 and {r["component"] for r in got} == {0}
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_connected_components_fails_loudly_past_max_iter(spark):
     # label 0 needs 29 rounds to cross a 30-node path: a cap below
     # that raises instead of returning the path split in pieces
+    # (threshold -1 forces the rounds; the driver path has no cap)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="max_iter=25"):
-        dedup.connected_components(pairs, max_iter=25)
-    got = dedup.connected_components(pairs, max_iter=32).collect()
+    with _broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match="max_iter=25"):
+            dedup.connected_components(pairs, max_iter=25)
+        got = dedup.connected_components(pairs, max_iter=32).collect()
     assert len(got) == 30 and {r["component"] for r in got} == {0}
+
+
+@pytest.mark.parametrize("rows, ddl, want", [
+    # two triangles + an isolated edge
+    ([(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10), (20, 21)],
+     "doc_a long, doc_b long",
+     {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10), (20, 20),
+      (21, 20)}),
+    # a null endpoint is its own row and connects nothing
+    ([(1, None), (2, 3), (None, 3)], "doc_a long, doc_b long",
+     {(1, 1), (2, 2), (3, 2), (None, None)}),
+    # self-loop, duplicate pair, reversed pair
+    ([(5, 5), (6, 7), (6, 7), (7, 6), (8, 7)], "doc_a long, doc_b long",
+     {(5, 5), (6, 6), (7, 6), (8, 6)}),
+    ([(3, 2), (2, 1), (9, 8)], "doc_a int, doc_b int",
+     {(1, 1), (2, 1), (3, 1), (8, 8), (9, 8)}),
+    ([(3, 2), (2, 1 << 40)], "doc_a int, doc_b long",
+     {(2, 2), (3, 2), (1 << 40, 2)}),
+    ([], "doc_a long, doc_b long", set()),
+], ids=["triangles", "nulls", "loop_dup_reversed", "int32", "int_long", "empty"])
+def test_connected_components_driver_and_rounds_agree(spark, rows, ddl, want):
+    # default threshold: union-find on the driver; -1: the Spark rounds
+    pairs = spark.createDataFrame(rows, ddl)
+    driver = dedup.connected_components(pairs)
+    with _broadcast_threshold(spark, "-1"):
+        rounds = dedup.connected_components(pairs)
+        rounds_rows = rounds.collect()
+    driver_rows = driver.collect()
+    assert sorted(map(tuple, driver_rows), key=str) == sorted(
+        map(tuple, rounds_rows), key=str)
+    assert set(map(tuple, driver_rows)) == want
+    assert len(driver_rows) == len(want)
+    assert driver.schema == rounds.schema
+    id_type = "bigint" if "long" in ddl else "int"
+    assert [f.dataType.simpleString() for f in driver.schema] == [id_type] * 2
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        driver.explain()
+    assert "LocalTableScan" in buf.getvalue()
 
 
 def test_hash_split_deterministic_and_partitioned(docs):

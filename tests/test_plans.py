@@ -292,7 +292,9 @@ _SCAN_BUDGET = {
     "ts_asof_join": 2,      # events as points + aggregated quotes
     "ts_range_join": 2,     # points + session intervals
     "dedup_embedding": 2,   # LSH bucket self-join
-    "dedup_components": 2,  # pairs + initial labels
+    # pairs + initial labels on the rounds path (above B pairs); at
+    # the driver-path sizes the labels are a LocalRelation, 0 scans
+    "dedup_components": 2,
     "ann_bruteforce": 2,    # base + sampled queries
     "ann_lsh": 2,
     "ann_ivf": 2,
@@ -338,7 +340,9 @@ _SCAN_BUDGET = {
     "agg_markov": 1,              # lag window + pair counts, one scan
     "embedding_coherence": 2,     # vectors + centroid cells (same file)
     "ts_heatmap": 1,              # one map-side-combined groupBy
-    "dedup_cluster_sizes": 2,     # pairs + label side (components shape)
+    # components shape: pairs + label side on the rounds path, 0
+    # scans when the driver path returns a LocalRelation
+    "dedup_cluster_sizes": 2,
     "text_code_detector": 1,      # pure column expressions, zero shuffles
     "ts_anomaly_decomposed": 1,   # decompose windows + medians, one scan
     "embedding_pca_moments": 1,   # moment cells one scan; mu is a literal
