@@ -1381,6 +1381,36 @@ def _multimodal_meta(spark, sf_dir):
     return multimodal.decode_image_meta(binary)
 
 
+_BLOBS = "doc_id long, content binary"
+
+
+def _md5_pngs(spark, sf_dir, w: int, h: int, upscale_odd: bool = False):
+    """One w x h RGB PNG per doc whose pixel (x, y) is the first
+    md5("{seed},{x},{y}") byte on all channels, seed = doc_id — the
+    closed-form pixel grid the image oracles replay in SQL. With
+    `upscale_odd`, an odd doc gets the previous even doc's grid at a
+    2x nearest-neighbor upscale (a planted near-duplicate)."""
+    import hashlib
+
+    import numpy as np
+
+    from fossil_spark.operators import multimodal as mm, per_row
+
+    def gen(did):
+        seed = did - did % 2 if upscale_odd else did
+        px = np.empty((h, w, 3), np.uint8)
+        for y in range(h):
+            for x in range(w):
+                px[y, x, :] = int(
+                    hashlib.md5(f"{seed},{x},{y}".encode()).hexdigest()[:2], 16
+                )
+        if upscale_odd and did % 2:
+            px = px.repeat(2, axis=0).repeat(2, axis=1)
+        return [(did, mm.encode_png(px))]
+
+    return per_row(_docs(spark, sf_dir), ["doc_id"], gen, _BLOBS)
+
+
 def _multimodal_frames(spark, sf_dir):
     """Real video-frame pixel extraction (SURVEY §2 E11, last stub
     closed): deterministic JPEG-in-MP4 blobs are synthesized per doc
@@ -1391,26 +1421,20 @@ def _multimodal_frames(spark, sf_dir):
     counts, true dimensions); pixel-accuracy is pinned in
     tests/test_multimodal.py (lossy means aren't SQL-reproducible)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from fossil_spark.operators import multimodal as mm
+    from fossil_spark.operators import multimodal as mm, per_row
 
-    docs = _docs(spark, sf_dir).select("doc_id").where(F.col("doc_id") < 200)
+    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 200)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                n = 1 + int(did) % 4
-                frames = [
-                    np.full((16, 16, 3), (int(did) * 37 + i * 11) % 256, np.uint8)
-                    for i in range(n)
-                ]
-                rows.append((int(did), mm.encode_mjpeg_mp4(frames, quality=92)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def gen(did):
+        frames = [
+            np.full((16, 16, 3), (did * 37 + i * 11) % 256, np.uint8)
+            for i in range(1 + did % 4)
+        ]
+        return [(did, mm.encode_mjpeg_mp4(frames, quality=92))]
 
-    videos = docs.mapInPandas(gen, "doc_id long, content binary")
+    videos = per_row(docs, ["doc_id"], gen, _BLOBS)
     fr = mm.extract_video_frames(videos, every_n=1)
     return fr.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_frames"),
@@ -1430,33 +1454,9 @@ def _multimodal_phash(spark, sf_dir):
     end-to-end verifies PNG encode -> decode -> grayscale -> gradient
     bits -> hex packing; pooling on larger images is unit-pinned
     (test_multimodal)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     from fossil_spark.operators import multimodal as mm
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                px = np.empty((8, 9, 3), np.uint8)
-                for y in range(8):
-                    for x in range(9):
-                        px[y, x, :] = int(
-                            hashlib.md5(
-                                f"{int(did)},{x},{y}".encode()
-                            ).hexdigest()[:2],
-                            16,
-                        )
-                rows.append((int(did), mm.encode_png(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    imgs = docs.mapInPandas(gen, "doc_id long, content binary")
-    return mm.image_phash(imgs)
+    return mm.image_phash(_md5_pngs(spark, sf_dir, 9, 8))
 
 
 def _multimodal_phash_pairs(spark, sf_dir):
@@ -1466,35 +1466,9 @@ def _multimodal_phash_pairs(spark, sf_dir):
     pair is a planted near-dup; phash_pairs finds them via the banded
     Hamming join. Full oracle — hashes, band join, and
     bit_count(xor) Hamming all replayed in SQL."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     from fossil_spark.operators import multimodal as mm
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                base = int(did) - int(did) % 2
-                px = np.empty((8, 9, 3), np.uint8)
-                for y in range(8):
-                    for x in range(9):
-                        px[y, x, :] = int(
-                            hashlib.md5(
-                                f"{base},{x},{y}".encode()
-                            ).hexdigest()[:2],
-                            16,
-                        )
-                if int(did) % 2:
-                    px = px.repeat(2, axis=0).repeat(2, axis=1)
-                rows.append((int(did), mm.encode_png(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    imgs = docs.mapInPandas(gen, "doc_id long, content binary")
+    imgs = _md5_pngs(spark, sf_dir, 9, 8, upscale_odd=True)
     # NOT memoized (r13, measured): persisting this pair table turns
     # the banded-Hamming join's AQE broadcast into a cached-plan
     # sort-merge build — 27 s vs 2.3 s. groups' connected_components
@@ -1529,30 +1503,25 @@ def _multimodal_audio(spark, sf_dir):
     import wave
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from fossil_spark.operators import multimodal as mm
+    from fossil_spark.operators import multimodal as mm, per_row
 
-    docs = _docs(spark, sf_dir).select("doc_id").where(F.col("doc_id") < 300)
+    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 300)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                f = 100.0 + 100.0 * (int(did) % 20)
-                t = np.arange(2000) / 8000.0
-                pcm = (np.sin(2 * np.pi * f * t) * 12000).astype(np.int16)
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wv:
-                    wv.setnchannels(1)
-                    wv.setsampwidth(2)
-                    wv.setframerate(8000)
-                    wv.writeframes(pcm.tobytes())
-                rows.append((int(did), buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def gen(did):
+        f = 100.0 + 100.0 * (did % 20)
+        t = np.arange(2000) / 8000.0
+        pcm = (np.sin(2 * np.pi * f * t) * 12000).astype(np.int16)
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as wv:
+            wv.setnchannels(1)
+            wv.setsampwidth(2)
+            wv.setframerate(8000)
+            wv.writeframes(pcm.tobytes())
+        return [(did, buf.getvalue())]
 
-    wavs = docs.mapInPandas(gen, "doc_id long, content binary")
+    wavs = per_row(docs, ["doc_id"], gen, _BLOBS)
     feats = mm.audio_features(wavs)
     freq = F.lit(100.0) + F.lit(100.0) * (F.col("doc_id") % 20).cast("double")
     return feats.select(
@@ -2070,33 +2039,9 @@ def _multimodal_image_entropy(spark, sf_dir):
     ((3v)//3 = v), so the oracle rebuilds the histogram closed-form
     and replays the sequential entropy fold (ordered list_reduce).
     End-to-end verifies PNG encode -> decode -> histogram -> entropy."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     from fossil_spark.operators import multimodal as mm
 
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                px = np.empty((16, 16, 3), np.uint8)
-                for y in range(16):
-                    for x in range(16):
-                        px[y, x, :] = int(
-                            hashlib.md5(
-                                f"{int(did)},{x},{y}".encode()
-                            ).hexdigest()[:2],
-                            16,
-                        )
-                rows.append((int(did), mm.encode_png(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
-
-    imgs = docs.mapInPandas(gen, "doc_id long, content binary")
-    return mm.image_entropy(imgs)
+    return mm.image_entropy(_md5_pngs(spark, sf_dir, 16, 16))
 
 
 def _multimodal_resize(spark, sf_dir):
@@ -2107,56 +2052,23 @@ def _multimodal_resize(spark, sf_dir):
     2x2 block value is floor((a+b+c+d)/4) of known md5 bytes, so the
     oracle rebuilds every thumbnail pixel closed-form — verifying
     decode -> pool -> PNG encode -> decode, byte-exactly."""
-    import hashlib
     import math
 
     import numpy as np
-    import pandas as pd
 
-    from fossil_spark.operators import multimodal as mm
+    from fossil_spark.operators import multimodal as mm, per_row
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    resized = mm.resize_images(_md5_pngs(spark, sf_dir, 16, 16), max_side=8)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                px = np.empty((16, 16, 3), np.uint8)
-                for y in range(16):
-                    for x in range(16):
-                        px[y, x, :] = int(
-                            hashlib.md5(
-                                f"{int(did)},{x},{y}".encode()
-                            ).hexdigest()[:2],
-                            16,
-                        )
-                rows.append((int(did), mm.encode_png(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def measure(rid, w, h, tw, th, data):
+        _w2, _h2, _mode, px = mm.decode_image(bytes(data))
+        t = float(px.astype(np.int64).sum())
+        mean_px = math.floor(t / 192.0 * 1000000.0 + 0.5) / 1000000.0
+        return [(rid, w, h, tw, th, mean_px)]
 
-    imgs = docs.mapInPandas(gen, "doc_id long, content binary")
-    resized = mm.resize_images(imgs, max_side=8)
-
-    def measure(batches):
-        for pdf in batches:
-            rows = []
-            for rid, w, h, tw, th, data in zip(
-                pdf["doc_id"], pdf["width"], pdf["height"],
-                pdf["target_width"], pdf["target_height"], pdf["resized"],
-            ):
-                _w2, _h2, _mode, px = mm.decode_image(bytes(data))
-                t = float(px.astype(np.int64).sum())
-                mean_px = (
-                    math.floor(t / 192.0 * 1000000.0 + 0.5) / 1000000.0
-                )
-                rows.append((int(rid), int(w), int(h), int(tw), int(th),
-                             mean_px))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "target_width",
-                "target_height", "mean_resized",
-            ])
-
-    return resized.mapInPandas(
-        measure,
+    cols = ["doc_id", "width", "height", "target_width", "target_height"]
+    return per_row(
+        resized, [*cols, "resized"], measure,
         "doc_id long, width int, height int, target_width int,"
         " target_height int, mean_resized double",
     )

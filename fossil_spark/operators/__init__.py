@@ -26,3 +26,27 @@ def fixed_rounds_guard(op: str, rounds: int, limit: int = 12) -> None:
             f"`max_rounds` explicitly only if you accept the plan "
             f"cost."
         )
+
+
+def per_row(df, cols: list[str], fn, schema):
+    """The one row-wise pandas boundary: selects `cols`, calls
+    `fn(*values)` once per input row, and emits one pandas frame per
+    Arrow batch holding every row `fn` returned (an iterable of output
+    tuples: none, one or many per input row) under the column names
+    of `schema` (a StructType or DDL string). Per-key sequential work
+    goes through timeseries._per_key instead."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    names = (StructType.fromDDL(schema) if isinstance(schema, str)
+             else schema).names
+
+    def run(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for row in pdf.itertuples(index=False, name=None)
+                 for out in fn(*row)],
+                columns=names,
+            )
+
+    return df.select(*cols).mapInPandas(run, schema)

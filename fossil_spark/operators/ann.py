@@ -17,8 +17,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -98,15 +96,15 @@ def _hof_norm_sql(a: str) -> str:
     return f"SQRT(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
-def _cosine_sql(a: str, b: str, dim: int | None = None) -> str:
+def _cosine_sql(a: str, b: str) -> str:
     return (
         f"{_hof_dot_sql(a, b)}"
         f" / ({_hof_norm_sql(a)} * {_hof_norm_sql(b)})"
     )
 
 
-def _cosine_expr(a: str, b: str, dim: int | None = None) -> Column:
-    return F.expr(_cosine_sql(a, b, dim))
+def _cosine_expr(a: str, b: str) -> Column:
+    return F.expr(_cosine_sql(a, b))
 
 
 def _l2_sql(a: str, b: str, dim: int) -> str:
@@ -115,6 +113,11 @@ def _l2_sql(a: str, b: str, dim: int) -> str:
             [f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])" for i in range(dim)]
         )
     )
+
+
+# the per-group score grid of _cosine_pairs_arrow is chunked along the
+# corpus axis to at most this many float64 cells (32 MB)
+_ARROW_PAIR_CELLS = 4_000_000
 
 
 def _cosine_pairs_arrow(
@@ -129,8 +132,8 @@ def _cosine_pairs_arrow(
     hashes into defaultParallelism buckets, the query set replicates
     into every bucket, and each (corpus-bucket x all-queries) group
     scores in numpy. Returns (query_id, id, __sim) — UNROUNDED and
-    with self-pairs still present, so the caller applies the exact
-    same filter/round/rank the HOF path does.
+    with self-pairs still present, so _cosine_topk_arrow applies the
+    exact same filter/round/rank the HOF path does.
 
     IEEE parity is the whole design (the _matrix_profile_arrow rule):
     the dim axis runs as an explicit t-loop (`acc = acc + q_t * c_t`,
@@ -142,26 +145,25 @@ def _cosine_pairs_arrow(
     both engines (and the DuckDB oracle) share one rounding
     semantic.
 
-    Vector hygiene: this engine requires clean fixed-width vectors.
-    Null vectors are filtered in the Spark plan; when `dim` is given,
-    wrong-width vectors are too; without `dim`, rows whose width
-    differs from the group's first corpus row are dropped in the
-    worker. (The HOF path instead yields a null score that the rank
-    filter discards — same surviving rows on clean data, and a
-    deterministic drop instead of a worker crash on malformed rows.)
+    Vector hygiene: this engine requires clean fixed-width vectors,
+    and both sides are filtered to them in the Spark plan: null
+    vectors are dropped, and so is every vector whose width is not
+    `dim` — or, without `dim`, not the width of the corpus vector
+    with the smallest id (a one-row aggregate joined into both sides,
+    so the kept rows never depend on partitioning or row order). (The
+    HOF path instead yields a null score that the rank filter
+    discards — same surviving rows on clean data.)
 
     Memory bound (r13 verdict #6): the per-group score grid is
     chunked along the corpus axis so no intermediate exceeds
-    ~SPARK_GRAFT_ARROW_PAIR_CELLS float64 cells (default 4M = 32 MB),
-    whatever |corpus|/defaultParallelism grows to — chunking the
-    corpus axis leaves every per-pair fold untouched, so scores stay
+    ~_ARROW_PAIR_CELLS float64 cells, whatever
+    |corpus|/defaultParallelism grows to — chunking the corpus axis
+    leaves every per-pair fold untouched, so scores stay
     bit-identical."""
     import numpy as np
     import pandas as pd
 
-    max_cells = int(
-        os.environ.get("SPARK_GRAFT_ARROW_PAIR_CELLS", "4000000")
-    )
+    max_cells = _ARROW_PAIR_CELLS  # read here, on the Spark driver
     spark = corpus.sparkSession
     nb = max(int(spark.sparkContext.defaultParallelism), 1)
     c = corpus.select(
@@ -174,6 +176,12 @@ def _cosine_pairs_arrow(
     if dim:
         c = c.filter(F.size("__cv") == dim)
         q = q.filter(F.size("__qv") == dim)
+    else:
+        width = broadcast(
+            c.agg(F.min_by(F.size("__cv"), F.col(id_col)).alias("__w"))
+        )
+        c = c.join(width, F.size("__cv") == F.col("__w")).drop("__w")
+        q = q.join(width, F.size("__qv") == F.col("__w")).drop("__w")
     c = c.withColumn(
         "__b", F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).cast("int")
     )
@@ -196,12 +204,8 @@ def _cosine_pairs_arrow(
 
         if not len(cpdf) or not len(qpdf):
             return empty()
-        width = len(cpdf["__cv"].iloc[0])
-        cpdf = cpdf[cpdf["__cv"].str.len() == width]
-        qpdf = qpdf[qpdf["__qv"].str.len() == width]
-        if not len(cpdf) or not len(qpdf):
-            return empty()
         Q = np.array(qpdf["__qv"].tolist(), dtype=np.float64)
+        width = Q.shape[1]
         qn = np.zeros(len(Q))
         for t in range(width):
             qn = qn + Q[:, t] * Q[:, t]
@@ -240,6 +244,19 @@ def _cosine_pairs_arrow(
     )
 
 
+def _hof_cosine(c: DataFrame, q: DataFrame, dim: int | None):
+    """The broadcast HOF scorer over (__cv, __qv) shared by cosine_topk
+    and filtered_topk; `q` comes broadcast. With `dim`, each side's
+    norm hoists out of the pair loop: computed once per ROW (not per
+    pair), bitwise-identical scores — measured 2.6 -> 1.7 s on the
+    1M-pair scan at sf0.1. Returns (c, q, sim)."""
+    if not dim:
+        return c, q, cosine(F.col("__qv"), F.col("__cv"))
+    c = c.withColumn("__cn", F.expr(_hof_norm_sql("__cv")))
+    q = broadcast(q.withColumn("__qn", F.expr(_hof_norm_sql("__qv"))))
+    return c, q, F.expr(f"{_hof_dot_sql('__qv', '__cv')} / (__qn * __cn)")
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -248,33 +265,14 @@ def cosine_topk(
     vec_col: str = "embedding",
     round_to: int = 6,
     dim: int | None = None,
-    engine: str = "hof",
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector (self-matches
     excluded). Scores are rounded so ranking ties break on id
-    deterministically regardless of float summation order. Pass `dim`
-    when the vector width is known statically: under engine="hof" the
-    per-row norms hoist out of the pair loop as codegen arithmetic
-    (bitwise-identical fold order); under engine="arrow" it becomes
-    the clean-width pre-filter (size(vec) = dim) — it does NOT change
-    the arrow compute path, which scores the pair grid in numpy
-    behind one cogrouped Arrow boundary (bit-identical by the
-    explicit-fold rule; see _cosine_pairs_arrow) — the right call for
-    LARGE query sets, where the interpreted HOF fold pays
-    JVM-interpreter cost per pair."""
-    if engine not in ("hof", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if engine == "arrow":
-        scored = (
-            _cosine_pairs_arrow(corpus, queries, id_col, vec_col, dim=dim)
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select(
-                "query_id",
-                id_col,
-                F.round(F.col("__sim"), round_to).alias("cos_sim"),
-            )
-        )
-        return _rank_topk(scored, k, id_col)
+    deterministically regardless of float summation order. The query
+    set broadcasts and every pair scores as a JVM higher-order-function
+    fold; pass `dim` when the vector width is known statically, and
+    the per-row norms hoist out of the pair loop as codegen arithmetic
+    (bitwise-identical fold order)."""
     q = broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -284,15 +282,7 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
     )
-    if dim:
-        # hoist each side's norm out of the pair loop: computed once
-        # per ROW (not per pair), bitwise-identical scores — measured
-        # 2.6 -> 1.7 s on the 1M-pair scan at sf0.1
-        c = c.withColumn("__cn", F.expr(_hof_norm_sql("__cv")))
-        q = broadcast(q.withColumn("__qn", F.expr(_hof_norm_sql("__qv"))))
-        sim = F.expr(f"{_hof_dot_sql('__qv', '__cv')} / (__qn * __cn)")
-    else:
-        sim = cosine(F.col("__qv"), F.col("__cv"))
+    c, q, sim = _hof_cosine(c, q, dim)
     scored = (
         c.crossJoin(q)
         .filter(F.col(id_col) != F.col("query_id"))
@@ -300,6 +290,32 @@ def cosine_topk(
             "query_id",
             id_col,
             F.round(sim, round_to).alias("cos_sim"),
+        )
+    )
+    return _rank_topk(scored, k, id_col)
+
+
+def _cosine_topk_arrow(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_to: int = 6,
+    dim: int | None = None,
+) -> DataFrame:
+    """cosine_topk's rows, scored by the cogrouped numpy pair grid
+    (_cosine_pairs_arrow, bit-identical to the HOF fold) — the right
+    call for LARGE query sets, where the interpreted HOF fold pays
+    JVM-interpreter cost per pair. `dim` is the clean-width vector
+    pre-filter here, not codegen unrolling."""
+    scored = (
+        _cosine_pairs_arrow(corpus, queries, id_col, vec_col, dim=dim)
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            id_col,
+            F.round(F.col("__sim"), round_to).alias("cos_sim"),
         )
     )
     return _rank_topk(scored, k, id_col)
@@ -381,12 +397,7 @@ def filtered_topk(
         F.col(filter_col),
         F.col(vec_col).cast("array<double>").alias("__cv"),
     )
-    if dim:
-        c = c.withColumn("__cn", F.expr(_hof_norm_sql("__cv")))
-        q = broadcast(q.withColumn("__qn", F.expr(_hof_norm_sql("__qv"))))
-        sim = F.expr(f"{_hof_dot_sql('__qv', '__cv')} / (__qn * __cn)")
-    else:
-        sim = cosine(F.col("__qv"), F.col("__cv"))
+    c, q, sim = _hof_cosine(c, q, dim)
     scored = (
         c.join(q, c[filter_col] == q["__ql"])
         .filter(F.col(id_col) != F.col("query_id"))
@@ -505,7 +516,7 @@ def ivf_ann(
         if dim:
             ranked = F.expr(
                 "slice(array_sort(transform(__cents, c -> named_struct("
-                f"'negcos', -round({_cosine_sql(vcol, 'c.vec', dim)}, 9),"
+                f"'negcos', -round({_cosine_sql(vcol, 'c.vec')}, 9),"
                 " 'list_id', c.list_id"
                 f"))), 1, {int(n)})"
             )
@@ -542,7 +553,7 @@ def ivf_ann(
         )
     )
     sim = (
-        _cosine_expr("__qv", "__cv", dim)
+        _cosine_expr("__qv", "__cv")
         if dim
         else cosine(F.col("__qv"), F.col("__cv"))
     )
@@ -610,7 +621,7 @@ def lsh_ann(
     scored = candidates.select(
         "query_id",
         id_col,
-        F.round(_cosine_expr("__qv", "__cv", dim), round_to).alias("cos_sim"),
+        F.round(_cosine_expr("__qv", "__cv"), round_to).alias("cos_sim"),
     )
     from pyspark.sql import Window
 
@@ -1478,7 +1489,6 @@ def knn_classify(
     vec_col: str = "embedding",
     label_col: str = "label",
     dim: int | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Leave-one-out kNN label audit: predict each probe vector's
     label by the majority vote of its k exact cosine neighbors
@@ -1490,19 +1500,18 @@ def knn_classify(
     The probe set is the first `n_queries` ids — FIXED, so the exact
     brute-force pass stays |probes| x corpus at any scale (the
     ann_bruteforce boundary); votes tie-break on the smallest label.
-    Under the default engine="arrow", `dim` acts as the clean-width
-    vector pre-filter (size(vec) = dim), NOT as codegen unrolling —
-    see cosine_topk. Returns (label, n_queries, n_correct,
-    accuracy)."""
+    The neighbors come from the Arrow pair grid (_cosine_topk_arrow),
+    so `dim` acts as the clean-width vector pre-filter (size(vec) =
+    dim), NOT as codegen unrolling. Returns (label, n_queries,
+    n_correct, accuracy)."""
     probes = embeddings.filter(F.col(id_col) < n_queries)
     # the |probes| here is 60x the retrieval audits' (500 vs 8), so
     # this is the suite's one LARGE brute-force pair grid — the
-    # Arrow engine (bit-identical; _cosine_pairs_arrow) scores it in
+    # Arrow pair grid (bit-identical; _cosine_pairs_arrow) scores it in
     # numpy instead of paying the interpreted HOF fold per pair:
     # 8.4 s cold / 3.3 s warm -> ~1.2 s at sf0.1 (guide §4.2)
-    nb = cosine_topk(
+    nb = _cosine_topk_arrow(
         embeddings, probes, k=k, id_col=id_col, vec_col=vec_col, dim=dim,
-        engine=engine,
     )
     nb_lab = nb.join(
         embeddings.select(F.col(id_col), F.col(label_col).alias("__nl")),
@@ -2006,7 +2015,7 @@ def two_stage_recall(
         F.col(vec_col).cast("array<double>").alias("__qv"),
     )
     sim = (
-        _cosine_expr("__qv", "__cv", vec_dim)
+        _cosine_expr("__qv", "__cv")
         if vec_dim
         else cosine(F.col("__qv"), F.col("__cv"))
     )

@@ -20,8 +20,13 @@ SOI/EOI scanning, then decoded with the T.81 baseline decoder
 (extract_video_frames). Only inter-frame codecs (h264, vp9, ...)
 keep labeled stub rows — real frame indices, null pixel stats.
 
-Scale shape: every operator is one mapInPandas pass (Arrow batches,
-no per-row UDFs), schemas fixed so downstream plans stay columnar.
+Scale shape: every decoder is one mapInPandas pass through the shared
+row harness (operators.per_row: Arrow batches, no per-row UDFs). The
+output is the input's id column, under its own name and type,
+followed by the operator's fixed fields (the *_SCHEMA constants), so
+downstream plans stay columnar. The five image decoders share one
+decode-or-fake step (_image_op): bytes that fail to decode, or whose
+decoded pixels an operator cannot use, get the _fake_decode row.
 """
 
 from __future__ import annotations
@@ -33,7 +38,6 @@ import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -41,8 +45,9 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from fossil_spark.operators import per_row
+
 IMAGE_META_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("n_bytes", LongType()),
     StructField("content_md5", StringType()),
     StructField("width", IntegerType()),
@@ -327,33 +332,51 @@ def _fake_decode(data: bytes) -> tuple[int, int, str]:
 
 # --- Spark operators -------------------------------------------------------
 
+_DECODE_ERRORS = (ValueError, IndexError, struct.error, zlib.error)
+
+
+def _per_blob(df: DataFrame, binary_col: str, id_col: str,
+              fields: StructType, fn) -> DataFrame:
+    """Every decoder's boundary: `fn(data)` gets each row's blob as
+    bytes (null -> b"") and returns that blob's output rows; each row
+    leaves behind the input's id, so the output schema is the id field
+    as given (name and type) followed by `fields`."""
+    def rows(rid, raw):
+        return [(rid, *out) for out in fn(b"" if raw is None else bytes(raw))]
+
+    schema = StructType([df.schema[id_col], *fields.fields])
+    return per_row(df, [id_col, binary_col], rows, schema)
+
+
+def _image_op(df: DataFrame, binary_col: str, id_col: str,
+              fields: StructType, row) -> DataFrame:
+    """The image decoders' shared decode-or-fake step: `row(data, w, h,
+    mode, px)` builds one output row from decode_image's result. Bytes
+    that do not decode, or whose pixels `row` rejects with a decode
+    error (an image smaller than the dHash grid), get `row` on
+    _fake_decode's dimensions with px None."""
+    def decode(data: bytes) -> list[tuple]:
+        try:
+            return [row(data, *decode_image(data))]
+        except _DECODE_ERRORS:
+            return [row(data, *_fake_decode(data), None)]
+
+    return _per_blob(df, binary_col, id_col, fields, decode)
+
+
 def decode_image_meta(
     df: DataFrame, binary_col: str = "content", id_col: str = "doc_id"
 ) -> DataFrame:
     """Extract typed metadata from an opaque image binary column.
     Real decode for PNG/BMP/PNM; deterministic fake for codec-required
-    bytes. mapInPandas: Arrow-batched, never a per-row UDF."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    w, h, mode, _ = decode_image(data)
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    w, h, mode = _fake_decode(data)
-                rows.append(
-                    (rid, len(data), hashlib.md5(data).hexdigest(), w, h, mode)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields]
-            )
+    bytes. Returns (id, n_bytes, content_md5, width, height, mode)."""
+    def meta(data, w, h, mode, _px):
+        return len(data), hashlib.md5(data).hexdigest(), w, h, mode
 
-    return df.select(id_col, binary_col).mapInPandas(process, IMAGE_META_SCHEMA)
+    return _image_op(df, binary_col, id_col, IMAGE_META_SCHEMA, meta)
 
 
 IMAGE_FEATURES_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("width", IntegerType()),
     StructField("height", IntegerType()),
     StructField("mode", StringType()),
@@ -368,27 +391,15 @@ def image_features(
 ) -> DataFrame:
     """Pixel statistics per image (decodable formats); codec-required
     bytes get null stats and decoded='fake'."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    w, h, mode, px = decode_image(data)
-                    rows.append((rid, w, h, mode,
-                                 float(px.mean()), float(px.std()), "real"))
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    w, h, mode = _fake_decode(data)
-                    rows.append((rid, w, h, mode, None, None, "fake"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields]
-            )
+    def stats(_data, w, h, mode, px):
+        if px is None:
+            return w, h, mode, None, None, "fake"
+        return w, h, mode, float(px.mean()), float(px.std()), "real"
 
-    return df.select(id_col, binary_col).mapInPandas(process, IMAGE_FEATURES_SCHEMA)
+    return _image_op(df, binary_col, id_col, IMAGE_FEATURES_SCHEMA, stats)
 
 
 RESIZE_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("width", IntegerType()),
     StructField("height", IntegerType()),
     StructField("target_width", IntegerType()),
@@ -414,32 +425,18 @@ def resize_images(
                 out[y, x] = px[ys[y]:ys[y + 1], xs[x]:xs[x + 1]].mean(axis=(0, 1))
         return out
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    w, h, _mode, px = decode_image(data)
-                    real = True
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    w, h, _mode = _fake_decode(data)
-                    real = False
-                scale = min(1.0, max_side / max(w, h))
-                tw, th = max(1, int(w * scale)), max(1, int(h * scale))
-                resized = None
-                if real:
-                    resized = encode_png(px if (tw, th) == (w, h) else _pool(px, tw, th))
-                rows.append((rid, w, h, tw, th, resized))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_SCHEMA.fields]
-            )
+    def thumb(_data, w, h, _mode, px):
+        scale = min(1.0, max_side / max(w, h))
+        tw, th = max(1, int(w * scale)), max(1, int(h * scale))
+        resized = None
+        if px is not None:
+            resized = encode_png(px if (tw, th) == (w, h) else _pool(px, tw, th))
+        return w, h, tw, th, resized
 
-    return df.select(id_col, binary_col).mapInPandas(process, RESIZE_SCHEMA)
+    return _image_op(df, binary_col, id_col, RESIZE_SCHEMA, thumb)
 
 
 AUDIO_META_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("n_bytes", LongType()),
     StructField("sample_rate", IntegerType()),
     StructField("n_channels", IntegerType()),
@@ -477,29 +474,20 @@ def decode_audio_meta(
 ) -> DataFrame:
     """Audio metadata + RMS loudness for 16-bit PCM WAV (stdlib wave)
     and FLAC (in-repo decoder). Other bytes yield null audio fields."""
+    def meta(data: bytes) -> list[tuple]:
+        try:
+            rate, nch, frames = _pcm_frames(data)
+            nf = frames.shape[0]
+            samples = frames.reshape(-1)
+            rms = float(np.sqrt(np.mean(samples.astype(np.float64) ** 2))) if len(samples) else 0.0
+            return [(len(data), rate, nch, nf, nf / rate, rms)]
+        except Exception:  # wave.Error and EOFError are not ValueErrors
+            return [(len(data), None, None, None, None, None)]
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    rate, nch, frames = _pcm_frames(data)
-                    nf = frames.shape[0]
-                    samples = frames.reshape(-1)
-                    rms = float(np.sqrt(np.mean(samples.astype(np.float64) ** 2))) if len(samples) else 0.0
-                    rows.append((rid, len(data), rate, nch, nf, nf / rate, rms))
-                except Exception:
-                    rows.append((rid, len(data), None, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_META_SCHEMA.fields]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(process, AUDIO_META_SCHEMA)
+    return _per_blob(df, binary_col, id_col, AUDIO_META_SCHEMA, meta)
 
 
 AUDIO_FEATURES_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("sample_rate", IntegerType()),
     StructField("n_samples", LongType()),
     StructField("duration_sec", DoubleType()),
@@ -546,33 +534,22 @@ def audio_features(
 ) -> DataFrame:
     """Audio FEATURE EXTRACTION (the training-pipeline step after
     decode): 16-bit PCM WAV → mono float signal → RMS / peak / ZCR /
-    spectral centroid / spectral rolloff, Arrow-batched via
-    mapInPandas. Completes the multimodal quartet (decode /
+    spectral centroid / spectral rolloff, Arrow-batched through the
+    row harness. Completes the multimodal quartet (decode /
     feature-extract / resize / frame-sample) for audio the way
     image_features does for images. Decodes 16-bit PCM WAV and FLAC
     (in-repo decoder); other bytes yield null features. Scale shape:
     embarrassingly parallel per row; batch size bounds memory (one
     decoded clip at a time per row)."""
+    def features(data: bytes) -> list[tuple]:
+        try:
+            rate, _nch, frames = _pcm_frames(data)
+            mono = frames.astype(np.float64).mean(axis=1) / 32768.0
+            return [_audio_feature_row(mono, rate)]
+        except Exception:  # wave.Error and EOFError are not ValueErrors
+            return [(None,) * 8]
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    rate, nch, frames = _pcm_frames(data)
-                    mono = frames.astype(np.float64).mean(axis=1) / 32768.0
-                    rows.append((rid, *_audio_feature_row(mono, rate)))
-                except Exception:
-                    rows.append((rid, None, None, None, None, None, None,
-                                 None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        process, AUDIO_FEATURES_SCHEMA
-    )
+    return _per_blob(df, binary_col, id_col, AUDIO_FEATURES_SCHEMA, features)
 
 
 # --- MP4 / ISO BMFF container metadata (public spec: ISO 14496-12) ---------
@@ -660,7 +637,6 @@ def parse_mp4_meta(data: bytes) -> dict:
 
 
 VIDEO_META_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("n_bytes", LongType()),
     StructField("brand", StringType()),
     StructField("duration_sec", DoubleType()),
@@ -679,26 +655,17 @@ def video_meta(
     """REAL container metadata for MP4/MOV (ISO BMFF box parse — no
     codec needed): brand, duration, video dims, frame count, codec
     fourcc. Non-BMFF bytes get parsed='fake' with null fields."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    m = parse_mp4_meta(data)
-                    rows.append((
-                        rid, len(data), m["brand"], m["duration_sec"],
-                        m["width"], m["height"], m["n_video_frames"],
-                        m["video_codec"], m["n_tracks"], "real",
-                    ))
-                except (ValueError, IndexError, struct.error):
-                    rows.append((rid, len(data), None, None, None, None,
-                                 None, None, None, "fake"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_META_SCHEMA.fields]
-            )
+    def meta(data: bytes) -> list[tuple]:
+        try:
+            m = parse_mp4_meta(data)
+        except (ValueError, IndexError, struct.error):
+            return [(len(data), None, None, None, None, None, None, None,
+                     "fake")]
+        return [(len(data), m["brand"], m["duration_sec"], m["width"],
+                 m["height"], m["n_video_frames"], m["video_codec"],
+                 m["n_tracks"], "real")]
 
-    return df.select(id_col, binary_col).mapInPandas(process, VIDEO_META_SCHEMA)
+    return _per_blob(df, binary_col, id_col, VIDEO_META_SCHEMA, meta)
 
 
 def parse_mp4_samples(data: bytes) -> tuple[str | None, list[tuple[int, int]]]:
@@ -849,7 +816,6 @@ _UNITY_MATRIX = struct.pack(
 )
 
 VIDEO_FRAMES_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("frame_idx", LongType()),
     StructField("width", IntegerType()),
     StructField("height", IntegerType()),
@@ -877,11 +843,12 @@ def extract_video_frames(
     pixel mean/std. Containers whose codec genuinely needs an external
     library (h264, vp9, ...) keep the labeled 'stub' rows: real frame
     indices from the sample table, null pixel stats. One Arrow-batched
-    mapInPandas pass; the per-row work is bounded by the blob, so
-    partitioning by doc keeps executors balanced at scale."""
+    mapInPandas pass (many rows per blob); the per-row work is bounded
+    by the blob, so partitioning by doc keeps executors balanced at
+    scale."""
     from fossil_spark.operators.jpeg import decode_jpeg
 
-    def frame_rows(rid, data: bytes):
+    def frame_rows(data: bytes):
         if data[:6] in (b"GIF87a", b"GIF89a"):
             # animated GIF: a codec-free video container — every
             # composed frame decodes to real pixels
@@ -891,7 +858,7 @@ def extract_video_frames(
                 w, h, frames = decode_gif(data)
                 for idx in range(0, len(frames), every_n):
                     a = frames[idx][1].astype(np.float64)
-                    yield (rid, idx, w, h, "RGB",
+                    yield (idx, w, h, "RGB",
                            float(a.mean()), float(a.std()), "real")
                 return
             except (ValueError, IndexError, struct.error):
@@ -910,7 +877,7 @@ def extract_video_frames(
             # keeps the explode shape testable (labeled stub)
             n = len(data) // 1024 + 1
             for idx in range(0, n, every_n):
-                yield (rid, idx, None, None, None, None, None, "stub")
+                yield (idx, None, None, None, None, None, "stub")
             return
         for idx in range(0, len(spans), every_n):
             off, size = spans[idx]
@@ -918,25 +885,14 @@ def extract_video_frames(
                 try:
                     w, h, mode, px = decode_jpeg(bytes(data[off:off + size]))
                     a = px.astype(np.float64)
-                    yield (rid, idx, w, h, mode,
+                    yield (idx, w, h, mode,
                            float(a.mean()), float(a.std()), "real")
                     continue
                 except (ValueError, IndexError, struct.error):
                     pass
-            yield (rid, idx, None, None, None, None, None, "stub")
+            yield (idx, None, None, None, None, None, "stub")
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                rows.extend(frame_rows(rid, bytes(rdata or b"")))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAMES_SCHEMA.fields]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        process, VIDEO_FRAMES_SCHEMA
-    )
+    return _per_blob(df, binary_col, id_col, VIDEO_FRAMES_SCHEMA, frame_rows)
 
 
 def frame_sample_stub(
@@ -982,7 +938,6 @@ def resize_stub(
 
 
 PHASH_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("width", IntegerType()),
     StructField("height", IntegerType()),
     StructField("dhash", StringType()),
@@ -1028,22 +983,12 @@ def image_phash(
     dedup_minhash. Arrow-batched mapInPandas like every decode path;
     codec-required or sub-grid bytes report decoded='fake' with a
     null hash. Returns (id, width, height, dhash, decoded)."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    w, h, _mode, px = decode_image(data)
-                    rows.append((rid, w, h, dhash_bits(px, hash_size), "real"))
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    w, h, _mode = _fake_decode(data)
-                    rows.append((rid, w, h, None, "fake"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PHASH_SCHEMA.fields]
-            )
+    def dhash(_data, w, h, _mode, px):
+        if px is None:
+            return w, h, None, "fake"
+        return w, h, dhash_bits(px, hash_size), "real"
 
-    return df.select(id_col, binary_col).mapInPandas(process, PHASH_SCHEMA)
+    return _image_op(df, binary_col, id_col, PHASH_SCHEMA, dhash)
 
 
 def phash_pairs(
@@ -1120,7 +1065,6 @@ def phash_pairs(
 
 
 IMAGE_ENTROPY_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
     StructField("width", IntegerType()),
     StructField("height", IntegerType()),
     StructField("n_pixels", LongType()),
@@ -1147,43 +1091,28 @@ def image_entropy(
     like every decode path; codec-bound bytes report decoded='fake'
     with null entropy. Returns (id, width, height, n_pixels,
     n_distinct_values, entropy_bits, decoded)."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, rdata in zip(pdf[id_col], pdf[binary_col]):
-                data = bytes(rdata) if rdata is not None else b""
-                try:
-                    w, h, _mode, px = decode_image(data)
-                    if px.ndim == 3:
-                        gray = (
-                            px[:, :, 0].astype(np.int64)
-                            + px[:, :, 1].astype(np.int64)
-                            + px[:, :, 2].astype(np.int64)
-                        ) // 3
-                    else:
-                        gray = px.astype(np.int64)
-                    counts = np.bincount(gray.ravel(), minlength=256)
-                    n = int(counts.sum())
-                    # sequential fold in bin order (not numpy's pairwise
-                    # reduction) + floor-half-up: the oracle replays the
-                    # same fold via an ORDERED list_reduce
-                    ent = 0.0
-                    for c in counts:
-                        if c > 0:
-                            pv = c / n
-                            ent = ent - pv * math.log2(pv)
-                    ent6 = math.floor(ent * 1e6 + 0.5) / 1e6
-                    rows.append(
-                        (rid, w, h, n, int((counts > 0).sum()),
-                         ent6, "real")
-                    )
-                except (ValueError, IndexError, struct.error, zlib.error):
-                    w, h, _mode = _fake_decode(data)
-                    rows.append((rid, w, h, None, None, None, "fake"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_ENTROPY_SCHEMA.fields]
-            )
+    def entropy(_data, w, h, _mode, px):
+        if px is None:
+            return w, h, None, None, None, "fake"
+        if px.ndim == 3:
+            gray = (
+                px[:, :, 0].astype(np.int64)
+                + px[:, :, 1].astype(np.int64)
+                + px[:, :, 2].astype(np.int64)
+            ) // 3
+        else:
+            gray = px.astype(np.int64)
+        counts = np.bincount(gray.ravel(), minlength=256)
+        n = int(counts.sum())
+        # sequential fold in bin order (not numpy's pairwise
+        # reduction) + floor-half-up: the oracle replays the same
+        # fold via an ORDERED list_reduce
+        ent = 0.0
+        for c in counts:
+            if c > 0:
+                pv = c / n
+                ent = ent - pv * math.log2(pv)
+        ent6 = math.floor(ent * 1e6 + 0.5) / 1e6
+        return w, h, n, int((counts > 0).sum()), ent6, "real"
 
-    return df.select(id_col, binary_col).mapInPandas(
-        process, IMAGE_ENTROPY_SCHEMA
-    )
+    return _image_op(df, binary_col, id_col, IMAGE_ENTROPY_SCHEMA, entropy)

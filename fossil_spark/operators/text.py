@@ -328,37 +328,31 @@ def compression_ratio(
     signal Gopher/RefinedWeb filter on: highly repetitive or
     templated text compresses far below natural prose (~0.3-0.5),
     random-ish strings approach 1.0. Python by nature (zlib), so an
-    Arrow-batched mapInPandas pass — a sanctioned boundary like the
+    Arrow-batched mapInPandas pass through the row harness like the
     media decoders; deterministic for a fixed zlib level. Returns
-    (id, n_bytes, n_compressed, ratio)."""
+    (id, n_bytes, n_compressed, ratio), the id column as given."""
     import zlib
-
-    import pandas as pd
 
     from pyspark.sql.types import (
         DoubleType, LongType, StructField, StructType,
     )
 
+    from fossil_spark.operators import per_row
+
     schema = StructType([
-        StructField(id_col, LongType()),
+        df.schema[id_col],
         StructField("n_bytes", LongType()),
         StructField("n_compressed", LongType()),
         StructField("ratio", DoubleType()),
     ])
 
-    def process(batches):
-        for pdf in batches:
-            rows = []
-            for rid, txt in zip(pdf[id_col], pdf[text_col]):
-                raw = (txt or "").encode("utf-8")
-                comp = zlib.compress(raw, level)
-                rows.append(
-                    (rid, len(raw), len(comp),
-                     round(len(comp) / len(raw), 6) if raw else None)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def ratio(rid, txt):
+        raw = (txt or "").encode("utf-8")
+        comp = zlib.compress(raw, level)
+        return [(rid, len(raw), len(comp),
+                 round(len(comp) / len(raw), 6) if raw else None)]
 
-    return df.select(id_col, text_col).mapInPandas(process, schema)
+    return per_row(df, [id_col, text_col], ratio, schema)
 
 
 def _bigram_rows(
@@ -1247,6 +1241,10 @@ def pack_documents(
     within a few percent of global greedy for n_buckets << n_docs."""
     import pandas as pd
 
+    from pyspark.sql.types import (
+        IntegerType, LongType, StructField, StructType,
+    )
+
     spark = df.sparkSession
     if n_buckets is None:
         n_buckets = spark.sparkContext.defaultParallelism
@@ -1277,7 +1275,12 @@ def pack_documents(
         pdf["pack_seq"] = assign
         return pdf
 
-    schema = "doc_id long, n_tokens int, bucket long, pack_seq long"
+    schema = StructType([
+        src.schema[id_col],
+        StructField("n_tokens", IntegerType()),
+        StructField("bucket", LongType()),
+        StructField("pack_seq", LongType()),
+    ])
     packed = src.groupBy("bucket").applyInPandas(lambda pdf: pack(pdf), schema)
     return packed.select(
         id_col,

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
+from fossil_spark.operators.timeseries import _per_key
+
 CUSUM_SCHEMA = StructType([
     StructField("topic", StringType()),
     StructField("n_seen", LongType()),
@@ -95,7 +97,6 @@ def cusum_replay(
     sort_cols = [time_col] + list(order_tiebreak or [])
 
     def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
         sp, sn, n = _fold_cusum(
             pdf["__z"].to_numpy(dtype=float), 0.0, 0.0, 0, kk
         )
@@ -107,7 +108,7 @@ def cusum_replay(
             "alarm": [(sp > hh) or (sn > hh)],
         })
 
-    return j.groupBy("topic").applyInPandas(replay, CUSUM_SCHEMA)
+    return _per_key(j, ["topic"], sort_cols, replay, CUSUM_SCHEMA)
 
 
 def streaming_cusum(

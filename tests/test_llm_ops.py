@@ -433,6 +433,24 @@ def test_pack_documents_exact_assignment(spark):
         5: "0-2",
     }
 
+
+def test_pack_documents_keeps_id_column(spark):
+    """Any id column packs, under its own name and type, exactly like
+    `doc_id long` does."""
+    rows = [(i, "w " * (i % 7 + 1)) for i in range(1, 30)]
+    df = spark.createDataFrame(rows, "id int, text string")
+    got = text.pack_documents(df, max_tokens=10, n_buckets=3, id_col="id")
+    assert got.schema["id"].dataType.simpleString() == "int"
+    want = text.pack_documents(
+        df.withColumnRenamed("id", "doc_id").selectExpr(
+            "CAST(doc_id AS long) AS doc_id", "text"
+        ),
+        max_tokens=10, n_buckets=3,
+    )
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+
+
 def test_stratified_sample_determinism_and_rates(docs):
     out1 = text.stratified_sample(docs, {"en": 0.5}, "lang", default_fraction=1.0)
     out2 = text.stratified_sample(docs, {"en": 0.5}, "lang", default_fraction=1.0)

@@ -475,3 +475,75 @@ def test_image_entropy_flat_vs_noise(spark):
     assert out[0]["n_distinct_values"] == 1
     assert out[1]["entropy_bits"] == 8.0
     assert out[2]["decoded"] == "fake" and out[2]["entropy_bits"] is None
+
+
+# --------------------------------------------------------------------------
+# every operator on the row harness keeps the input's id column
+# --------------------------------------------------------------------------
+
+_PNG = mm.encode_png(_gradient(16, 20, 3))
+_WAV = _wav_bytes()[0]
+_MP4 = mm.encode_mjpeg_mp4(
+    [np.full((16, 16, 3), v, np.uint8) for v in (40, 200)], quality=92
+)
+
+
+def _compression_ratio(df, id_col="doc_id"):
+    from fossil_spark.operators import text
+
+    return text.compression_ratio(df, text_col="content", id_col=id_col)
+
+
+PORTED = {
+    "decode_image_meta": (mm.decode_image_meta, _PNG),
+    "image_features": (mm.image_features, _PNG),
+    "resize_images": (lambda df, **kw: mm.resize_images(df, 8, **kw), _PNG),
+    "image_phash": (mm.image_phash, _PNG),
+    "image_entropy": (mm.image_entropy, _PNG),
+    "decode_audio_meta": (mm.decode_audio_meta, _WAV),
+    "audio_features": (mm.audio_features, _WAV),
+    "video_meta": (mm.video_meta, _MP4),
+    "extract_video_frames": (mm.extract_video_frames, _MP4),
+    "compression_ratio": (_compression_ratio, "natural prose, " * 20),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PORTED))
+def test_ported_operator_keeps_id_column(spark, name):
+    """A null, an empty, a garbage and a real blob under `id int`: the
+    output leads with `id int` and otherwise matches the `doc_id long`
+    run row for row; an empty input gives an empty output of the same
+    schema."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType
+
+    op, real = PORTED[name]
+    garbage = "garbage" if isinstance(real, str) else b"\x00garbage\xff"
+    kind = "string" if isinstance(real, str) else "binary"
+    df = spark.createDataFrame(
+        list(enumerate([None, real[:0], garbage, real], 1)),
+        f"id int, content {kind}",
+    )
+    got = op(df, id_col="id")
+    want = op(df.select(F.col("id").cast("long").alias("doc_id"), "content"))
+    first = got.schema.fields[0]
+    assert (first.name, first.dataType) == ("id", IntegerType())
+    assert got.schema.fields[1:] == want.schema.fields[1:]
+    rows = sorted(map(tuple, got.collect()))
+    assert {r[0] for r in rows} == {1, 2, 3, 4}
+    assert rows == sorted(map(tuple, want.collect()))
+    empty = op(df.filter("id < 0"), id_col="id")
+    assert empty.schema == got.schema and empty.collect() == []
+
+
+def test_stub_wrappers_take_any_id_column(spark):
+    df = spark.createDataFrame(
+        [(1, _minimal_mp4()), (2, _PNG)], "id int, content binary"
+    )
+    frames = mm.frame_sample_stub(df, every_n=100, id_col="id")
+    assert frames.columns[0] == "id"
+    assert sorted(r.frame_idx for r in frames.collect() if r.id == 1) == \
+        [0, 100, 200]
+    sizes = {r.id: r for r in mm.resize_stub(df, 8, id_col="id").collect()}
+    assert (sizes[2].width, sizes[2].height) == (20, 16)
+    assert (sizes[2].target_width, sizes[2].target_height) == (8, 6)

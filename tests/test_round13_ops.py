@@ -753,11 +753,12 @@ def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
 
 
 def test_cosine_topk_engines_bit_identical(spark):
-    """r13: engine="arrow" (the cogrouped numpy pair grid behind
-    knn_classify's 500-probe scan) must return the exact rows of the
-    HOF path — same ids, same ranks, and bit-identical cos_sim. The
-    explicit t-loop fold in _cosine_pairs_arrow reproduces the HOF
-    fold order, so this holds bitwise, not just to tolerance."""
+    """r13: the Arrow pair grid (the cogrouped numpy scorer behind
+    knn_classify's 500-probe scan) must return the exact rows of
+    cosine_topk's HOF path — same ids, same ranks, and bit-identical
+    cos_sim. The explicit t-loop fold in _cosine_pairs_arrow
+    reproduces the HOF fold order, so this holds bitwise, not just to
+    tolerance."""
     import math
     import struct
 
@@ -776,18 +777,14 @@ def test_cosine_topk_engines_bit_identical(spark):
     )
     q = emb.filter("vec_id < 9")
 
-    def rows(engine, dim=None):
-        return sorted(
-            map(
-                tuple,
-                ann.cosine_topk(
-                    emb, q, k=4, dim=dim, engine=engine
-                ).collect(),
-            )
-        )
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
 
-    arrow = rows("arrow")
-    for variant in (rows("hof"), rows("hof", dim=6)):
+    arrow = rows(ann._cosine_topk_arrow(emb, q, k=4))
+    for variant in (
+        rows(ann.cosine_topk(emb, q, k=4)),
+        rows(ann.cosine_topk(emb, q, k=4, dim=6)),
+    ):
         assert len(arrow) == len(variant)
         for x, y in zip(arrow, variant):
             assert x[:2] == y[:2] and x[3] == y[3]

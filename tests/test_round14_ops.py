@@ -90,21 +90,21 @@ def test_cosine_topk_arrow_chunked_bit_identical(spark, monkeypatch):
             for r in df.collect()
         )
 
-    hof = rows(ann.cosine_topk(emb, q, k=5, dim=8, engine="hof"))
-    big = rows(ann.cosine_topk(emb, q, k=5, dim=8, engine="arrow"))
+    hof = rows(ann.cosine_topk(emb, q, k=5, dim=8))
+    big = rows(ann._cosine_topk_arrow(emb, q, k=5, dim=8))
     # force many tiny corpus chunks inside every cogroup
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_PAIR_CELLS", "7")
-    small = rows(ann.cosine_topk(emb, q, k=5, dim=8, engine="arrow"))
+    monkeypatch.setattr(ann, "_ARROW_PAIR_CELLS", 7)
+    small = rows(ann._cosine_topk_arrow(emb, q, k=5, dim=8))
     assert big == hof
     assert small == big
 
 
 def test_cosine_topk_arrow_drops_null_and_ragged(spark):
-    """Null and wrong-width vectors: the arrow engine must not crash
+    """Null and wrong-width vectors: the Arrow pair grid must not crash
     and must rank the clean rows exactly like a clean-only corpus.
     (The HOF path yields null scores for the malformed rows, which
-    the rank window sorts last — on clean data the engines agree;
-    this pins the arrow engine's documented drop semantics.)"""
+    the rank window sorts last — on clean data the two agree; this
+    pins the Arrow grid's documented drop semantics.)"""
     from fossil_spark.operators import ann
 
     clean = _emb(spark, n=20, dim=4)
@@ -122,9 +122,41 @@ def test_cosine_topk_arrow_drops_null_and_ragged(spark):
             for r in df.collect()
         )
 
-    want = rows(ann.cosine_topk(clean, q, k=4, dim=4, engine="arrow"))
-    got = rows(ann.cosine_topk(dirty, q, k=4, dim=4, engine="arrow"))
+    want = rows(ann._cosine_topk_arrow(clean, q, k=4, dim=4))
+    got = rows(ann._cosine_topk_arrow(dirty, q, k=4, dim=4))
     assert got == want
+
+
+def test_cosine_topk_arrow_width_from_smallest_id(spark):
+    """Without `dim`, the Arrow pair grid keeps the width of the corpus
+    vector with the smallest id: a ragged corpus ranks exactly like
+    its clean-only part under any partitioning, including when a
+    ragged row comes first in its partition."""
+    from fossil_spark.operators import ann
+
+    clean = _emb(spark, n=20, dim=4)
+    ragged = spark.createDataFrame(
+        [(100 + i, [1.0, float(i)]) for i in range(8)]
+        + [(200, [1.0, 2.0, 3.0, 4.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = clean.filter("vec_id < 3").unionByName(
+        ragged.filter("vec_id = 100")
+    )
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["vec_id"], r["cos_sim"], r["rank"])
+            for r in df.collect()
+        )
+
+    want = rows(ann._cosine_topk_arrow(clean, q, k=4))
+    assert {r[0] for r in want} == {0, 1, 2}
+    for dirty in (
+        ragged.unionByName(clean).repartition(1),
+        ragged.unionByName(clean).repartition(3, "vec_id"),
+    ):
+        assert rows(ann._cosine_topk_arrow(dirty, q, k=4)) == want
 
 
 # --------------------------------------------------------------------------
