@@ -605,7 +605,7 @@ def _ann_bruteforce(spark, sf_dir):
     emb = read_table(spark, sf_dir, "embeddings")
     # served from the session truth catalog: rank<=5 of the persisted
     # 10-truth is bitwise the 5-truth (deterministic tie-break)
-    return ann.topk_truth(emb, emb.filter("vec_id < 8"), k=5, dim=64)
+    return ann.topk_truth(emb, emb.filter("vec_id < 8"), k=5)
 
 
 def _ann_lsh(spark, sf_dir):
@@ -1334,7 +1334,7 @@ def _ann_ivf(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings")
     return ann.ivf_ann(
-        emb, emb.filter("vec_id < 8"), k=5, n_lists=16, n_probe=4, dim=64
+        emb, emb.filter("vec_id < 8"), k=5, n_lists=16, n_probe=4
     )
 
 
@@ -1688,9 +1688,9 @@ def _ann_recall_eval(spark, sf_dir):
     # tables. The IVF table is not memoized: a memo of it was never
     # read by another key (scripts/cold_probe.py traffic run).
     return ann.recall_eval(
-        ann.topk_truth(emb, q, k=5, dim=64),
+        ann.topk_truth(emb, q, k=5),
         {
-            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64),
+            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4),
             "lsh": memo(ann.lsh_ann(emb, q, dim=64, k=5)),
         },
         k=5,
@@ -1744,9 +1744,7 @@ def _ann_range_search(spark, sf_dir):
     from fossil_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann.range_search(
-        emb, emb.filter("vec_id < 8"), threshold=0.2, dim=64
-    )
+    return ann.range_search(emb, emb.filter("vec_id < 8"), threshold=0.2)
 
 
 def _embedding_centroid_drift(spark, sf_dir):
@@ -2021,7 +2019,7 @@ def _ann_recall_curve(spark, sf_dir):
     q = emb.filter("vec_id < 8")
     # the catalog materializes truth at k=10, so this is the SAME
     # persisted table recall_eval/ndcg read at k=5
-    truth = ann.topk_truth(emb, q, k=10, dim=64)
+    truth = ann.topk_truth(emb, q, k=10)
     cand = ann.lsh_ann(emb, q, dim=64, k=10)
     return ann.recall_curve(truth, cand, ks=[1, 3, 5, 10], method="lsh")
 
@@ -2129,7 +2127,7 @@ def _ann_index_agreement(spark, sf_dir):
     return ann.index_agreement(
         {
             "lsh": memo(ann.lsh_ann(emb, q, dim=64, k=5)),
-            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64),
+            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4),
         },
         k=5,
     )
@@ -2186,7 +2184,7 @@ def _ann_filtered(spark, sf_dir):
     from fossil_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann.filtered_topk(emb, emb.filter("vec_id < 8"), k=5, dim=64)
+    return ann.filtered_topk(emb, emb.filter("vec_id < 8"), k=5)
 
 
 def _ts_concurrency(spark, sf_dir):
@@ -2222,9 +2220,7 @@ def _embedding_trunc_recall(spark, sf_dir):
     from fossil_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann.truncation_recall(
-        emb, emb.filter("vec_id < 8"), (8, 16, 32), k=5, full_dim=64
-    )
+    return ann.truncation_recall(emb, emb.filter("vec_id < 8"), (8, 16, 32), k=5)
 
 
 def _agg_chi2(spark, sf_dir):
@@ -2429,9 +2425,7 @@ def _embedding_bq_recall(spark, sf_dir):
     from fossil_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann.bq_recall(
-        emb, emb.filter("vec_id < 8"), k=5, dim=64, vec_dim=64
-    )
+    return ann.bq_recall(emb, emb.filter("vec_id < 8"), k=5, dim=64)
 
 
 def _ts_sigma_clip(spark, sf_dir):
@@ -2465,8 +2459,7 @@ def _ann_two_stage(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings")
     return ann.two_stage_recall(
-        emb, emb.filter("vec_id < 8"), k=5, shortlist=20, dim=64,
-        vec_dim=64,
+        emb, emb.filter("vec_id < 8"), k=5, shortlist=20, dim=64
     )
 
 
@@ -2985,9 +2978,9 @@ def _ann_ndcg(spark, sf_dir):
     q = emb.filter("vec_id < 8")
     # identical catalog reads as _ann_recall_eval (truth, LSH)
     return ann.ndcg_eval(
-        ann.topk_truth(emb, q, k=5, dim=64),
+        ann.topk_truth(emb, q, k=5),
         {
-            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64),
+            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4),
             "lsh": memo(ann.lsh_ann(emb, q, dim=64, k=5)),
         },
         k=5,

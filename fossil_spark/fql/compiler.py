@@ -246,11 +246,21 @@ class _Plan:
     """Tracks the evolving DataFrame plus which columns hold the datum
     value(s) and what to call them in the final output."""
 
-    def __init__(self, df: DataFrame, value_cols: list[str], display: list[str], scalar: bool = False):
+    def __init__(self, df: DataFrame, value_cols: list[str],
+                 display: list[str] | None = None, scalar: bool = False):
         self.df = df
         self.value_cols = value_cols
+        if display is None:  # the input datum: 'value', or its columns
+            display = ["value"] if len(value_cols) == 1 else list(value_cols)
         self.display = display
         self.scalar = scalar  # True after reduce: no time/topic columns
+
+    def select(self, *keys: Column) -> DataFrame:
+        """The plan's output: `keys`, then the value columns under their
+        display names."""
+        return self.df.select(*keys, *[
+            F.col(c).alias(d) for c, d in zip(self.value_cols, self.display)
+        ])
 
 
 def _bind(args: list[str], value_cols: list[str]) -> dict[str, list[str]]:
@@ -346,25 +356,26 @@ def compile_query(
             .drop("__rn")
         )
 
-    plan = _Plan(df, list(value_cols), ["value"] if len(value_cols) == 1 else list(value_cols))
+    plan = _Plan(df, list(value_cols))
 
     # --- data pipeline ------------------------------------------------------
     for stage in q.pipeline:
         plan = _apply_stage(plan, stage, time_col, topic_col)
 
     # --- final projection ---------------------------------------------------
-    out = []
-    if not plan.scalar:
-        out = [F.col(time_col), F.col(topic_col)]
-    out += [F.col(c).alias(d) for c, d in zip(plan.value_cols, plan.display)]
-    return plan.df.select(*out)
+    return plan.select(*([] if plan.scalar else [F.col(time_col), F.col(topic_col)]))
 
 
 def _kinds_of(df: DataFrame, cols: list[str]) -> dict[str, str]:
     return {c: _kind_of_dtype(df.schema[c].dataType.simpleString()) for c in cols}
 
 
-def _apply_stage(plan: _Plan, stage: ast.Stage, time_col: str, topic_col: str) -> _Plan:
+def _apply_stage(plan: _Plan, stage: ast.Stage, time_col: str, topic_col: str,
+                 group: list[Column] | None = None) -> _Plan:
+    """One pipeline stage. A reduce aggregates globally, or per `group`
+    key when given (the streaming twin's event-time window); grouped,
+    only the associative shapes compile, since the sequential fold
+    needs the whole input in order."""
     if stage.kind == "filter":
         env = _bind(stage.args, plan.value_cols)
         pred = compile_expr(stage.expr, env, _kinds_of(plan.df, plan.value_cols))
@@ -388,6 +399,11 @@ def _apply_stage(plan: _Plan, stage: ast.Stage, time_col: str, topic_col: str) -
         for i, e in enumerate(exprs):
             m = _match_reduce_element(e, a, b)
             if m is None:
+                if group is not None:
+                    raise CompileError(
+                        "streaming reduce requires an associative fold (sequential "
+                        "fallback cannot run on an unbounded stream)"
+                    )
                 # not an associative aggregate shape: exact sequential
                 # fold (matches the reference's stream semantics)
                 return _reduce_fallback(plan, stage, exprs, display, time_col, topic_col)
@@ -397,7 +413,7 @@ def _apply_stage(plan: _Plan, stage: ast.Stage, time_col: str, topic_col: str) -
                 raise CompileError("whole-tuple reduce on a tuple value needs subscripts")
             src = plan.value_cols[idx if idx is not None else 0]
             aggs.append(_make_agg(agg_name, src, plan.df).alias(f"__v{i}"))
-        df = plan.df.agg(*aggs)
+        df = (plan.df.groupBy(*group) if group else plan.df).agg(*aggs)
         return _Plan(df, [f"__v{i}" for i in range(len(aggs))], display, scalar=True)
 
     raise CompileError(f"unknown stage kind {stage.kind!r}")
@@ -420,7 +436,9 @@ def _reduce_fallback(
     collect, so it still streams through an executor."""
     import logging
 
-    from fossil_spark.fql.interp import eval_expr
+    from pyspark.sql.types import DoubleType
+
+    from fossil_spark.fql.interp import _num, eval_expr
 
     logging.getLogger("fossil_spark").warning(
         "FQL reduce is not expressible as a Spark aggregate; falling "
@@ -435,23 +453,39 @@ def _reduce_fallback(
     if order:
         src = src.orderBy(*order)
 
+    # the output types are the compiler's for the same expressions (a
+    # fold that ends null has no value to infer one from)
+    env = {a: plan.value_cols, b: plan.value_cols}
+    schema = plan.df.select(*[
+        compile_expr(e, env, _kinds_of(plan.df, plan.value_cols)).alias(f"__v{i}")
+        for i, e in enumerate(exprs)
+    ]).schema
+
+    def converter(t):
+        if isinstance(t, DoubleType):  # ints, and a lone row's raw string
+            return lambda v: _num(v) if isinstance(v, str) else float(v)
+        return lambda v: v
+
+    convs = [converter(f.dataType) for f in schema.fields]
+    empty = object()  # no row yet; a null accumulator stays null
+
     def fold(rows):
-        acc = None
+        acc = empty
         for row in rows:
             vals = tuple(row[-n:]) if n > 1 else row[-1]
-            if acc is None:
+            if acc is empty:
                 acc = vals
             else:
                 out = tuple(
                     eval_expr(e, {a: acc, b: vals}) for e in exprs
                 )
                 acc = out if n > 1 or len(exprs) > 1 else out[0]
-        if acc is not None:
-            yield tuple(acc) if isinstance(acc, tuple) else (acc,)
+        if acc is not empty:
+            vals = acc if isinstance(acc, tuple) else (acc,)
+            yield tuple(None if v is None else c(v) for c, v in zip(convs, vals))
 
     folded = src.rdd.coalesce(1).mapPartitions(fold)
-    spark = plan.df.sparkSession
-    out_df = spark.createDataFrame(folded, [f"__v{i}" for i in range(len(exprs))])
+    out_df = plan.df.sparkSession.createDataFrame(folded, schema)
     return _Plan(out_df, [f"__v{i}" for i in range(len(exprs))], display, scalar=True)
 
 

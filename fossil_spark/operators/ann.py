@@ -25,49 +25,31 @@ from pyspark.sql.functions import broadcast
 from fossil_spark.catalog import Slot, memo
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-# --- one-string expression builders (r13, guide §4) ------------------
-# The Column-built HOF helpers above (zip_with + aggregate lambdas)
-# cost ~70 py4j round-trips per call to CONSTRUCT — the ANN keys spent
-# 3-6 s of driver time per query just building plans (cProfile: 16.7k
-# socket round-trips for one ann_ndcg build). The builders below emit
-# the SAME expressions as ONE SQL string = one py4j call.
+# --- vector-math builders ----------------------------------------------
+# Every dot product, norm, cosine and squared-L2 fold is built here, as
+# ONE SQL string: one py4j call per expression, where the same tree
+# built from Column lambdas (zip_with + aggregate) cost ~70 round-trips
+# (the ANN keys spent 3-6 s of driver time per query building plans).
+# Each fold runs left to right from 0.0D, the order the DuckDB oracle
+# mirrors with list_reduce; a ragged pair or a null vector folds to
+# null, and a zero-norm cosine divides by zero (DIVIDE_BY_ZERO under
+# ANSI mode, null without it).
 #
-# Runtime shape was chosen empirically (all at sf0.1, 1M-pair
-# broadcast-nested-loop scan, min-of-3):
-# - A FLAT unrolled 64-term dot (a[0]*b[0] + ...) compiles into one
-#   giant generated Java method that exceeds HotSpot's JIT
-#   HugeMethodLimit, so it runs in the BYTECODE INTERPRETER: 13.3 s
-#   vs 2.6 s for the interpreted HOF fold. Never emit flat wide dots.
-# - The unrolled L2 distance ((a[i]-b[i])*(a[i]-b[i])) is the
-#   exception: its repeated subterms trigger codegen subexpression
-#   elimination, which splits the method into 64 JIT-able pieces —
-#   0.5 s vs 2.1 s HOF. (_l2_sql keeps that form.)
-# - For cosine, the winning shape keeps the HOF fold per pair but
-#   HOISTS each side's norm out of the pair loop (sqrt(normsq) is
-#   computed once per row, not once per pair — identical doubles, so
-#   bitwise-identical scores): 1.7 s vs 2.6 s.
+# Runtime shape (sf0.1, 1M-pair broadcast-nested-loop scan, min-of-3):
+# - never emit a FLAT unrolled wide dot (a[0]*b[0] + ...): the single
+#   generated method exceeds HotSpot's HugeMethodLimit and runs in the
+#   bytecode interpreter, 13.3 s vs 2.6 s for the HOF fold;
+# - the unrolled L2 distance is the exception: its repeated subterms
+#   trigger codegen subexpression elimination, 0.5 s vs 2.1 s HOF
+#   (_l2_sql, chosen by a caller that knows the width);
+# - cosine scorers hoist each side's norm out of the pair loop (once
+#   per row, not per pair; identical doubles): 1.7 s vs 2.6 s.
 # Literals round-trip exactly via DOUBLE('<repr>') (Java parseDouble
-# of a shortest-repr string); 0.0D keeps the fold's double init.
+# of a shortest-repr string).
 
 
-def _flit(x: float) -> str:
-    return f"DOUBLE('{float(x)!r}')"
+def _flit_array(xs: list[float]) -> str:
+    return "array(" + ",".join(f"DOUBLE('{float(x)!r}')" for x in xs) + ")"
 
 
 def _fold_sql(terms: list[str]) -> str:
@@ -78,21 +60,13 @@ def _fold_sql(terms: list[str]) -> str:
 
 
 def _hof_dot_sql(a: str, b: str) -> str:
-    """zip_with/aggregate dot product — same expression tree as
-    _dot(), one py4j call instead of ~70."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
         f" 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _hof_dotw_sql(a: str, weights: list[float]) -> str:
-    arr = "array(" + ",".join(_flit(w) for w in weights) + ")"
-    return _hof_dot_sql(a, arr)
-
-
 def _hof_norm_sql(a: str) -> str:
-    """sqrt(aggregate(a, 0.0, acc + x*x)) — same tree as _norm()."""
     return f"SQRT(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
@@ -103,8 +77,27 @@ def _cosine_sql(a: str, b: str) -> str:
     )
 
 
-def _cosine_expr(a: str, b: str) -> Column:
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of two array<double> columns, by name."""
     return F.expr(_cosine_sql(a, b))
+
+
+def _guarded_cosine(a: str, b: str) -> Column:
+    """cosine(a, b), but null where either norm is zero: the centroid
+    audits' convention (the search scorers keep the NaN). Their norms
+    are self-dots; the doubles are the same as _hof_norm_sql's."""
+    denom = f"(SQRT({_hof_dot_sql(a, a)}) * SQRT({_hof_dot_sql(b, b)}))"
+    return F.expr(
+        f"CASE WHEN {denom} > 0 THEN {_hof_dot_sql(a, b)} / {denom} END"
+    )
+
+
+def _l2sq_sql(a: str, b: str) -> str:
+    """Squared euclidean distance as one zip_with/aggregate fold."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        f" 0.0D, (acc, x) -> acc + x)"
+    )
 
 
 def _l2_sql(a: str, b: str, dim: int) -> str:
@@ -112,6 +105,19 @@ def _l2_sql(a: str, b: str, dim: int) -> str:
         _fold_sql(
             [f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])" for i in range(dim)]
         )
+    )
+
+
+def _nearest_sql(vec: str, cents: str, id_field: str) -> str:
+    """Every centroid of `cents` (array<struct<`id_field`, vec>>) as a
+    (negcos, `id_field`) struct, nearest first: the negated cosine
+    rounded @9, ties on the smaller centroid id (array_sort is
+    lexicographic). ivf_ann slices the first n, kmeans_cluster takes
+    the first."""
+    return (
+        f"array_sort(transform({cents}, c -> named_struct("
+        f"'negcos', -round({_cosine_sql(vec, 'c.vec')}, 9),"
+        f" '{id_field}', c.{id_field})))"
     )
 
 
@@ -141,7 +147,7 @@ def _cosine_pairs_arrow(
     fold's exact left-to-right order — numpy's own matmul/axis-sum
     use blocked summation and would drift in the last ulp. Norms are
     hoisted per ROW and multiplied before the divide, matching the
-    dim-hoisted HOF shape bit for bit. round@6 stays Spark-side so
+    hoisted HOF shape bit for bit. round@6 stays Spark-side so
     both engines (and the DuckDB oracle) share one rounding
     semantic.
 
@@ -244,14 +250,12 @@ def _cosine_pairs_arrow(
     )
 
 
-def _hof_cosine(c: DataFrame, q: DataFrame, dim: int | None):
-    """The broadcast HOF scorer over (__cv, __qv) shared by cosine_topk
-    and filtered_topk; `q` comes broadcast. With `dim`, each side's
-    norm hoists out of the pair loop: computed once per ROW (not per
-    pair), bitwise-identical scores — measured 2.6 -> 1.7 s on the
-    1M-pair scan at sf0.1. Returns (c, q, sim)."""
-    if not dim:
-        return c, q, cosine(F.col("__qv"), F.col("__cv"))
+def _hof_cosine(c: DataFrame, q: DataFrame):
+    """The broadcast HOF scorer over (__cv, __qv) shared by
+    cosine_topk, filtered_topk and range_search; `q` comes broadcast.
+    Each side's norm hoists out of the pair loop: computed once per
+    ROW (not per pair), bitwise-identical scores — measured 2.6 ->
+    1.7 s on the 1M-pair scan at sf0.1. Returns (c, q, sim)."""
     c = c.withColumn("__cn", F.expr(_hof_norm_sql("__cv")))
     q = broadcast(q.withColumn("__qn", F.expr(_hof_norm_sql("__qv"))))
     return c, q, F.expr(f"{_hof_dot_sql('__qv', '__cv')} / (__qn * __cn)")
@@ -264,14 +268,12 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector (self-matches
     excluded). Scores are rounded so ranking ties break on id
     deterministically regardless of float summation order. The query
     set broadcasts and every pair scores as a JVM higher-order-function
-    fold; pass `dim` when the vector width is known statically, and
-    the per-row norms hoist out of the pair loop as codegen arithmetic
+    fold, with the per-row norms hoisted out of the pair loop
     (bitwise-identical fold order)."""
     q = broadcast(
         queries.select(
@@ -282,7 +284,7 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
     )
-    c, q, sim = _hof_cosine(c, q, dim)
+    c, q, sim = _hof_cosine(c, q)
     scored = (
         c.crossJoin(q)
         .filter(F.col(id_col) != F.col("query_id"))
@@ -308,7 +310,7 @@ def _cosine_topk_arrow(
     (_cosine_pairs_arrow, bit-identical to the HOF fold) — the right
     call for LARGE query sets, where the interpreted HOF fold pays
     JVM-interpreter cost per pair. `dim` is the clean-width vector
-    pre-filter here, not codegen unrolling."""
+    pre-filter."""
     scored = (
         _cosine_pairs_arrow(corpus, queries, id_col, vec_col, dim=dim)
         .filter(F.col(id_col) != F.col("query_id"))
@@ -346,7 +348,6 @@ def topk_truth(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """The exact-truth catalog entry for (corpus, queries): brute
     force materialized ONCE per session at max(k, 10) and served at
@@ -357,7 +358,7 @@ def topk_truth(
     three brute-force passes)."""
     kmax = max(int(k), _TRUTH_KMAX)
     t = memo(
-        cosine_topk(corpus, queries, kmax, id_col, vec_col, round_to, dim),
+        cosine_topk(corpus, queries, kmax, id_col, vec_col, round_to),
         tag="truth",
     )
     return t.filter(F.col("rank") <= k) if k < kmax else t
@@ -371,7 +372,6 @@ def filtered_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Filtered vector search: exact top-k cosine neighbors AMONG the
     corpus rows sharing the query's `filter_col` value (the
@@ -397,7 +397,7 @@ def filtered_topk(
         F.col(filter_col),
         F.col(vec_col).cast("array<double>").alias("__cv"),
     )
-    c, q, sim = _hof_cosine(c, q, dim)
+    c, q, sim = _hof_cosine(c, q)
     scored = (
         c.join(q, c[filter_col] == q["__ql"])
         .filter(F.col(id_col) != F.col("query_id"))
@@ -432,29 +432,20 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
 
 
 def lsh_signature(
-    vec: Column | str, dim: int, planes: int = 8, table: int = 0
+    vec: str, dim: int, planes: int = 8, table: int = 0
 ) -> Column:
-    """Bit-signature of a vector: sign of the dot product with each of
-    `planes` md5-seeded hyperplanes, packed into a long. Each `table`
-    gets independent hyperplanes (seeded by table index). Pass `vec`
-    as a column NAME to build the signature as one unrolled SQL
-    expression (same fold order bitwise, codegen instead of
-    interpreted HOFs, one py4j call instead of ~300)."""
-    if isinstance(vec, str):
-        parts = ["CAST(0 AS BIGINT)"]
-        for p in range(planes):
-            ws = _hyperplane(table * 1000 + p, dim)
-            parts.append(
-                f"(CASE WHEN {_hof_dotw_sql(vec, ws)} > 0"
-                f" THEN {1 << p} ELSE 0 END)"
-            )
-        return F.expr(" + ".join(parts))
-    sig = F.lit(0).cast("long")
+    """Bit-signature of the array<double> column named `vec`: sign of
+    the dot product with each of `planes` md5-seeded hyperplanes,
+    packed into a long. Each `table` gets independent hyperplanes
+    (seeded by table index). One SQL expression, one py4j call."""
+    parts = ["CAST(0 AS BIGINT)"]
     for p in range(planes):
-        w = F.array([F.lit(x) for x in _hyperplane(table * 1000 + p, dim)])
-        dot = _dot(vec, w)
-        sig = sig + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig
+        ws = _hyperplane(table * 1000 + p, dim)
+        parts.append(
+            f"(CASE WHEN {_hof_dot_sql(vec, _flit_array(ws))} > 0"
+            f" THEN {1 << p} ELSE 0 END)"
+        )
+    return F.expr(" + ".join(parts))
 
 
 def ivf_ann(
@@ -466,7 +457,6 @@ def ivf_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: corpus vectors are assigned to the
     nearest of `n_lists` coarse centroids (inverted lists); each query
@@ -507,56 +497,20 @@ def ivf_ann(
         )
     )
 
-    def assign(df: DataFrame, vcol: str, n: int, keep: list[str]) -> DataFrame:
-        """nearest-n centroid ids per vector, fully map-side: transform
-        the broadcast centroid array into (neg_cos, list_id) structs,
-        array_sort (lexicographic: best cosine first, ties on smaller
-        list id), slice n, explode. The explode materializes list_id as
-        a plain attribute, keeping higher-order exprs out of join keys."""
-        if dim:
-            ranked = F.expr(
-                "slice(array_sort(transform(__cents, c -> named_struct("
-                f"'negcos', -round({_cosine_sql(vcol, 'c.vec')}, 9),"
-                " 'list_id', c.list_id"
-                f"))), 1, {int(n)})"
-            )
-        else:
-            ranked = F.slice(
-                F.array_sort(
-                    F.transform(
-                        F.col("__cents"),
-                        lambda c: F.struct(
-                            (-F.round(cosine(F.col(vcol), c["vec"]), 9)).alias("negcos"),
-                            c["list_id"].alias("list_id"),
-                        ),
-                    )
-                ),
-                1, n,
-            )
-        return (
-            df.crossJoin(cents_one)
-            .withColumn("__nl", F.explode(ranked))
-            .select(*keep, F.col("__nl.list_id").alias("list_id"))
-        )
-
-    c = assign(
+    c = _ivf_assign(
         corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")),
-        "__cv", 1, [id_col, "__cv"],
+        "__cv", cents_one, 1, [id_col, "__cv"],
     )
     q = broadcast(
-        assign(
+        _ivf_assign(
             queries.select(
                 F.col(id_col).alias("query_id"),
                 F.col(vec_col).cast("array<double>").alias("__qv"),
             ),
-            "__qv", n_probe, ["query_id", "__qv"],
+            "__qv", cents_one, n_probe, ["query_id", "__qv"],
         )
     )
-    sim = (
-        _cosine_expr("__qv", "__cv")
-        if dim
-        else cosine(F.col("__qv"), F.col("__cv"))
-    )
+    sim = cosine("__qv", "__cv")
     scored = (
         c.join(q, "list_id")
         .filter(F.col(id_col) != F.col("query_id"))
@@ -571,6 +525,23 @@ def ivf_ann(
 
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _ivf_assign(
+    df: DataFrame, vcol: str, cents_one: DataFrame, n: int, keep: list[str]
+) -> DataFrame:
+    """ivf_ann's nearest-n list ids per vector, fully map-side against
+    the one-row broadcast `__cents` (array<struct<list_id, vec>>):
+    _nearest_sql, slice n, explode. The explode materializes list_id as
+    a plain attribute, keeping higher-order exprs out of join keys."""
+    ranked = F.expr(
+        f"slice({_nearest_sql(vcol, '__cents', 'list_id')}, 1, {int(n)})"
+    )
+    return (
+        df.crossJoin(cents_one)
+        .withColumn("__nl", F.explode(ranked))
+        .select(*keep, F.col("__nl.list_id").alias("list_id"))
+    )
 
 
 def lsh_ann(
@@ -621,7 +592,7 @@ def lsh_ann(
     scored = candidates.select(
         "query_id",
         id_col,
-        F.round(_cosine_expr("__qv", "__cv"), round_to).alias("cos_sim"),
+        F.round(cosine("__qv", "__cv"), round_to).alias("cos_sim"),
     )
     from pyspark.sql import Window
 
@@ -629,17 +600,14 @@ def lsh_ann(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _unit(vec_col: str) -> Column:
+    """The column `vec_col` as array<double>, scaled to unit norm (a
+    zero vector stays as it is)."""
+    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    n = _hof_norm_sql(v)
+    return F.expr(
+        f"CASE WHEN {n} > 0 THEN transform({v}, x -> x / {n}) ELSE {v} END"
     )
-
-
-def _unit(v: Column) -> Column:
-    n = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    return F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
 
 
 def pq_ann(
@@ -703,7 +671,7 @@ def pq_ann(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     vecs = corpus.select(
-        F.col(id_col), _unit(F.col(vec_col).cast("array<double>")).alias("__v")
+        F.col(id_col), _unit(vec_col).alias("__v")
     )
     sample = (
         vecs.withColumn("__h", F.md5(F.col(id_col).cast("string")))
@@ -778,7 +746,7 @@ def pq_ann(
     spark = corpus.sparkSession
     qnorm = queries.select(
         F.col(id_col).alias("__qid"),
-        _unit(F.col(vec_col).cast("array<double>")).alias("__qv"),
+        _unit(vec_col).alias("__qv"),
     )
     cands = spark.createDataFrame([], out_schema)
     chunk_ids: list = []
@@ -814,7 +782,7 @@ def pq_ann(
     qv = broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
-            _unit(F.col(vec_col).cast("array<double>")).alias("__qv"),
+            _unit(vec_col).alias("__qv"),
         )
     )
     rer = (
@@ -823,7 +791,7 @@ def pq_ann(
         .select(
             "query_id",
             id_col,
-            F.round(_dot(F.col("__qv"), F.col("__v")), round_to).alias("cos_sim"),
+            F.round(F.expr(_hof_dot_sql("__qv", "__v")), round_to).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -891,18 +859,7 @@ def kmeans_cluster(
                 "__cents array<struct<cid:int, vec:array<double>>>",
             )
         )
-        best = F.element_at(
-            F.array_sort(
-                F.transform(
-                    F.col("__cents"),
-                    lambda s: F.struct(
-                        (-F.round(cosine(F.col("__v"), s["vec"]), 9)).alias("negcos"),
-                        s["cid"].alias("cid"),
-                    ),
-                )
-            ),
-            1,
-        )
+        best = F.expr(f"element_at({_nearest_sql('__v', '__cents', 'cid')}, 1)")
         return df.crossJoin(one).select(
             id_col,
             "__v",
@@ -1341,24 +1298,10 @@ def embedding_coherence(
             lambda s: s["m"],
         ).alias("__c")
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     joined = vecs.join(F.broadcast(cents), label_col)
-    denom = F.sqrt(dot(F.col("__v"), F.col("__v"))) * F.sqrt(
-        dot(F.col("__c"), F.col("__c"))
-    )
     return joined.select(
         id_col, label_col,
-        F.round(
-            F.when(denom > 0, dot(F.col("__v"), F.col("__c")) / denom),
-            6,
-        ).alias("cos_to_centroid"),
+        F.round(_guarded_cosine("__v", "__c"), 6).alias("cos_to_centroid"),
     )
 
 
@@ -1502,8 +1445,7 @@ def knn_classify(
     ann_bruteforce boundary); votes tie-break on the smallest label.
     The neighbors come from the Arrow pair grid (_cosine_topk_arrow),
     so `dim` acts as the clean-width vector pre-filter (size(vec) =
-    dim), NOT as codegen unrolling. Returns (label, n_queries,
-    n_correct, accuracy)."""
+    dim). Returns (label, n_queries, n_correct, accuracy)."""
     probes = embeddings.filter(F.col(id_col) < n_queries)
     # the |probes| here is 60x the retrieval audits' (500 vs 8), so
     # this is the suite's one LARGE brute-force pair grid — the
@@ -1557,7 +1499,6 @@ def range_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
     """Cosine RANGE query: every corpus vector within `threshold`
     similarity of each query (self-matches excluded) — the faiss
@@ -1578,12 +1519,7 @@ def range_search(
     c = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
     )
-    if dim:
-        c = c.withColumn("__cn", F.expr(_hof_norm_sql("__cv")))
-        q = broadcast(q.withColumn("__qn", F.expr(_hof_norm_sql("__qv"))))
-        sim = F.expr(f"{_hof_dot_sql('__qv', '__cv')} / (__qn * __cn)")
-    else:
-        sim = cosine(F.col("__qv"), F.col("__cv"))
+    c, q, sim = _hof_cosine(c, q)
     return (
         c.crossJoin(q)
         .filter(F.col(id_col) != F.col("query_id"))
@@ -1645,32 +1581,11 @@ def centroid_drift(
         F.max(F.when(F.col("__snap") == 0, F.col("__n"))).alias("n_a"),
         F.max(F.when(F.col("__snap") == 1, F.col("__n"))).alias("n_b"),
     ).filter(F.col("__a").isNotNull() & F.col("__b").isNotNull())
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    denom = F.sqrt(dot(F.col("__a"), F.col("__a"))) * F.sqrt(
-        dot(F.col("__b"), F.col("__b"))
-    )
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("__a"), F.col("__b"), lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return piv.select(
         label_col, "n_a", "n_b",
-        F.round(
-            F.when(denom > 0, dot(F.col("__a"), F.col("__b")) / denom), 6
-        ).alias("cos_centroid"),
-        F.round(l2, 6).alias("l2_shift"),
+        F.round(_guarded_cosine("__a", "__b"), 6).alias("cos_centroid"),
+        F.round(F.expr(f"SQRT({_l2sq_sql('__a', '__b')})"), 6)
+        .alias("l2_shift"),
     )
 
 
@@ -1750,17 +1665,10 @@ def intrinsic_dim(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
     )
     dist = F.round(
-        F.expr(_l2_sql("__qv", "__cv", dim))
-        if dim
-        else F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col("__qv"), F.col("__cv"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+        F.expr(
+            _l2_sql("__qv", "__cv", dim)
+            if dim
+            else f"SQRT({_l2sq_sql('__qv', '__cv')})"
         ),
         9,
     )
@@ -1808,7 +1716,6 @@ def truncation_recall(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    full_dim: int | None = None,
 ) -> DataFrame:
     """Matryoshka-style truncation audit: recall@k of cosine search
     over only the FIRST d dimensions, per d, against the full-width
@@ -1824,7 +1731,7 @@ def truncation_recall(
     Cosine needs no re-normalization after slicing — it normalizes
     inside. Returns (method='dim<d>', n_queries, n_true, n_hits,
     recall_at_k, min_query_recall)."""
-    truth = topk_truth(corpus, queries, k, id_col, vec_col, dim=full_dim)
+    truth = topk_truth(corpus, queries, k, id_col, vec_col)
     cands = {}
     for d in dims:
         c = corpus.select(
@@ -1833,7 +1740,7 @@ def truncation_recall(
         q = queries.select(
             id_col, F.slice(F.col(vec_col), 1, d).alias(vec_col)
         )
-        cands[f"dim{d}"] = cosine_topk(c, q, k, id_col, vec_col, dim=d)
+        cands[f"dim{d}"] = cosine_topk(c, q, k, id_col, vec_col)
     return recall_eval(truth, cands, k)
 
 
@@ -1844,7 +1751,6 @@ def bq_recall(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """Binary-quantization audit: recall@k of 1-bit-per-dimension
     search (bit d set when v_d exceeds the corpus's dimension-d mean,
@@ -1864,7 +1770,7 @@ def bq_recall(
     ranked = _bq_ranked(corpus, queries, dim, id_col, vec_col).filter(
         F.col("rank") <= k
     )
-    truth = topk_truth(corpus, queries, k, id_col, vec_col, dim=vec_dim)
+    truth = topk_truth(corpus, queries, k, id_col, vec_col)
     return recall_eval(truth, {f"bq{dim}": ranked}, k)
 
 
@@ -1976,7 +1882,6 @@ def two_stage_recall(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """Two-stage retrieval audit — THE production vector-search
     architecture (a cheap quantized index proposes, exact distances on
@@ -2014,18 +1919,13 @@ def two_stage_recall(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("__qv"),
     )
-    sim = (
-        _cosine_expr("__qv", "__cv")
-        if vec_dim
-        else cosine(F.col("__qv"), F.col("__cv"))
-    )
     rescored = (
         short.join(cv, id_col)
         .join(F.broadcast(qv), "query_id")
         .select(
             "query_id",
             id_col,
-            F.round(sim, 6).alias("cos_sim"),
+            F.round(cosine("__qv", "__cv"), 6).alias("cos_sim"),
         )
     )
     w2 = Window.partitionBy("query_id").orderBy(
@@ -2034,7 +1934,7 @@ def two_stage_recall(
     reranked = rescored.withColumn(
         "rank", F.row_number().over(w2)
     ).filter(F.col("rank") <= k)
-    truth = topk_truth(corpus, queries, k, id_col, vec_col, dim=vec_dim)
+    truth = topk_truth(corpus, queries, k, id_col, vec_col)
     return recall_eval(
         truth,
         {f"bq{dim}": bq_k, f"bq{dim}_rerank{shortlist}": reranked},
@@ -2222,12 +2122,7 @@ def kcenter_select(
     v = v.localCheckpoint(eager=False)  # k passes read it; score once
 
     def d2_to(center_vals):
-        center = F.array(*[F.lit(float(c)) for c in center_vals])
-        return F.aggregate(
-            F.zip_with("__vec", center, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
+        return F.expr(_l2sq_sql("__vec", _flit_array(center_vals)))
 
     seed = v.orderBy("__id").limit(1).collect()[0]
     picked = [(0, seed["__id"], None)]
@@ -2302,24 +2197,16 @@ def kcenter_assign(
         )
     )
     scored = v.crossJoin(F.broadcast(centers))  # 1-row broadcast
-    d2 = lambda c: F.aggregate(
-        F.zip_with("__vec", c["__vec"], lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
     # materialize each center's distance ONCE (HOFs evaluate
     # interpreted, so a d2 repeated in the when() predicate AND the
     # replacement struct doubles the dominant per-vector cost — the
     # matrix_profile candidates-then-fold shape), then min-fold;
     # strict < keeps the earliest-selected center on ties because
     # __cs is sorted by sel_order
-    cands = F.transform(
-        F.col("__cs"),
-        lambda c: F.struct(
-            d2(c).alias("d"),
-            c["sel_order"].alias("o"),
-            c["__cid"].alias("cid"),
-        ),
+    cands = F.expr(
+        "transform(__cs, c -> named_struct("
+        f"'d', {_l2sq_sql('__vec', 'c.__vec')},"
+        " 'o', c.sel_order, 'cid', c.__cid))"
     )
     # init cid is a typed NULL (matches the id column's type — a
     # hardcoded long init forced a cast of string center ids); it
@@ -2415,18 +2302,13 @@ def silhouette(
         F.array_sort(F.collect_list(F.struct("__lb", "__cvec"))).alias("__cs")
     )
     scored = v.crossJoin(broadcast(centers))  # 1-row broadcast
-    d2 = lambda c: F.aggregate(
-        F.zip_with("__vec", c["__cvec"], lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
     # one d2 per centroid, bound to a column so the own-class pick and
     # the nearest-other fold read the SAME evaluation
     scored = scored.withColumn(
         "__cands",
-        F.transform(
-            "__cs",
-            lambda c: F.struct(d2(c).alias("d"), c["__lb"].alias("lb")),
+        F.expr(
+            "transform(__cs, c -> named_struct("
+            f"'d', {_l2sq_sql('__vec', 'c.__cvec')}, 'lb', c.__lb))"
         ),
     )
     own = F.element_at(

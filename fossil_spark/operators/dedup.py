@@ -622,7 +622,7 @@ def embedding_neardup_pairs(
 
     e = embeddings.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).withColumn("bucket", lsh_signature(F.col("__v"), dim, planes, table=0))
+    ).withColumn("bucket", lsh_signature("__v", dim, planes, table=0))
     a = e.select(F.col(id_col).alias("vec_a"), F.col("__v").alias("__va"), "bucket")
     b = e.select(F.col(id_col).alias("vec_b"), F.col("__v").alias("__vb"), "bucket")
     return (
@@ -631,7 +631,7 @@ def embedding_neardup_pairs(
         .select(
             "vec_a",
             "vec_b",
-            F.round(cosine(F.col("__va"), F.col("__vb")), round_to).alias("cos_sim"),
+            F.round(cosine("__va", "__vb"), round_to).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )

@@ -138,7 +138,7 @@ def semdedup(
         a.join(b, "cluster")
         .filter(
             (F.col("__idb") < F.col("__ida"))
-            & (F.round(cosine(F.col("__va"), F.col("__vb")), 9) >= threshold)
+            & (F.round(cosine("__va", "__vb"), 9) >= threshold)
         )
         .select(F.col("__ida").alias(id_col))
         .distinct()

@@ -1,16 +1,16 @@
 """FQL over Structured Streams — beyond the reference's surface
 (fossil queries only historical data; its ingest path is write-only).
-Here the same query text runs continuously:
+Here the same query text runs continuously, through the batch
+compiler's own stage code (fql/compiler.py `_apply_stage`):
 
-- topic / time predicates and filter/map stages apply row-wise
-  (identical compilation to the batch path);
+- topic predicates and filter/map stages apply row-wise, exactly as
+  in the batch path;
 - a trailing reduce becomes a watermarked tumbling-window aggregate:
   `all in /x | map v -> 1, v | reduce a,b -> a[0]+b[0], a[1]+b[1]`
   emits per-window partial results instead of one scalar — the only
-  meaningful reading of a global fold over an unbounded stream;
-- sample(Δ) maps to its bucket form naturally, but per-bucket
-  first-row selection needs completed buckets, so it is restricted to
-  the aggregate path too (count/min/max per bucket).
+  meaningful reading of a global fold over an unbounded stream. Only
+  the associative reduce shapes compile; the batch path's sequential
+  fold needs the whole input.
 """
 
 from __future__ import annotations
@@ -18,10 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fossil_spark.fql.compiler import (
-    CompileError, _bind, _kinds_of, _make_agg, _match_reduce_element,
-    _stage_outputs, compile_expr,
-)
+from fossil_spark.fql.compiler import CompileError, _apply_stage, _Plan
 from fossil_spark.fql.parser import parse
 
 
@@ -36,7 +33,8 @@ def fql_stream(
 ) -> DataFrame:
     """Compile an FQL query against a streaming store-contract
     DataFrame. Returns a streaming DataFrame; a trailing reduce is
-    windowed by `window` with `watermark` late-data tolerance."""
+    windowed by `window` with `watermark` late-data tolerance and
+    returns (bucket, values)."""
     q = parse(query)
     value_cols = value_cols or ["value"]
 
@@ -47,59 +45,23 @@ def fql_stream(
             "time predicates select history; a stream is future-only "
             "(use the batch path for historical ranges)"
         )
+    if any(s.kind == "reduce" for s in q.pipeline[:-1]):
+        raise CompileError("streaming reduce must be the final stage")
 
     df = stream
     if q.topic:
         df = df.filter(F.col(topic_col).startswith(q.topic))
+    if q.pipeline and q.pipeline[-1].kind == "reduce":
+        df = df.withWatermark(time_col, watermark)
 
-    cols = list(value_cols)
-    display = ["value"] if len(cols) == 1 else list(cols)
-    for i, stage in enumerate(q.pipeline):
-        if stage.kind == "filter":
-            env = _bind(stage.args, cols)
-            df = df.filter(compile_expr(stage.expr, env, _kinds_of(df, cols)))
-        elif stage.kind == "map":
-            env = _bind(stage.args, cols)
-            exprs, display = _stage_outputs(stage.expr)
-            kinds = _kinds_of(df, cols)
-            projected = [
-                compile_expr(e, env, kinds).alias(f"__v{j}")
-                for j, e in enumerate(exprs)
-            ]
-            df = df.select(F.col(time_col), F.col(topic_col), *projected)
-            cols = [f"__v{j}" for j in range(len(projected))]
-        elif stage.kind == "reduce":
-            if i != len(q.pipeline) - 1:
-                raise CompileError("streaming reduce must be the final stage")
-            a, b = stage.args
-            exprs, display = _stage_outputs(stage.expr)
-            aggs = []
-            for j, e in enumerate(exprs):
-                m = _match_reduce_element(e, a, b)
-                if m is None:
-                    raise CompileError(
-                        "streaming reduce requires an associative fold "
-                        "(sequential fallback cannot run on an unbounded stream)"
-                    )
-                agg_name, idx = m
-                src = cols[idx if idx is not None else 0]
-                aggs.append(_make_agg(agg_name, src, df).alias(f"__v{j}"))
-            # group by the window() struct (not .start) so the
-            # event-time/watermark linkage survives and append-mode
-            # sinks work; .start is projected after the agg
-            out = (
-                df.withWatermark(time_col, watermark)
-                .groupBy(F.window(F.col(time_col), window))
-                .agg(*aggs)
-            )
-            return out.select(
-                F.col("window").start.alias("bucket"),
-                *[F.col(f"__v{j}").alias(d) for j, d in enumerate(display)],
-            )
-        else:  # pragma: no cover
-            raise CompileError(f"unknown stage {stage.kind!r}")
+    plan = _Plan(df, list(value_cols))
+    # group by the window() struct (not .start) so the event-time /
+    # watermark linkage survives and append-mode sinks work; .start is
+    # projected after the aggregate
+    group = [F.window(F.col(time_col), window)]
+    for stage in q.pipeline:
+        plan = _apply_stage(plan, stage, time_col, topic_col, group)
 
-    return df.select(
-        F.col(time_col), F.col(topic_col),
-        *[F.col(c).alias(d) for c, d in zip(cols, display)],
-    )
+    if plan.scalar:
+        return plan.select(F.col("window").start.alias("bucket"))
+    return plan.select(F.col(time_col), F.col(topic_col))

@@ -4,7 +4,13 @@ plans/<round>/<key>_<suffix>.txt (the optimization-round evidence
 files).
 
 Usage: python scripts/dump_plans.py <round> <before|after> key [key ...]
+       python scripts/dump_plans.py <round> <before|after> --all
        python scripts/dump_plans.py <round> <before|after> --all-bench
+
+--all dumps every registered queries() key. Expression, RDD and plan
+ids (#123, RDD[7], plan_id=42) and lambda-variable suffixes (x_12 ->
+x) are stripped before writing, so the dumps of two commits compare
+with `diff -r`.
 """
 
 from __future__ import annotations
@@ -12,12 +18,26 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_UNSTABLE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"\b(lambda [A-Za-z]\w*?)_\d+\b"), r"\1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _UNSTABLE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -30,7 +50,9 @@ def main() -> int:
     spark = get_spark(f"plan-dump-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
-    if keys == ["--all-bench"]:
+    if keys == ["--all"]:
+        keys = sorted(qs)
+    elif keys == ["--all-bench"]:
         import bench
         keys = [k for k in bench.HEAVY_ISOLATED if k in qs]
 
@@ -44,7 +66,7 @@ def main() -> int:
                 df.explain("formatted")
             path = os.path.join(out_dir, f"{key}_{suffix}.txt")
             with open(path, "w") as f:
-                f.write(buf.getvalue())
+                f.write(normalize(buf.getvalue()))
             print(f"wrote {path}")
         except Exception as ex:
             print(f"FAILED {key}: {ex}", file=sys.stderr)

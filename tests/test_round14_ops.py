@@ -90,7 +90,7 @@ def test_cosine_topk_arrow_chunked_bit_identical(spark, monkeypatch):
             for r in df.collect()
         )
 
-    hof = rows(ann.cosine_topk(emb, q, k=5, dim=8))
+    hof = rows(ann.cosine_topk(emb, q, k=5))
     big = rows(ann._cosine_topk_arrow(emb, q, k=5, dim=8))
     # force many tiny corpus chunks inside every cogroup
     monkeypatch.setattr(ann, "_ARROW_PAIR_CELLS", 7)
