@@ -1,8 +1,10 @@
-"""Compile FQL ASTs to Spark DataFrame plans.
+"""Compile FQL ASTs to Spark DataFrame plans, with one expression
+engine: compile_expr turns every stage body into Spark Columns, and no
+FQL is evaluated outside the plan.
 
 The execution model is deliberately NOT the reference's streaming
-channel pipeline (/root/reference/pkg/query/plan/pipeline.go). Every
-stage becomes a declarative DataFrame transformation:
+channel pipeline (pkg/query/plan/pipeline.go). Every stage becomes a
+declarative DataFrame transformation:
 
 - topic / time predicates  -> Column filters (Catalyst pushes them to
   the parquet scan: PushedFilters + partition pruning at scale)
@@ -11,6 +13,9 @@ stage becomes a declarative DataFrame transformation:
 - reduce stage             -> df.agg(...) when the expression matches
   an associative aggregate shape (sum / min / max / product); this is
   what keeps reduce map-side-combining and shuffle-light at 100 TB.
+  Any other reduce is the left fold in stream order: Spark's
+  `aggregate` over compile_expr's Columns, on the input collected as
+  one sorted array in one task (_reduce_fallback).
 - sample(Δ)               -> first row per epoch-aligned Δ bucket
   (fully distributed decimation: one window per bucket, no global
   sequential scan). The reference's greedy semantics
@@ -40,6 +45,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from fossil_spark.fql import ast
 from fossil_spark.fql.parser import parse
@@ -85,8 +91,8 @@ class _Typed:
         return self.col
 
 
-def _kind_of_dtype(dtype: str) -> str:
-    d = dtype.lower()
+def _kind_of_dtype(dtype: DataType) -> str:
+    d = dtype.simpleString()
     if d.startswith(_NUM_DTYPES):
         return "num"
     if d == "string":
@@ -96,45 +102,52 @@ def _kind_of_dtype(dtype: str) -> str:
     return "other"
 
 
-def compile_expr(e: ast.Expr, env: dict[str, list[str]],
-                 kinds: dict[str, str] | None = None) -> Column:
-    return _compile_typed(e, env, kinds or {}).col
+def _fields(df: DataFrame, cols: list[str]) -> list[_Typed]:
+    """`df`'s columns `cols` as typed Columns, the kinds read from the
+    schema."""
+    return [
+        _Typed(F.col(c), _kind_of_dtype(df.schema[c].dataType))
+        for c in cols
+    ]
 
 
-def _compile_typed(e: ast.Expr, env: dict[str, list[str]],
-                   kinds: dict[str, str]) -> _Typed:
-    """env maps identifier -> list of df column names (len 1 = scalar
-    binding, len>1 = tuple binding usable only via subscript); kinds
-    maps column name -> static kind for coercion decisions."""
+def compile_expr(e: ast.Expr, env: dict[str, list[_Typed]]) -> Column:
+    return _compile_typed(e, env).col
+
+
+def _compile_typed(e: ast.Expr, env: dict[str, list[_Typed]]) -> _Typed:
+    """env maps identifier -> its typed Columns (len 1 = scalar
+    binding, len>1 = tuple binding usable only via subscript); the
+    kinds drive the coercion decisions."""
     if isinstance(e, ast.Num):
         return _Typed(F.lit(e.value), "num")
     if isinstance(e, ast.Str):
         return _Typed(F.lit(e.value), "str")
     if isinstance(e, ast.Ident):
-        cols = env.get(e.name)
-        if cols is None:
+        fields = env.get(e.name)
+        if fields is None:
             raise CompileError(f"unbound identifier {e.name!r}")
-        if len(cols) != 1:
+        if len(fields) != 1:
             raise CompileError(f"{e.name!r} is a tuple; subscript it ({e.name}[i])")
-        return _Typed(F.col(cols[0]), kinds.get(cols[0], "other"))
+        return fields[0]
     if isinstance(e, ast.Subscript):
-        cols = env.get(e.base.name)
-        if cols is None:
+        fields = env.get(e.base.name)
+        if fields is None:
             raise CompileError(f"unbound identifier {e.base.name!r}")
         if isinstance(e.key, int):
-            if e.key >= len(cols):
+            if e.key >= len(fields):
                 raise CompileError(f"tuple index {e.key} out of range for {e.base.name!r}")
-            return _Typed(F.col(cols[e.key]), kinds.get(cols[e.key], "other"))
+            return fields[e.key]
         # string subscript: composite field access on a struct column
-        if len(cols) != 1:
+        if len(fields) != 1:
             raise CompileError("string subscript requires a composite value")
-        return _Typed(F.col(cols[0]).getField(e.key), "other")
+        return _Typed(fields[0].col.getField(e.key), "other")
     if isinstance(e, ast.Unary):
-        t = _compile_typed(e.operand, env, kinds)
+        t = _compile_typed(e.operand, env)
         return _Typed(-t.as_num() if e.op == "-" else t.as_num(), "num")
     if isinstance(e, ast.Binary):
-        left = _compile_typed(e.left, env, kinds)
-        right = _compile_typed(e.right, env, kinds)
+        left = _compile_typed(e.left, env)
+        right = _compile_typed(e.right, env)
         if e.op in _CMP:
             # mixed str/num comparison coerces the string side
             if {left.kind, right.kind} == {"str", "num"}:
@@ -156,11 +169,11 @@ def _compile_typed(e: ast.Expr, env: dict[str, list[str]],
             )
         raise CompileError(f"unknown operator {e.op!r}")
     if isinstance(e, ast.Call):
-        return _Typed(_compile_builtin(e, env, kinds), "num")
+        return _Typed(_compile_builtin(e, env), "num")
     if isinstance(e, ast.Tuple):
         return _Typed(
             F.struct(*[
-                _compile_typed(x, env, kinds).col.alias(f"_{i}")
+                _compile_typed(x, env).col.alias(f"_{i}")
                 for i, x in enumerate(e.elements)
             ]),
             "other",
@@ -168,22 +181,21 @@ def _compile_typed(e: ast.Expr, env: dict[str, list[str]],
     raise CompileError(f"cannot compile {type(e).__name__} here")
 
 
-def _compile_builtin(e: ast.Call, env: dict[str, list[str]],
-                     kinds: dict[str, str]) -> Column:
+def _compile_builtin(e: ast.Call, env: dict[str, list[_Typed]]) -> Column:
     """Builtins per the reference's types/builtin.go (max, min over a
     tuple/array input) plus len() from docs/pipelines.md."""
     name = e.name
     if name in ("max", "min"):
         if isinstance(e.arg, ast.Tuple):
-            cols = [_compile_typed(x, env, kinds).as_num() for x in e.arg.elements]
+            cols = [_compile_typed(x, env).as_num() for x in e.arg.elements]
             return F.greatest(*cols) if name == "max" else F.least(*cols)
-        arg = _compile_typed(e.arg, env, kinds).col
+        arg = _compile_typed(e.arg, env).col
         return F.array_max(arg) if name == "max" else F.array_min(arg)
     if name == "len":
-        arg = _compile_typed(e.arg, env, kinds).col
+        arg = _compile_typed(e.arg, env).col
         return F.length(arg)
     if name == "pow" and isinstance(e.arg, ast.Tuple) and len(e.arg.elements) == 2:
-        base, exp = (_compile_typed(x, env, kinds).as_num() for x in e.arg.elements)
+        base, exp = (_compile_typed(x, env).as_num() for x in e.arg.elements)
         return F.pow(base, exp)
     raise CompileError(f"unknown builtin {name!r}")
 
@@ -263,13 +275,14 @@ class _Plan:
         ])
 
 
-def _bind(args: list[str], value_cols: list[str]) -> dict[str, list[str]]:
-    if len(args) == len(value_cols):
-        return {name: [col] for name, col in zip(args, value_cols)}
+def _bind(args: list[str], plan: _Plan) -> dict[str, list[_Typed]]:
+    fields = _fields(plan.df, plan.value_cols)
+    if len(args) == len(fields):
+        return {name: [f] for name, f in zip(args, fields)}
     if len(args) == 1:
-        return {args[0]: list(value_cols)}
+        return {args[0]: fields}
     raise CompileError(
-        f"stage takes {len(args)} args but value has {len(value_cols)} element(s)"
+        f"stage takes {len(args)} args but value has {len(fields)} element(s)"
     )
 
 
@@ -366,10 +379,6 @@ def compile_query(
     return plan.select(*([] if plan.scalar else [F.col(time_col), F.col(topic_col)]))
 
 
-def _kinds_of(df: DataFrame, cols: list[str]) -> dict[str, str]:
-    return {c: _kind_of_dtype(df.schema[c].dataType.simpleString()) for c in cols}
-
-
 def _apply_stage(plan: _Plan, stage: ast.Stage, time_col: str, topic_col: str,
                  group: list[Column] | None = None) -> _Plan:
     """One pipeline stage. A reduce aggregates globally, or per `group`
@@ -377,15 +386,13 @@ def _apply_stage(plan: _Plan, stage: ast.Stage, time_col: str, topic_col: str,
     only the associative shapes compile, since the sequential fold
     needs the whole input in order."""
     if stage.kind == "filter":
-        env = _bind(stage.args, plan.value_cols)
-        pred = compile_expr(stage.expr, env, _kinds_of(plan.df, plan.value_cols))
+        pred = compile_expr(stage.expr, _bind(stage.args, plan))
         return _Plan(plan.df.filter(pred), plan.value_cols, plan.display, plan.scalar)
 
     if stage.kind == "map":
-        env = _bind(stage.args, plan.value_cols)
+        env = _bind(stage.args, plan)
         exprs, display = _stage_outputs(stage.expr)
-        kinds = _kinds_of(plan.df, plan.value_cols)
-        cols = [compile_expr(e, env, kinds).alias(f"__v{i}") for i, e in enumerate(exprs)]
+        cols = [compile_expr(e, env).alias(f"__v{i}") for i, e in enumerate(exprs)]
         keep = [] if plan.scalar else [F.col(time_col), F.col(topic_col)]
         df = plan.df.select(*keep, *cols)
         return _Plan(df, [f"__v{i}" for i in range(len(cols))], display, plan.scalar)
@@ -427,66 +434,85 @@ def _reduce_fallback(
     time_col: str,
     topic_col: str,
 ) -> _Plan:
-    """Slow-path reduce: a sequential left fold in stream order
-    (time, topic) — exactly the reference's pipeline semantics
-    (plan/reduce.go folds the channel in arrival order). This is the
-    only FQL path that pulls data through Python; it exists for parity
-    with non-associative expressions, and its docstring is its warning
-    label. Executed via a single sorted partition, not a driver
-    collect, so it still streams through an executor."""
+    """A reduce that matches no associative aggregate: the left fold in
+    stream order (time, topic), exactly the reference's pipeline
+    semantics (plan/reduce.go folds the channel in arrival order), built
+    from compile_expr's own Columns, so it follows the same rules as
+    every other stage:
+
+    - the input collects into one sorted array of (time, topic,
+      value...) structs: rows fold in (time, topic) order, a null time
+      first as orderBy puts it, and rows that tie fold in value order;
+    - the first two rows combine at the value kinds, and their result
+      types are the output's: the accumulator carries them from then on;
+    - `aggregate` folds the rest, `a` bound to the accumulator at the
+      output kinds and `b` to the next row at the value kinds, each
+      field cast back to its output type;
+    - a lone row is its value try_cast to the output type; no row in,
+      no row out.
+
+    The output must feed back as its own left operand: each output
+    field keeps its value's kind (a string may fold to a number, which
+    it reads as), else CompileError at compile time; so a comparison
+    (`a > b`) does not fold. The whole input is held as one array in
+    one task: no partial aggregation, and that task's memory bounds the
+    input. Associative forms compile to real aggregates instead."""
     import logging
 
-    from pyspark.sql.types import DoubleType
-
-    from fossil_spark.fql.interp import _num, eval_expr
+    from pyspark.errors import AnalysisException
 
     logging.getLogger("fossil_spark").warning(
         "FQL reduce is not expressible as a Spark aggregate; falling "
-        "back to a sequential single-partition fold — O(n) on ONE "
-        "executor core, no partial aggregation. At large scale rewrite "
-        "the reduce as an associative expression."
+        "back to a sequential single-partition fold — the whole input "
+        "is held as one array in ONE task, no partial aggregation. At "
+        "large scale rewrite the reduce as an associative expression."
     )
     a, b = stage.args
-    n = len(plan.value_cols)
-    order = [time_col, topic_col] if not plan.scalar else []
-    src = plan.df.select(*order, *plan.value_cols)
-    if order:
-        src = src.orderBy(*order)
+    fields = _fields(plan.df, plan.value_cols)
+    names = [f"v{i}" for i in range(len(fields))]
+    outs = [f"__v{i}" for i in range(len(exprs))]
+    order = [] if plan.scalar else [F.col(time_col), F.col(topic_col)]
+    rows = plan.df.agg(F.array_sort(F.collect_list(F.struct(
+        *order, *[f.col.alias(v) for f, v in zip(fields, names)]
+    ))).alias("rows"))
+    r, n = F.col("rows"), F.size("rows")
 
-    # the output types are the compiler's for the same expressions (a
-    # fold that ends null has no value to infer one from)
-    env = {a: plan.value_cols, b: plan.value_cols}
-    schema = plan.df.select(*[
-        compile_expr(e, env, _kinds_of(plan.df, plan.value_cols)).alias(f"__v{i}")
-        for i, e in enumerate(exprs)
-    ]).schema
+    def row(x: Column) -> list[_Typed]:
+        return [_Typed(x[v], f.kind) for f, v in zip(fields, names)]
 
-    def converter(t):
-        if isinstance(t, DoubleType):  # ints, and a lone row's raw string
-            return lambda v: _num(v) if isinstance(v, str) else float(v)
-        return lambda v: v
+    def step(acc: list[_Typed], x: Column) -> list[Column]:
+        return [_compile_typed(e, {a: acc, b: row(x)}).col for e in exprs]
 
-    convs = [converter(f.dataType) for f in schema.fields]
-    empty = object()  # no row yet; a null accumulator stays null
+    first = step(row(r[0]), r[1])
+    types = [f.dataType for f in rows.select(*first).schema.fields]
+    kinds = [_kind_of_dtype(t) for t in types]
+    for i, (vk, ok) in enumerate(zip([f.kind for f in fields], kinds)):
+        if ok != vk and (vk, ok) != ("str", "num"):
+            raise CompileError(
+                f"reduce output {i} is {ok} but its value is {vk}: it "
+                f"cannot feed back as {a!r}"
+            )
 
-    def fold(rows):
-        acc = empty
-        for row in rows:
-            vals = tuple(row[-n:]) if n > 1 else row[-1]
-            if acc is empty:
-                acc = vals
-            else:
-                out = tuple(
-                    eval_expr(e, {a: acc, b: vals}) for e in exprs
-                )
-                acc = out if n > 1 or len(exprs) > 1 else out[0]
-        if acc is not empty:
-            vals = acc if isinstance(acc, tuple) else (acc,)
-            yield tuple(None if v is None else c(v) for c, v in zip(convs, vals))
+    def acc(cols: list[Column]) -> Column:
+        return F.struct(*[c.cast(t).alias(o) for c, t, o in zip(cols, types, outs)])
 
-    folded = src.rdd.coalesce(1).mapPartitions(fold)
-    out_df = plan.df.sparkSession.createDataFrame(folded, schema)
-    return _Plan(out_df, [f"__v{i}" for i in range(len(exprs))], display, scalar=True)
+    def merge(state: Column, x: Column) -> Column:
+        return acc(step([_Typed(state[o], k) for o, k in zip(outs, kinds)], x))
+
+    lone = F.struct(*[
+        (r[0][names[i]] if i < len(names) else F.lit(None)).try_cast(t).alias(o)
+        for i, (t, o) in enumerate(zip(types, outs))
+    ])
+    folded = F.when(n == 1, lone).otherwise(
+        F.aggregate(F.slice(r, 3, n - 2), acc(first), merge)
+    )
+    try:
+        out = rows.filter(n > 0).select(folded.alias("acc")).select(
+            *[F.col("acc")[o].alias(o) for o in outs]
+        )
+    except AnalysisException as ex:
+        raise CompileError(f"reduce output cannot feed back as {a!r}: {ex}") from ex
+    return _Plan(out, outs, display, scalar=True)
 
 
 def fql(

@@ -165,12 +165,17 @@ def _cosine_pairs_arrow(
     ~_ARROW_PAIR_CELLS float64 cells, whatever
     |corpus|/defaultParallelism grows to — chunking the corpus axis
     leaves every per-pair fold untouched, so scores stay
-    bit-identical."""
+    bit-identical.
+
+    Zero norm: as the HOF fold's 0/0 under ANSI mode, a kept query or
+    corpus vector of zero norm raises DIVIDE_BY_ZERO, naming its id;
+    without ANSI its pairs score null."""
     import numpy as np
     import pandas as pd
 
     max_cells = _ARROW_PAIR_CELLS  # read here, on the Spark driver
     spark = corpus.sparkSession
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
     nb = max(int(spark.sparkContext.defaultParallelism), 1)
     c = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cv")
@@ -210,6 +215,14 @@ def _cosine_pairs_arrow(
 
         if not len(cpdf) or not len(qpdf):
             return empty()
+
+        def nonzero(norms, ids, side):
+            if ansi and not norms.all():
+                raise ZeroDivisionError(
+                    f"[DIVIDE_BY_ZERO] cosine of the zero-norm {side} "
+                    f"vector {ids[norms == 0][0]}"
+                )
+
         Q = np.array(qpdf["__qv"].tolist(), dtype=np.float64)
         width = Q.shape[1]
         qn = np.zeros(len(Q))
@@ -218,6 +231,7 @@ def _cosine_pairs_arrow(
         qroot = np.sqrt(qn)[:, None]
         qids = qpdf["query_id"].to_numpy()
         cids_all = cpdf[id_col].to_numpy()
+        nonzero(qn, qids, "query")
         chunk = max(1, max_cells // max(len(Q), 1))
         frames = []
         for lo in range(0, len(cpdf), chunk):
@@ -229,6 +243,7 @@ def _cosine_pairs_arrow(
             cn = np.zeros(len(C))
             for t in range(width):
                 cn = cn + C[:, t] * C[:, t]
+            nonzero(cn, cids_all[lo:lo + chunk], "corpus")
             sim = dot / (qroot * np.sqrt(cn)[None, :])
             frames.append(
                 pd.DataFrame(
@@ -475,26 +490,12 @@ def ivf_ann(
         .select(F.col("__v").alias("__cent"))
         .collect()
     )
-    spark = corpus.sparkSession
-    # All centroids as ONE broadcast row holding an array<struct>: the
-    # 1-row cross join is a BroadcastNestedLoopJoin (map-side, no
-    # shuffle), and list assignment becomes a per-row higher-order
-    # expression — the earlier crossJoin(corpus x centroids) +
-    # row_number() argmin shuffled n_lists x |corpus| rows just to pick
-    # a minimum, which does not survive 100 TB.
-    # Built from pandas (Arrow, a LocalRelation): a Python-list input
-    # plans as a Python-RDD scan that starts a Python worker per task.
-    import pandas as pd
-
-    cent_rows = [
-        {"list_id": i, "vec": [float(x) for x in row["__cent"]]}
-        for i, row in enumerate(cents)
-    ]
-    cents_one = broadcast(
-        spark.createDataFrame(
-            pd.DataFrame({"__cents": [cent_rows]}),
-            "__cents array<struct<list_id:int, vec:array<double>>>",
-        )
+    # list assignment is a per-row higher-order expression against one
+    # broadcast centroid row — the earlier crossJoin(corpus x
+    # centroids) + row_number() argmin shuffled n_lists x |corpus| rows
+    # just to pick a minimum, which does not survive 100 TB.
+    cents_one = _centroids_row(
+        corpus.sparkSession, [row["__cent"] for row in cents], "list_id"
     )
 
     c = _ivf_assign(
@@ -525,6 +526,26 @@ def ivf_ann(
 
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _centroids_row(spark, centroids, id_field: str) -> DataFrame:
+    """All `centroids` as ONE broadcast row, `__cents`
+    array<struct<id_field:int, vec:array<double>>> (ids are list
+    positions), for a per-row higher-order nearest-centroid pick: the
+    1-row cross join is a BroadcastNestedLoopJoin (map-side, no
+    shuffle). Built from pandas (Arrow, a LocalRelation): a Python-list
+    input plans as a Python-RDD scan that starts a Python worker per
+    task."""
+    import pandas as pd
+
+    rows = [
+        {id_field: i, "vec": [float(x) for x in c]}
+        for i, c in enumerate(centroids)
+    ]
+    return broadcast(spark.createDataFrame(
+        pd.DataFrame({"__cents": [rows]}),
+        f"__cents array<struct<{id_field}:int, vec:array<double>>>",
+    ))
 
 
 def _ivf_assign(
@@ -853,12 +874,7 @@ def kmeans_cluster(
     spark = corpus.sparkSession
 
     def with_assignment(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
-        one = broadcast(
-            spark.createDataFrame(
-                [([(i, c) for i, c in enumerate(centroids)],)],
-                "__cents array<struct<cid:int, vec:array<double>>>",
-            )
-        )
+        one = _centroids_row(spark, centroids, "cid")
         best = F.expr(f"element_at({_nearest_sql('__v', '__cents', 'cid')}, 1)")
         return df.crossJoin(one).select(
             id_col,

@@ -1,6 +1,21 @@
 #!/usr/bin/env python
-"""Regenerate docs/plans.md: captured physical plans for the queries
-whose shapes the PERFORMANCE.md scale claims rest on."""
+"""Capture .explain("formatted") plans of driver queries.
+
+Usage: python scripts/capture_plans.py
+       python scripts/capture_plans.py --dump <round> <suffix> key [key ...]
+       python scripts/capture_plans.py --dump <round> <suffix> --all
+       python scripts/capture_plans.py --dump <round> <suffix> --all-bench
+
+Without arguments it regenerates docs/plans.md: the physical plans of
+the queries whose shapes the PERFORMANCE.md scale claims rest on, at
+sf0.001. --dump writes plans/<round>/<key>_<suffix>.txt at
+$SPARK_GRAFT_SF_DIR (default sf0.1) for the named keys, every
+registered queries() key (--all) or the bench's heavy keys
+(--all-bench). Both go through one capture-and-normalize path:
+expression, RDD and plan ids (#123, RDD[7], plan_id=42) and
+lambda-variable suffixes (x_12 -> x) are stripped, so the dumps of two
+commits compare with `diff -r`.
+"""
 
 from __future__ import annotations
 
@@ -12,6 +27,20 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+_UNSTABLE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"\b(lambda [A-Za-z]\w*?)_\d+\b"), r"\1"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+]
+
+
+def normalize(plan: str) -> str:
+    for pattern, repl in _UNSTABLE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
 
 SECTIONS = {
     "tpch_q5": (
@@ -145,10 +174,39 @@ HEADER = """# Plan audit (captured)
 
 Physical plans captured from `explain(\"formatted\")` at sf0.001
 (regenerate with `python scripts/capture_plans.py`). These are the
-shapes the scale claims in PERFORMANCE.md rest on; expression ids are
-stripped for readability.
+shapes the scale claims in PERFORMANCE.md rest on; expression, RDD and
+plan ids are normalized to `#`, `RDD[]` and `plan_id=`.
 
 """
+
+
+def capture(df) -> str:
+    """`df`'s formatted plan, normalized."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return normalize(buf.getvalue())
+
+
+def dump(spark, qs, rnd: str, suffix: str, keys: list[str]) -> None:
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if keys == ["--all"]:
+        keys = sorted(qs)
+    elif keys == ["--all-bench"]:
+        import bench
+        keys = [k for k in bench.HEAVY_ISOLATED if k in qs]
+    out_dir = os.path.join(REPO, "plans", rnd)
+    os.makedirs(out_dir, exist_ok=True)
+    for key in keys:
+        try:
+            plan = capture(qs[key](spark, sf))
+        except Exception as ex:
+            print(f"FAILED {key}: {ex}", file=sys.stderr)
+            continue
+        path = os.path.join(out_dir, f"{key}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path}")
 
 
 def main() -> None:
@@ -157,20 +215,18 @@ def main() -> None:
 
     spark = get_spark("plandoc")
     spark.sparkContext.setLogLevel("ERROR")
-    sf = "/root/testdata/sf0.001"
     qs = entry.queries()
+    if sys.argv[1:2] == ["--dump"]:
+        rnd, suffix, *keys = sys.argv[2:]
+        dump(spark, qs, rnd, suffix, keys)
+        return
 
-    def plan(key: str) -> str:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            qs[key](spark, sf).explain("formatted")
-        tree = buf.getvalue().split("\n\n")[0]
-        return re.sub(r"#\d+L?", "", tree)
-
+    sf = "/root/testdata/sf0.001"
     with open(os.path.join(REPO, "docs", "plans.md"), "w") as f:
         f.write(HEADER)
         for key, blurb in SECTIONS.items():
-            f.write(f"## {key}\n\n{blurb}\n\n```\n{plan(key)}\n```\n\n")
+            tree = capture(qs[key](spark, sf)).split("\n\n")[0]
+            f.write(f"## {key}\n\n{blurb}\n\n```\n{tree}\n```\n\n")
     print("docs/plans.md written")
 
 

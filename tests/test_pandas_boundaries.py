@@ -1,13 +1,15 @@
 """Source lint: every pandas boundary (mapInPandas / applyInPandas /
 applyInPandasWithState) in fossil_spark/ and __spark_entry__.py sits in one of
-the two harnesses or in a listed site that cannot use them. Pure AST
-scan, no Spark session."""
+the two harnesses or in a listed site that cannot use them, and no Python-RDD
+path (`.rdd`, mapPartitions / mapPartitionsWithIndex) is left at all. Pure
+AST scan (comments never match), no Spark session."""
 
 import ast
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 METHODS = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
+RDD_METHODS = {"mapPartitions", "mapPartitionsWithIndex"}
 
 # (file, outermost enclosing def, method)
 ALLOWED = {
@@ -39,11 +41,15 @@ def _sources():
     yield os.path.join(REPO, "__spark_entry__.py")
 
 
-def _boundary_calls():
+def _trees():
     for path in _sources():
         rel = os.path.relpath(path, REPO).replace(os.sep, "/")
         with open(path) as f:
-            tree = ast.parse(f.read(), rel)
+            yield rel, ast.parse(f.read(), rel)
+
+
+def _boundary_calls():
+    for rel, tree in _trees():
 
         def walk(node, outer):
             for child in ast.iter_child_nodes(node):
@@ -75,3 +81,17 @@ def test_pandas_boundaries_go_through_the_harnesses():
     )
     stale = ALLOWED - {(rel, fn, method) for rel, _l, fn, method in found}
     assert not stale, f"allowlisted sites no longer exist: {sorted(stale)}"
+
+
+def test_no_python_rdd_paths():
+    found = [
+        f"{rel}:{node.lineno} {node.attr}"
+        for rel, tree in _trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and (node.attr == "rdd" or node.attr in RDD_METHODS)
+    ]
+    assert not found, (
+        "Python-RDD path (rows leave the plan through Python workers); "
+        "build it as a DataFrame plan: " + "; ".join(found)
+    )

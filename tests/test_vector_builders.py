@@ -90,17 +90,38 @@ def test_builders_match_column_folds(pairs):
 
 
 def test_zero_norm_cosine_same_on_both_folds(spark):
-    # 0/0: DIVIDE_BY_ZERO under ANSI for either fold, null without it
+    # 0/0: DIVIDE_BY_ZERO under ANSI for either fold and for both top-k
+    # engines (the HOF cosine_topk, the Arrow grid naming the vector),
+    # null without it
+    emb = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [0, 1, 2],
+                      "embedding": [[0.0, 0.0], [1.0, 2.0], [2.0, 1.0]]}),
+        "vec_id long, embedding array<double>",
+    )
+    engines = (ann.cosine_topk, ann._cosine_topk_arrow)
     for fold in (ann.cosine("a", "b"), _cosine(F.col("a"), F.col("b"))):
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
             _frame(spark, ZERO).select(fold).collect()
+    for topk in engines:
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            topk(emb, emb, k=2).collect()
+    with pytest.raises(Exception, match="zero-norm (query|corpus) vector 0"):
+        ann._cosine_topk_arrow(emb, emb, k=2).collect()
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         out = _scores(_frame(spark, ZERO))
+        hof, arrow = (
+            sorted(topk(emb, emb, k=2).collect(), key=lambda r: (r[0], r[1]))
+            for topk in engines
+        )
     finally:
         spark.conf.unset("spark.sql.ansi.enabled")
     _assert_same(out)
     assert out[0]["cos"] is None
+    assert hof == arrow
+    assert [r["cos_sim"] for r in hof if 0 in (r["query_id"], r["vec_id"])] == [
+        None, None, None, None
+    ]
 
 
 def test_hoisted_scorer_matches_per_pair_cosine(pairs):
