@@ -432,7 +432,7 @@ def _ts_range_join(spark, sf_dir):
     events = _events(spark, sf_dir)
     intervals = (
         events.filter("event_type = 'error'")
-        .groupBy(F.window("ts", "1 hour").start.alias("lo"))
+        .groupBy(ts.time_bucket("ts", "1 hour").alias("lo"))
         .agg(F.count("*").alias("n_errors"))
         .filter("n_errors >= 3")
         .select("lo", (F.col("lo") + F.expr("INTERVAL 1 HOUR")).alias("hi"), "n_errors")

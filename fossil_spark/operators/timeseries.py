@@ -16,9 +16,61 @@ from __future__ import annotations
 
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql.functions import broadcast
 from pyspark.sql import functions as F
+
+
+# ---------------------------------------------------------------------------
+# the null-time rule: one bucket builder, one ordered-window builder
+# ---------------------------------------------------------------------------
+# Every time-series and analytics query orders and buckets rows through
+# these two, and both follow DuckDB's defaults (the oracles' engine, and
+# _per_key's pandas sort): a null time (any null order key) sorts LAST,
+# and a null time falls in a null bucket, which groups as a bucket of
+# its own.
+
+def time_bucket(col: str | Column, every: str) -> Column:
+    """Epoch-aligned start of the fixed-width `every` bucket holding
+    `col` (DuckDB's time_bucket; equal to window(col, every).start on
+    every non-null time, before 1970 too). Null in gives null out,
+    where a groupBy over window() would drop the row."""
+    u = F.unix_micros(F.col(col) if isinstance(col, str) else col)
+    return F.timestamp_micros(u - F.pmod(u, F.lit(_interval_us(every))))
+
+
+def _nulls_last(c: str | Column) -> Column:
+    """`c` ascending with nulls last; a key already given a direction
+    keeps it (a sort order's rendering names its null order)."""
+    if isinstance(c, str):
+        c = F.col(c)
+    sort = str(c)
+    if "NULLS FIRST" in sort:
+        raise ValueError(f"nulls sort last in an ordered window: {sort}")
+    return c if "NULLS LAST" in sort else c.asc_nulls_last()
+
+
+def ordered(by, *order, rows: tuple | None = None,
+            range: tuple | None = None) -> WindowSpec:
+    """The window over `by` (a column or a list of them; none is one
+    partition) ordered by `order`: a name or bare Column sorts
+    ascending with nulls last, a descending key is written
+    `F.col(c).desc_nulls_last()`. `rows`/`range` are (lo, hi) frame
+    bounds, None meaning unbounded. With no order it is a plain
+    partition window."""
+    def bounds(lo, hi):
+        return (Window.unboundedPreceding if lo is None else lo,
+                Window.unboundedFollowing if hi is None else hi)
+
+    by = [by] if isinstance(by, (str, Column)) else list(by or [])
+    w = Window.partitionBy(*by)
+    if order:
+        w = w.orderBy(*[_nulls_last(c) for c in order])
+    if rows is not None:
+        w = w.rowsBetween(*bounds(*rows))
+    if range is not None:
+        w = w.rangeBetween(*bounds(*range))
+    return w
 
 
 def _dec_avg(col: str) -> Column:
@@ -95,9 +147,8 @@ def resample(
     """
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start.alias("bucket")
     return (
-        df.groupBy(bucket, *by)
+        df.groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(
             F.count("*").alias("n"),
             _dec_avg(value_col).alias("avg_value"),
@@ -124,8 +175,7 @@ def sliding_stats(
     tiebreak so results are partition-invariant)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order).rowsBetween(-n_preceding, 0)
+    w = ordered(by, time_col, *(order_tiebreak or []), rows=(-n_preceding, 0))
     return df.select(
         *df.columns,
         (F.round(F.sum(F.col(value_col).cast("decimal(30,8)")).over(w), 4).cast("double")
@@ -151,11 +201,7 @@ def sliding_time_stats(
     df = _time_norm(df, time_col)
     us = F.unix_micros(F.col(time_col))
     lb = int(lookback.total_seconds() * 1_000_000)
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(us)
-        .rangeBetween(-lb, 0)
-    )
+    w = ordered(by, us, range=(-lb, 0))
     return df.select(
         *df.columns,
         (F.round(F.sum(F.col(value_col).cast("decimal(30,8)")).over(w), 4)
@@ -183,7 +229,7 @@ def zscore(
     df = _time_norm(df, time_col)
     us = F.unix_micros(F.col(time_col))
     lb = int(lookback.total_seconds() * 1_000_000)
-    w = Window.partitionBy(*by).orderBy(us).rangeBetween(-lb, 0)
+    w = ordered(by, us, range=(-lb, 0))
     n = F.count(value_col).over(w)
     s1 = F.round(F.sum(F.col(value_col).cast("decimal(30,8)")).over(w), 4).cast("double")
     s2 = F.round(
@@ -235,14 +281,12 @@ def asof_join(
         if c not in (on, left_time):
             r = r.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
     u = l.unionByName(r)
-    # right rows (__side=0) sort before left rows at equal time -> "<=" semantics
-    w = (
-        Window.partitionBy(on)
-        .orderBy(F.col(left_time), F.col("__side"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    # right rows (__side=0) sort before left rows at equal time -> "<=" semantics;
+    # a null left time sorts last but no right time is <= it, so it gets null
+    w = ordered(on, left_time, "__side", rows=(None, 0))
     picked = [
-        F.last(F.col(f"__r_{v}"), ignorenulls=True).over(w).alias(v)
+        F.when(F.col(left_time).isNotNull(),
+               F.last(F.col(f"__r_{v}"), ignorenulls=True).over(w)).alias(v)
         for v in right_values
     ]
     return (
@@ -268,8 +312,8 @@ def sessionize(
     key, session_start, session_end, n_events."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    order = (time_col, *(order_tiebreak or []))
+    w = ordered(by, *order)
     gap_us = int(gap.total_seconds() * 1_000_000)
     with_flag = df.withColumn(
         "__new_session",
@@ -284,10 +328,7 @@ def sessionize(
     )
     with_id = with_flag.withColumn(
         "session_seq",
-        F.sum("__new_session").over(
-            Window.partitionBy(*by).orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+        F.sum("__new_session").over(ordered(by, *order, rows=(None, 0))),
     )
     return (
         with_id.groupBy(*by, "session_seq")
@@ -302,14 +343,6 @@ def sessionize(
 # ---------------------------------------------------------------------------
 # gap fill
 # ---------------------------------------------------------------------------
-
-def _bucketed(df: DataFrame, every: str, time_col: str,
-              by: list[str], value_col: str) -> DataFrame:
-    return (
-        df.groupBy(F.window(F.col(time_col), every).start.alias("bucket"), *by)
-        .agg(_dec_avg(value_col).alias("value"))
-    )
-
 
 def gapfill_locf(
     df: DataFrame,
@@ -332,9 +365,10 @@ def gapfill_locf(
     every source value in the bucket is null) are treated as gaps."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucketed = _bucketed(df, every, time_col, by, value_col) \
-        .filter(F.col("value").isNotNull())
-    w = Window.partitionBy(*by).orderBy("bucket")
+    bucketed = df.groupBy(time_bucket(time_col, every).alias("bucket"), *by).agg(
+        _dec_avg(value_col).alias("value")
+    ).filter(F.col("value").isNotNull())
+    w = ordered(by, "bucket")
     interval = F.expr(f"INTERVAL {every}")
     # window expr first (a generator can't contain one), then explode
     stepped = bucketed.select(
@@ -376,9 +410,10 @@ def gapfill_linear(
     segment: v = v0 + (v1 - v0) * (pos - p0) / (p1 - p0)."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucketed = _bucketed(df, every, time_col, by, value_col) \
-        .filter(F.col("value").isNotNull())
-    w = Window.partitionBy(*by).orderBy("bucket")
+    bucketed = df.groupBy(time_bucket(time_col, every).alias("bucket"), *by).agg(
+        _dec_avg(value_col).alias("value")
+    ).filter(F.col("value").isNotNull())
+    w = ordered(by, "bucket")
     interval = F.expr(f"INTERVAL {every}")
     # window exprs first (a generator can't contain one), then explode
     stepped = bucketed.select(
@@ -432,7 +467,7 @@ def funnel(
     Output: (step_index, step, n_converted), n monotonically
     non-increasing."""
     df = _time_norm(df, time_col)
-    w = Window.partitionBy(by)
+    w = ordered(by)
     out = df.select(by, time_col, type_col)
     prev = None
     for i, s in enumerate(steps):
@@ -482,10 +517,9 @@ def retention(
     one distinct-aggregate on (cohort, offset) — two shuffles total,
     both map-side combined, no joins."""
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), period).start
-    w = Window.partitionBy(by)
+    w = ordered(by)
     stamped = df.select(
-        F.col(by), bucket.alias("__p")
+        F.col(by), time_bucket(time_col, period).alias("__p")
     ).withColumn("__cohort", F.min("__p").over(w))
     offset = (
         (F.unix_micros(F.col("__p")) - F.unix_micros(F.col("__cohort")))
@@ -516,11 +550,10 @@ def downsample_m4(
     4 points/pixel with a single shuffle."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start.alias("bucket")
-    order = [F.col(time_col)] + [F.col(c) for c in (tiebreak or [])]
+    order = (time_col, *(tiebreak or []))
     t_struct = F.struct(*order, F.col(value_col).alias("__v"))
     v_struct = F.struct(F.col(value_col).alias("__v"), *order)
-    return df.groupBy(bucket, *by).agg(
+    return df.groupBy(time_bucket(time_col, every).alias("bucket"), *by).agg(
         F.min(t_struct).getField("__v").alias("v_first"),
         F.max(t_struct).getField("__v").alias("v_last"),
         F.min(v_struct).getField("__v").alias("v_min"),
@@ -575,9 +608,8 @@ def topk(
 ) -> DataFrame:
     """Top-k rows per group. Window rank after AQE-coalesced shuffle;
     at scale this beats a global sort because each group sorts locally."""
-    oc = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    order = [oc] + [F.col(c) for c in (tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    oc = order_col if ascending else F.col(order_col).desc_nulls_last()
+    w = ordered(by, oc, *(tiebreak or []))
     return (
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -595,11 +627,9 @@ def first_last_by_bucket(
     """First and last value per bucket per key (deterministic order)."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start.alias("bucket")
-    order = [F.col(time_col)] + [F.col(c) for c in (tiebreak or [])]
-    struct = F.struct(*order, F.col(value_col).alias("__v"))
+    struct = F.struct(time_col, *(tiebreak or []), F.col(value_col).alias("__v"))
     return (
-        df.groupBy(bucket, *by)
+        df.groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(
             F.min(struct).getField("__v").alias("first_value"),
             F.max(struct).getField("__v").alias("last_value"),
@@ -619,8 +649,7 @@ def rate(
     ANSI division-by-zero error."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    w = ordered(by, time_col, *(order_tiebreak or []))
     dt_us = F.unix_micros(F.col(time_col)) - F.unix_micros(F.lag(time_col).over(w))
     dv = F.col(value_col) - F.lag(value_col).over(w)
     return df.select(
@@ -646,8 +675,7 @@ def counter_rate(
     (increase, rate_per_sec)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    w = ordered(by, time_col, *(order_tiebreak or []))
     dt_us = F.unix_micros(F.col(time_col)) - F.unix_micros(F.lag(time_col).over(w))
     dv = F.col(value_col) - F.lag(value_col).over(w)
     increase = F.when(dv.isNull(), F.lit(None).cast("double")).when(
@@ -691,19 +719,16 @@ def range_join(
         "__iv_bucket",
         F.explode(
             F.sequence(
-                F.window(F.col(lo_col), bucket).start,
+                time_bucket(lo_col, bucket),
                 # hi is exclusive: an interval ending exactly on a bucket
                 # boundary does not overlap that bucket
-                F.window(
-                    F.col(hi_col) - F.expr("INTERVAL 1 MICROSECOND"), bucket
-                ).start,
+                time_bucket(F.col(hi_col) - F.expr("INTERVAL 1 MICROSECOND"),
+                         bucket),
                 F.expr(f"INTERVAL {bucket}"),
             )
         ),
     )
-    pt = points.withColumn(
-        "__pt_bucket", F.window(F.col(point_time), bucket).start
-    )
+    pt = points.withColumn("__pt_bucket", time_bucket(point_time, bucket))
     # The exact bounds ride ALONG the equi-join as a residual condition:
     # Catalyst extracts the bucket equality as the hash/sort-merge key and
     # evaluates the bounds per candidate pair. For how="left" this gives
@@ -758,11 +783,7 @@ def interval_coverage(
         *by, start.alias("__s"), end.alias("__e"),
         *[F.col(c) for c in (order_tiebreak or []) if c not in by],
     )
-    w = (
-        Window.partitionBy(*by)
-        .orderBy("__s", "__e", *(order_tiebreak or []))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = ordered(by, "__s", "__e", *(order_tiebreak or []), rows=(None, -1))
     horizon = F.max("__e").over(w)
     marked = iv.select(
         *by,
@@ -868,11 +889,9 @@ def ohlc(
     (open/close via struct-ordered min/max, high/low plain min/max)."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start.alias("bucket")
-    order = [F.col(time_col)] + [F.col(c) for c in (tiebreak or [])]
-    struct = F.struct(*order, F.col(value_col).alias("__v"))
+    struct = F.struct(time_col, *(tiebreak or []), F.col(value_col).alias("__v"))
     return (
-        df.groupBy(bucket, *by)
+        df.groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(
             F.min(struct).getField("__v").alias("open"),
             F.max(value_col).alias("high"),
@@ -1003,10 +1022,9 @@ def decompose_classical(
     by = by or []
     df = _time_norm(df, time_col)
     half = period // 2
-    w_order = Window.partitionBy(*by).orderBy(
-        time_col, *(order_tiebreak or [])
-    )
-    w_ma = w_order.rowsBetween(-half, half)
+    order = (time_col, *(order_tiebreak or []))
+    w_order = ordered(by, *order)
+    w_ma = ordered(by, *order, rows=(-half, half))
     cnt = F.count(value_col).over(w_ma)
     trend = F.when(
         cnt == period,
@@ -1018,7 +1036,7 @@ def decompose_classical(
         *df.columns, trend.alias("__trend"), phase.alias("__phase"),
         (F.col(value_col) - trend).alias("__det"),
     )
-    w_phase = Window.partitionBy(*by, "__phase")
+    w_phase = ordered([*by, "__phase"])
     seasonal = (
         F.round(F.sum(F.col("__det").cast("decimal(30,8)")).over(w_phase), 4)
         .cast("double") / F.count("__det").over(w_phase)
@@ -1057,7 +1075,7 @@ def anomaly_decomposed(
         df, period=period, time_col=time_col, by=by, value_col=value_col,
         order_tiebreak=order_tiebreak,
     )
-    w = Window.partitionBy(*by)
+    w = ordered(by)
     med = F.expr("percentile(residual, 0.5)").over(w)
     m1 = dec.filter(F.col("residual").isNotNull()).select(
         *dec.columns, med.alias("__med")
@@ -1247,7 +1265,7 @@ def anomaly_mad(
     floating accumulation ordering — percentile sorts, not sums).
     Returns only the anomalous rows with their diagnostics."""
     by = by or []
-    w = Window.partitionBy(*[F.col(c) for c in by]) if by else Window.partitionBy()
+    w = ordered(by)
     med = F.expr(f"percentile({value_col}, 0.5)").over(w)
     step1 = df.withColumn("median", med)
     mad = F.expr("percentile(abs(`" + value_col + "` - median), 0.5)").over(w)
@@ -1286,7 +1304,7 @@ def seasonal_profile(
         .cast("double")
         .alias("__s"),
     )
-    wk = Window.partitionBy(*[F.col(c) for c in by]) if by else Window.partitionBy()
+    wk = ordered(by)
     hour_mean = F.col("__s") / F.col("n")
     # re-cast to decimal for the key total: exact and order-free
     overall = (
@@ -1325,13 +1343,9 @@ def changepoint_cusum(
     one shuffle total, no joins, no driver pull."""
     by = by or []
     df = _time_norm(df, time_col)
-    wk = Window.partitionBy(*[F.col(c) for c in by]) if by else Window.partitionBy()
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    wo = (
-        Window.partitionBy(*[F.col(c) for c in by])
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    wk = ordered(by)
+    order = (time_col, *(order_tiebreak or []))
+    wo = ordered(by, *order, rows=(None, 0))
     n = F.count("*").over(wk)
     s1 = F.round(F.sum(F.col(value_col).cast("decimal(30,8)")).over(wk), 4).cast(
         "double"
@@ -1353,9 +1367,7 @@ def changepoint_cusum(
         *by, F.col(time_col), F.col("__n"),
         F.round(F.abs(cs) / F.col("__std"), round_to).alias("__score"),
     )
-    wr = Window.partitionBy(*[F.col(c) for c in by]).orderBy(
-        F.desc("__score"), F.col(time_col)
-    )
+    wr = ordered(by, F.col("__score").desc_nulls_last(), time_col)
     return (
         scored.withColumn("__rn", F.row_number().over(wr))
         .filter(F.col("__rn") == 1)
@@ -1387,8 +1399,7 @@ def acf(
     floating accumulation order across engines can't flip a digit."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*[F.col(c) for c in by]).orderBy(*order)
+    w = ordered(by, time_col, *(order_tiebreak or []))
     lagged = df.select(
         *by,
         F.col(value_col).alias("__v"),
@@ -1464,13 +1475,9 @@ def bursts(
     by = by or []
     df = _time_norm(df, time_col)
     counts = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n"))
-    w = (
-        Window.partitionBy(*by)
-        .orderBy("bucket")
-        .rowsBetween(-trailing, -1)
-    )
+    w = ordered(by, "bucket", rows=(-trailing, -1))
     t_sum = F.sum("n").over(w)
     t_cnt = F.count("n").over(w)
     avg = t_sum.cast("double") / t_cnt.cast("double")
@@ -1513,9 +1520,8 @@ def sax(
     Returns (*by, segment, paa, symbol)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    wk = Window.partitionBy(*by)
-    wo = wk.orderBy(*order)
+    wk = ordered(by)
+    wo = ordered(by, time_col, *(order_tiebreak or []))
     n = F.count(value_col).over(wk)
     s1 = F.round(F.sum(F.col(value_col).cast("decimal(30,8)")).over(wk), 4).cast("double")
     s2 = F.round(
@@ -1572,14 +1578,11 @@ def ks_drift(
     tagged = df.select(
         *by,
         F.col(value_col).alias("__x"),
-        (F.col(time_col) < F.lit(split)).cast("int").alias("__a"),
+        # a null time is not before the split: it counts as after
+        F.when(F.col(time_col) < F.lit(split), 1).otherwise(0).alias("__a"),
     )
-    w = (
-        Window.partitionBy(*[F.col(c) for c in by])
-        .orderBy("__x")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy(*[F.col(c) for c in by])
+    w = ordered(by, "__x", range=(None, 0))
+    wall = ordered(by)
     staged = tagged.select(
         *by,
         F.sum("__a").over(w).alias("__ca"),
@@ -1643,7 +1646,8 @@ def psi_drift(
     tagged = df.select(
         *by,
         F.col(value_col).alias("__x"),
-        (F.col(time_col) < F.lit(split)).cast("int").alias("__a"),
+        # a null time is not before the split: it counts as after
+        F.when(F.col(time_col) < F.lit(split), 1).otherwise(0).alias("__a"),
     )
     edges = (
         tagged.filter(F.col("__a") == 1)
@@ -1678,7 +1682,7 @@ def psi_drift(
             F.sum(1 - F.col("__a")).alias("__cb"),
         )
     )
-    wall = Window.partitionBy(*[F.col(c) for c in by])
+    wall = ordered(by)
     frac = cells.select(
         *by,
         F.sum("__ca").over(wall).alias("__na"),
@@ -1796,7 +1800,7 @@ def _bucket_count_guard(
     assert_true rides the existing plan — no extra action; the count
     window runs over the tiny calendar-bounded bucket table, never
     the raw events."""
-    wcnt = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(1))
+    wcnt = ordered(keys)
     guard = F.assert_true(
         F.count(F.lit(1)).over(wcnt) <= F.lit(max_buckets),
         F.lit(
@@ -1843,7 +1847,7 @@ def theil_sen_trend(
     df = _time_norm(df, time_col)
     b = (
         df.groupBy(
-            *by, F.window(time_col, every).start.alias("__bucket")
+            *by, time_bucket(time_col, every).alias("__bucket")
         )
         .agg(
             (
@@ -1885,8 +1889,8 @@ def theil_sen_trend(
          / (F.col("__t2") - F.col("__t1")).cast("double")).alias("__sl"),
         F.signum(F.col("__v2") - F.col("__v1")).cast("long").alias("__sg"),
     ).filter(F.col("__sl").isNotNull())
-    w_rank = Window.partitionBy(*by).orderBy("__sl")
-    w_all = Window.partitionBy(*by)
+    w_rank = ordered(by, "__sl")
+    w_all = ordered(by)
     ranked = slopes.select(
         *by, "__sl", "__sg",
         (F.row_number().over(w_rank) - 1).alias("__r"),
@@ -1968,7 +1972,7 @@ def cross_correlation(
     df = _time_norm(df, time_col)
     bucketed = (
         df.filter(F.col(series_col).isin(series_a, series_b))
-        .groupBy(F.window(time_col, every).start.alias("bucket"))
+        .groupBy(time_bucket(time_col, every).alias("bucket"))
         .agg(
             (
                 F.round(
@@ -1996,7 +2000,7 @@ def cross_correlation(
     )
     # xcorr_k = corr(a_{t-k}, b_t): a peak at k > 0 means B TRAILS A
     # by k buckets
-    w = Window.orderBy("bucket")
+    w = ordered([], "bucket")
     lagged = bucketed.select(
         "__b",
         *[F.lag("__a", k).over(w).alias(f"__al{k}") for k in range(lags + 1)],
@@ -2073,12 +2077,7 @@ def drawdown(
     max_drawdown_frac)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = ordered(by, time_col, *(order_tiebreak or []), rows=(None, 0))
     peak = F.max(value_col).over(w)
     s = df.select(
         *by,
@@ -2086,7 +2085,7 @@ def drawdown(
         F.col(value_col),
         peak.alias("__peak"),
         (peak - F.col(value_col)).alias("__dd"),
-        *[F.col(c) for c in (order_tiebreak or [])],
+        *(order_tiebreak or []),
     )
     pick = F.max(
         F.struct(
@@ -2139,8 +2138,7 @@ def cadence(
     worst_over_median)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    wlag = Window.partitionBy(*by).orderBy(*order)
+    wlag = ordered(by, time_col, *(order_tiebreak or []))
     gap = F.unix_micros(F.col(time_col)) - F.unix_micros(
         F.lag(time_col).over(wlag)
     )
@@ -2148,8 +2146,8 @@ def cadence(
         df.select(*by, gap.alias("gap_us"))
         .filter(F.col("gap_us").isNotNull())
     )
-    wrank = Window.partitionBy(*by).orderBy("gap_us")
-    wall = Window.partitionBy(*by)
+    wrank = ordered(by, "gap_us")
+    wall = ordered(by)
     r = g.select(
         *by,
         "gap_us",
@@ -2215,14 +2213,13 @@ def forecast_eval(
     mae_naive, skill)."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start.alias("bucket")
     bucketed = (
-        df.groupBy(bucket, *by)
+        df.groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(_dec_avg(value_col).alias("v"))
         .localCheckpoint(eager=False)  # feeds train, test, and naive
     )
     train = bucketed.filter(F.col("bucket") < F.lit(cutoff))
-    wtest = Window.partitionBy(*by).orderBy("bucket")
+    wtest = ordered(by, "bucket")
     test = (
         bucketed.filter(F.col("bucket") >= F.lit(cutoff))
         .select(*by, "v", F.row_number().over(wtest).alias("step"))
@@ -2287,16 +2284,13 @@ def slo_burn(
         else F.col(order_col) == "error"
     )
     b = (
-        df.groupBy(F.window(F.col(time_col), every).start.alias("bucket"))
+        df.groupBy(time_bucket(time_col, every).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(pred, 1).otherwise(0)).cast("long").alias("n_err"),
         )
     )
-    w = (
-        Window.orderBy("bucket")
-        .rowsBetween(-(trailing - 1), Window.currentRow)
-    )
+    w = ordered([], "bucket", rows=(-(trailing - 1), 0))
     burn_fast = F.round(
         F.col("n_err").cast("double") / F.col("n") / F.lit(error_budget), 6
     )
@@ -2366,7 +2360,7 @@ def dtw_distance(
 
     bucketed = (
         df.filter(F.col(series_col).isin(series_a, series_b))
-        .groupBy(F.window(time_col, every).start.alias("bucket"))
+        .groupBy(time_bucket(time_col, every).alias("bucket"))
         .agg(cond_mean(series_a).alias("__a"), cond_mean(series_b).alias("__b"))
         .filter(F.col("__a").isNotNull() & F.col("__b").isNotNull())
     )
@@ -2443,20 +2437,16 @@ def time_weighted_avg(
     span_us, mean_value, twa)."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
     v6 = F.floor(F.col(value_col) * 1e6 + F.lit(0.5)).cast("long")
     s = df.select(
         *by,
-        bucket.alias("bucket"),
+        time_bucket(time_col, every).alias("bucket"),
         F.unix_micros(F.col(time_col)).alias("__tus"),
         F.col(value_col).alias("__v"),
         v6.alias("__v6"),
-        *[F.col(c) for c in (order_tiebreak or [])],
+        *(order_tiebreak or []),
     )
-    w = Window.partitionBy(*by, "bucket").orderBy(
-        "__tus", *[F.col(c) for c in (order_tiebreak or [])]
-    )
+    w = ordered([*by, "bucket"], "__tus", *(order_tiebreak or []))
     pv6 = F.lag("__v6").over(w)
     pt = F.lag("__tus").over(w)
     area = (
@@ -2511,16 +2501,16 @@ def threshold_episodes(
     peak_value)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
+    order = (time_col, *(order_tiebreak or []))
     flagged = F.col(value_col) > F.lit(threshold)
-    w_all = Window.partitionBy(*by).orderBy(*order)
-    w_flag = Window.partitionBy(*by, "__hot").orderBy(*order)
+    w_all = ordered(by, *order)
+    w_flag = ordered([*by, "__hot"], *order)
     s = df.select(
         *by,
         F.col(time_col),
         F.col(value_col),
         flagged.alias("__hot"),
-        *[F.col(c) for c in (order_tiebreak or [])],
+        *(order_tiebreak or []),
     ).select(
         *by,
         F.col(time_col),
@@ -2673,7 +2663,7 @@ def lomb_scargle(
     step_us = phase_step_minutes * 60_000_000
     base = df.select(
         *by,
-        F.expr(f"unix_micros({time_col}) div {step_us}").alias("__slot"),
+        F.floor(F.unix_micros(time_col) / F.lit(step_us)).alias("__slot"),
         F.col(value_col).cast("double").alias("__v"),
         F.explode(
             F.array(
@@ -2782,9 +2772,7 @@ def period_detect(
     b = (
         df.groupBy(
             *by,
-            (F.unix_micros(F.window(F.col(time_col), every).start) / us_per)
-            .cast("long")
-            .alias("__h"),
+            F.floor(F.unix_micros(time_col) / us_per).alias("__h"),
         )
         .agg(
             (
@@ -2794,7 +2782,7 @@ def period_detect(
             ).alias("__v")
         )
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     # per-key overall mean and total SS, quantized-term sums
     b2 = b.select(
         *by,
@@ -2858,9 +2846,7 @@ def period_detect(
         ),
         6,
     )
-    wbest = Window.partitionBy(*by).orderBy(
-        F.col("var_explained").desc(), F.col("period")
-    )
+    wbest = ordered(by, F.col("var_explained").desc_nulls_last(), "period")
     return (
         per.select(
             *by,
@@ -2990,8 +2976,8 @@ def session_stats(
             - F.unix_micros(F.col("session_start"))
         ).alias("__dur"),
     )
-    wrank = Window.partitionBy(*by).orderBy("__dur")
-    wall = Window.partitionBy(*by)
+    wrank = ordered(by, "__dur")
+    wall = ordered(by)
     r = s2.select(
         *by,
         "n_events",
@@ -3060,7 +3046,7 @@ def top_movers(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 6)
@@ -3068,14 +3054,12 @@ def top_movers(
             / F.count(value_col)
         ).alias("value")
     )
-    wlag = Window.partitionBy(*by).orderBy("bucket")
+    wlag = ordered(by, "bucket")
     s = b.select(
         *by, "bucket", "value", F.lag("value").over(wlag).alias("prev_value")
     ).filter(F.col("prev_value").isNotNull())
     delta = F.col("value") - F.col("prev_value")
-    wrank = Window.orderBy(
-        F.abs(delta).desc(), *[F.col(c) for c in by], F.col("bucket")
-    )
+    wrank = ordered([], F.abs(delta).desc_nulls_last(), *by, "bucket")
     return (
         s.select(
             *by, "bucket", "prev_value", "value", delta.alias("delta"),
@@ -3122,7 +3106,7 @@ def seasonal_strength(
         (F.col("seasonal") + F.col("residual")).alias("__sr"),
         (F.col("trend") + F.col("residual")).alias("__tr"),
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
 
     def mean_of(c):
         return (
@@ -3212,7 +3196,7 @@ def corr_matrix(
     df = _time_norm(df, time_col)
     b = df.groupBy(
         F.col(by).alias("k"),
-        F.window(F.col(time_col), every).start.alias("bucket"),
+        time_bucket(time_col, every).alias("bucket"),
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 6)
@@ -3259,8 +3243,8 @@ def winsorized_stats(
         raise ValueError(f"winsorized_stats: p must be in [0, 0.5), got {p}")
     by = by or []
     df = _time_norm(df, time_col)
-    wrank = Window.partitionBy(*by).orderBy(value_col)
-    wall = Window.partitionBy(*by)
+    wrank = ordered(by, value_col)
+    wall = ordered(by)
     r = df.select(
         *by,
         F.col(value_col).alias("__v"),
@@ -3334,7 +3318,7 @@ def apdex(
     df = _time_norm(df, time_col).filter(F.col(value_col).isNotNull())
     v = F.col(value_col)
     agg = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(v <= threshold, 1).otherwise(0))
@@ -3407,7 +3391,7 @@ def profile_drift(
             .otherwise(0)
         ).cast("long").alias("__nb"),
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     ta = F.sum("__na").over(wk)
     tb = F.sum("__nb").over(wk)
 
@@ -3469,14 +3453,12 @@ def completeness(
     us_per = _interval_us(every)
     b = df.groupBy(
         *by,
-        (F.unix_micros(F.col(time_col)) / F.lit(us_per))
-        .cast("long")
-        .alias("__b"),
+        F.floor(F.unix_micros(time_col) / F.lit(us_per)).alias("__b"),
     ).agg(
         F.min(F.unix_micros(F.col(time_col))).alias("__lo"),
         F.max(F.unix_micros(F.col(time_col))).alias("__hi"),
     )
-    w = Window.partitionBy(*by).orderBy("__b")
+    w = ordered(by, "__b")
     s = b.select(
         *by, "__b", "__lo", "__hi",
         (F.col("__b") - F.lag("__b").over(w) - 1).alias("__miss"),
@@ -3604,12 +3586,8 @@ def _rolling_rank_hof(
     short and drops), median/MAD as array expressions — zero joins,
     one sort per key, the value type kept."""
     cols = [*by, time_col, value_col, *order_tiebreak]
-    order = [F.col(c).asc_nulls_last() for c in [time_col, *order_tiebreak]]
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(-(window_rows - 1), Window.currentRow)
-    )
+    order = (time_col, *order_tiebreak)
+    w = ordered(by, *order, rows=(-(window_rows - 1), 0))
     mid = window_rows // 2 + 1  # element_at is 1-based
     s = df.select(
         *cols, F.collect_list(F.col(value_col)).over(w).alias("__f")
@@ -3620,7 +3598,7 @@ def _rolling_rank_hof(
     # measured 10x here). A current-row-frame window is a real plan
     # barrier that materializes the value once per row AND reuses the
     # existing (key, time) sort — no extra exchange.
-    w_row = Window.partitionBy(*by).orderBy(*order).rowsBetween(0, 0)
+    w_row = ordered(by, *order, rows=(0, 0))
 
     def once(col):
         return F.last(col).over(w_row)
@@ -3697,18 +3675,14 @@ def flatline(
     end_ts, n_samples, duration_us) for qualifying runs."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    order = (time_col, *(order_tiebreak or []))
+    w = ordered(by, *order)
     changed = F.when(
         F.lag(value_col).over(w).isNull()
         | (F.lag(value_col).over(w) != F.col(value_col)),
         1,
     ).otherwise(0)
-    run = F.sum(changed).over(
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    run = F.sum(changed).over(ordered(by, *order, rows=(None, 0)))
     s = df.select(
         *by, F.col(time_col), F.col(value_col), run.alias("__run")
     )
@@ -3750,12 +3724,11 @@ def percentile_bands(
     Returns (*by, bucket, n, vmin, p50, p95, p99, vmax)."""
     by = by or []
     df = _time_norm(df, time_col)
-    bucket = F.window(F.col(time_col), every).start
     s = df.select(
-        *by, bucket.alias("bucket"), F.col(value_col).alias("__v")
+        *by, time_bucket(time_col, every).alias("bucket"), F.col(value_col).alias("__v")
     )
-    wrank = Window.partitionBy(*by, "bucket").orderBy("__v")
-    wall = Window.partitionBy(*by, "bucket")
+    wrank = ordered([*by, "bucket"], "__v")
+    wall = ordered([*by, "bucket"])
     r = s.select(
         *by, "bucket", "__v",
         F.row_number().over(wrank).alias("__rn"),
@@ -3806,9 +3779,7 @@ def error_episodes(
     df = _time_norm(df, time_col)
     us_per = _interval_us(every)
     b = df.groupBy(
-        (F.unix_micros(F.col(time_col)) / F.lit(us_per))
-        .cast("long")
-        .alias("__b")
+        F.floor(F.unix_micros(time_col) / F.lit(us_per)).alias("__b")
     ).agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum(F.when(F.col(type_col) == error_type, 1).otherwise(0))
@@ -3817,7 +3788,7 @@ def error_episodes(
     )
     rate = F.col("__ne").cast("double") / F.col("__n").cast("double")
     hot = b.filter(rate > F.lit(rate_threshold))
-    w = Window.orderBy("__b")
+    w = ordered([], "__b")
     s = hot.select(
         "__b", "__n", "__ne",
         (F.col("__b") - F.row_number().over(w)).alias("__island"),
@@ -3882,7 +3853,7 @@ def mttr_mtbf(
         .alias("__b1"),
         "n_buckets",
     )
-    w = Window.orderBy("__b0")
+    w = ordered([], "__b0")
     g = e.select(
         "__b0", "n_buckets",
         (F.col("__b0") - F.lag("__b0").over(w)).alias("__gap"),
@@ -3961,11 +3932,7 @@ def exp_histogram(
     g = df.groupBy(*by, k_expr.alias("le")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    w = (
-        Window.partitionBy(*by)
-        .orderBy("le")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = ordered(by, "le", rows=(None, 0))
     return g.select(*by, "le", "n", F.sum("n").over(w).alias("cum_n"))
 
 
@@ -4040,8 +4007,7 @@ def burstiness(
     std_gap_us, burstiness)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    w = ordered(by, time_col, *(order_tiebreak or []))
     gap = F.unix_micros(F.col(time_col)) - F.unix_micros(
         F.lag(time_col).over(w)
     )
@@ -4101,7 +4067,7 @@ def value_entropy(
         *by,
         F.floor(F.col(value_col) / F.lit(bin_width)).alias("__bin"),
     ).agg(F.count(F.lit(1)).alias("__n"))
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     tot = F.sum("__n").over(wk)
     p = F.col("__n").cast("double") / tot.cast("double")
     term = F.round(-(p * F.log(p)), 8).cast("decimal(30,8)")
@@ -4142,7 +4108,7 @@ def peak_to_mean(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n"))
     pick = F.max(
         F.struct(
@@ -4193,7 +4159,7 @@ def wow_compare(
     df = _time_norm(df, time_col)
     lb_us = _interval_us(lookback)
     b = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 6)
@@ -4255,7 +4221,7 @@ def slot_anomaly(
         dow.cast("long").alias("__wd"),
         F.hour(F.col(time_col)).cast("long").alias("__hr"),
     )
-    w = Window.partitionBy(*by, "__wd", "__hr")
+    w = ordered([*by, "__wd", "__hr"])
     n = F.count(value_col).over(w)
     s1 = (
         F.round(F.sum(F.col(value_col).cast("decimal(30,8)")).over(w), 6)
@@ -4363,9 +4329,7 @@ def fano_factor(
     us_per = _interval_us(every)
     b = df.groupBy(
         *by,
-        (F.unix_micros(F.col(time_col)) / F.lit(us_per))
-        .cast("long")
-        .alias("__b"),
+        F.floor(F.unix_micros(time_col) / F.lit(us_per)).alias("__b"),
     ).agg(F.count(F.lit(1)).alias("n"))
     agg = b.groupBy(*by).agg(
         (F.max("__b") - F.min("__b") + 1).alias("n_buckets"),
@@ -4532,7 +4496,7 @@ def cusum_chart(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -4540,7 +4504,7 @@ def cusum_chart(
             / F.count(value_col)
         ).alias("value")
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     mu = (
         F.round(F.sum(F.col("value").cast("decimal(30,8)")).over(wk), 4)
         .cast("double")
@@ -4618,25 +4582,17 @@ def gapfill_eval(
     by = by or []
     df = _time_norm(df, time_col)
     us = _interval_us(every)
-    b = _bucketed(df, every, time_col, by, value_col).filter(
-        F.col("value").isNotNull()
-    )
+    b = df.groupBy(time_bucket(time_col, every).alias("bucket"), *by).agg(
+        _dec_avg(value_col).alias("value")
+    ).filter(F.col("value").isNotNull())
     idx = F.floor(F.unix_micros(F.col("bucket")) / F.lit(us)).cast("long")
     t = b.select(
         *by, "bucket", "value", (idx % holdout_mod == 0).alias("__hold")
     )
     train_val = F.when(~F.col("__hold"), F.col("value"))
     train_pos = F.when(~F.col("__hold"), F.unix_micros(F.col("bucket")))
-    wa = (
-        Window.partitionBy(*by)
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wb = (
-        Window.partitionBy(*by)
-        .orderBy("bucket")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
+    wa = ordered(by, "bucket", rows=(None, 0))
+    wb = ordered(by, "bucket", rows=(0, None))
     wnd = t.select(
         *by, "bucket", "value", "__hold",
         F.last(train_val, ignorenulls=True).over(wa).alias("__pv"),
@@ -4738,15 +4694,9 @@ def concurrency(
         ).alias("__c"),
     ).select("__u", "session_seq", F.col("__c.t").alias("t"),
              F.col("__c.d").alias("d"))
-    b = changes.withColumn(
-        "bucket", F.window(F.col("t"), every).start
-    )
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("t"), F.col("d").desc(), F.col("__u"),
-                 F.col("session_seq"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    b = changes.withColumn("bucket", time_bucket("t", every))
+    win = ordered("bucket", "t", F.col("d").desc_nulls_last(), "__u",
+                  "session_seq", rows=(None, 0))
     rs = b.select("bucket", "d", F.sum("d").over(win).alias("__rs"))
     per_bucket = rs.groupBy("bucket").agg(
         F.sum(F.when(F.col("d") == 1, 1).otherwise(0)).cast("long").alias(
@@ -4758,9 +4708,7 @@ def concurrency(
         F.sum("d").cast("long").alias("__net"),
         F.max("__rs").cast("long").alias("__peak"),
     )
-    wcarry = (
-        Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    )
+    wcarry = ordered([], "bucket", rows=(None, -1))
     return per_bucket.select(
         "bucket", "n_starts", "n_ends",
         F.coalesce(F.sum("__net").over(wcarry), F.lit(0)).cast("long").alias(
@@ -4794,11 +4742,7 @@ def late_arrivals(
     avg_late_us)."""
     by = by or []
     df = _time_norm(df, time_col)
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(arrival_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = ordered(by, arrival_col, rows=(None, -1))
     t = F.unix_micros(F.col(time_col))
     prev_max = F.max(t).over(w)
     lateness = F.when(prev_max > t, prev_max - t).otherwise(F.lit(0))
@@ -4853,8 +4797,8 @@ def histogram_quantile(
     literals. Returns (*by, q, total, le_bucket, quantile)."""
     by = by or []
     h = exp_histogram(df, max_exp, time_col, by, value_col)
-    wk = Window.partitionBy(*by)
-    wlag = Window.partitionBy(*by).orderBy("le")
+    wk = ordered(by)
+    wlag = ordered(by, "le")
     # Lower edge comes from the bucket SCHEMA (le/2 — every power-of-
     # two bucket is exported), not lag() over non-empty buckets:
     # Prometheus interpolates from the adjacent bound even when the
@@ -4943,8 +4887,8 @@ def quantile_sketch_audit(
     # FIRST but count(value) excludes them — ceil(q*n) would land on a
     # shifted or NULL row); drop them before ranking, like apdex
     df = df.filter(F.col(value_col).isNotNull())
-    wrank = Window.partitionBy(*by).orderBy(value_col)
-    wall = Window.partitionBy(*by)
+    wrank = ordered(by, value_col)
+    wall = ordered(by)
     r = df.select(
         *by,
         F.col(value_col).alias("__v"),
@@ -5078,11 +5022,11 @@ def ewma_control(
     (*by, bucket, value, ewma, center, lcl, ucl, alarm)."""
     by = by or []
     df = _time_norm(df, time_col)
-    b = _bucketed(df, every, time_col, by, value_col).filter(
-        F.col("value").isNotNull()
-    )
+    b = df.groupBy(time_bucket(time_col, every).alias("bucket"), *by).agg(
+        _dec_avg(value_col).alias("value")
+    ).filter(F.col("value").isNotNull())
     eb = ewma(b, alpha, "bucket", by, "value")
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     mu = (
         F.round(F.sum(F.col("value").cast("decimal(30,8)")).over(wk), 4)
         .cast("double")
@@ -5134,7 +5078,7 @@ def availability(
     longest_down_run)."""
     df = _time_norm(df, time_col)
     b = df.groupBy(
-        F.window(F.col(time_col), every).start.alias("bucket")
+        time_bucket(time_col, every).alias("bucket")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col(error_col) == error_value, 1).otherwise(0))
@@ -5159,11 +5103,11 @@ def availability(
         > F.lit(max_error_rate),
         F.lit(True),  # empty bucket: no traffic at all = down
     )
-    w = Window.orderBy("bucket")
+    w = ordered([], "bucket", rows=(None, 0))
     s = b.select("bucket", down.alias("__down")).select(
         "__down",
         F.sum(F.when(~F.col("__down"), 1).otherwise(0))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .over(w)
         .alias("__grp"),
     )
     runs = (
@@ -5328,7 +5272,7 @@ def matrix_profile(
     # min
     b = (
         df.filter(F.col(value_col).isNotNull())
-        .groupBy(F.window(F.col(time_col), every).start.alias("bucket"), *by)
+        .groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(_dec_avg(value_col).alias("__v"))
     )
     b = _bucket_count_guard(b, by, "matrix_profile", max_buckets)
@@ -5357,8 +5301,7 @@ def runs_test(
     n_minus, n_runs, expected_runs, z_stat)."""
     by = by or []
     df = _time_norm(df, time_col)
-    order = [F.col(time_col)] + [F.col(c) for c in (order_tiebreak or [])]
-    w = Window.partitionBy(*by).orderBy(*order)
+    w = ordered(by, time_col, *(order_tiebreak or []))
     tiebreak = list(order_tiebreak or [])
     d = (
         df.filter(F.col(value_col).isNotNull())
@@ -5378,9 +5321,7 @@ def runs_test(
     )
     # the run-boundary sort carries the SAME tiebreak as the diff sort
     # (equal timestamps within a key must order identically in both)
-    w2 = Window.partitionBy(*by).orderBy(
-        F.col("__t"), *[F.col(f"__o{i}") for i in range(len(tiebreak))]
-    )
+    w2 = ordered(by, "__t", *[F.col(f"__o{i}") for i in range(len(tiebreak))])
     flagged = d.select(
         *by,
         "__s",
@@ -5442,11 +5383,11 @@ def variance_ratio(
     df = _time_norm(df, time_col)
     b = (
         df.filter(F.col(value_col).isNotNull())
-        .groupBy(F.window(F.col(time_col), every).start.alias("bucket"), *by)
+        .groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(_dec_avg(value_col).alias("__v"))
     )
     b = _bucket_count_guard(b, by, "variance_ratio", max_buckets)
-    w = Window.partitionBy(*by).orderBy("bucket")
+    w = ordered(by, "bucket")
     lags = b.select(
         *by,
         "__v",
@@ -5545,11 +5486,11 @@ def hurst_exponent(
     df = _time_norm(df, time_col)
     b = (
         df.filter(F.col(value_col).isNotNull())
-        .groupBy(F.window(F.col(time_col), every).start.alias("bucket"), *by)
+        .groupBy(time_bucket(time_col, every).alias("bucket"), *by)
         .agg(_dec_avg(value_col).alias("__v"))
     )
     b = _bucket_count_guard(b, by, "hurst_exponent", max_buckets)
-    w = Window.partitionBy(*by).orderBy("bucket")
+    w = ordered(by, "bucket")
     idx = b.select(
         *by, "__v", (F.row_number().over(w) - F.lit(1)).alias("__i")
     )
@@ -5558,7 +5499,7 @@ def hurst_exponent(
     # the whole scan + bucket aggregation just to count buckets, then
     # joined it back at the end.
     idx = idx.withColumn(
-        "__nb", F.count(F.lit(1)).over(Window.partitionBy(*by))
+        "__nb", F.count(F.lit(1)).over(ordered(by))
     )
 
     def dec8(e):
@@ -5590,8 +5531,8 @@ def hurst_exponent(
         *by, "__v", "__i", "__nb",
         F.col("__sc.n").alias("__n"), F.col("__sc.c").alias("__c"),
     )
-    wp = Window.partitionBy(*by, "__n", "__c")
-    wc = wp.orderBy("__i")
+    wp = ordered([*by, "__n", "__c"])
+    wc = ordered([*by, "__n", "__c"], "__i", rows=(None, 0))
     g = (
         e.withColumn("__cn", F.count(F.lit(1)).over(wp))
         .withColumn(
@@ -5603,7 +5544,7 @@ def hurst_exponent(
         .withColumn(
             "__cum",
             F.sum(dec8(F.col("__v") - F.col("__mu"))).over(
-                wc.rowsBetween(Window.unboundedPreceding, 0)
+                wc
             ),
         )
     )
@@ -5703,7 +5644,7 @@ def page_hinkley(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -5711,7 +5652,7 @@ def page_hinkley(
             / F.count(value_col)
         ).alias("value")
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     mu = (
         F.round(F.sum(F.col("value").cast("decimal(30,8)")).over(wk), 4)
         .cast("double")
@@ -5732,8 +5673,7 @@ def page_hinkley(
         ).alias("__z"),
         sigma.alias("__sg"),
     ).filter(F.col("__sg") > 0).drop("__sg")
-    wo = Window.partitionBy(*by).orderBy("bucket")
-    pre = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    pre = ordered(by, "bucket", rows=(None, 0))
     zmean = (
         F.round(F.sum(F.col("__z").cast("decimal(30,8)")).over(pre), 8)
         .cast("double")
@@ -5794,7 +5734,7 @@ def permutation_entropy(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -5802,7 +5742,7 @@ def permutation_entropy(
             / F.count(value_col)
         ).alias("__v")
     )
-    wo = Window.partitionBy(*by).orderBy("bucket")
+    wo = ordered(by, "bucket")
     tri = b.select(
         *by,
         F.col("__v").alias("__a"),
@@ -5818,7 +5758,7 @@ def permutation_entropy(
     counts = tri.select(*by, pattern.alias("pattern")).groupBy(
         *by, "pattern"
     ).agg(F.count(F.lit(1)).alias("__n"))
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     tot = F.sum("__n").over(wk)
     p = F.col("__n").cast("double") / tot.cast("double")
     hterm = F.round(-p * F.log(p), 8).cast("decimal(30,8)")
@@ -5859,7 +5799,7 @@ def adf_test(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -5867,7 +5807,7 @@ def adf_test(
             / F.count(value_col)
         ).alias("__v")
     )
-    wo = Window.partitionBy(*by).orderBy("bucket")
+    wo = ordered(by, "bucket")
     pairs = b.select(
         *by,
         F.lag("__v", 1).over(wo).alias("__x"),
@@ -5940,7 +5880,7 @@ def granger_lag1(
     bucketed = (
         df.filter(F.col(value_col).isNotNull())
         .filter(F.col(series_col).isin(series_a, series_b))
-        .groupBy(F.window(time_col, every).start.alias("bucket"))
+        .groupBy(time_bucket(time_col, every).alias("bucket"))
         .agg(
             (
                 F.round(
@@ -5966,7 +5906,7 @@ def granger_lag1(
             ).alias("__b"),
         )
     )
-    w = Window.orderBy("bucket")
+    w = ordered([], "bucket")
     lagged = bucketed.select(
         F.col("__a").alias("__a0"), F.col("__b").alias("__b0"),
         F.lag("__a", 1).over(w).alias("__al"),
@@ -6069,7 +6009,7 @@ def theta_forecast(
 
     by = by or []
     df = _time_norm(df, time_col).filter(F.col(value_col).isNotNull())
-    w = Window.partitionBy(*by).orderBy(time_col, *(order_tiebreak or []))
+    w = ordered(by, time_col, *(order_tiebreak or []))
     rows = df.select(
         *by,
         F.row_number().over(w).alias("__rn"),
@@ -6185,7 +6125,7 @@ def kalman_level(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -6275,7 +6215,7 @@ def sigma_clip(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -6283,7 +6223,7 @@ def sigma_clip(
             / F.count(value_col)
         ).alias("__v")
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     orig = b.groupBy(*by).agg(
         F.count(F.lit(1)).cast("long").alias("n_buckets")
     )
@@ -6361,7 +6301,7 @@ def record_stats(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -6369,9 +6309,7 @@ def record_stats(
             / F.count(value_col)
         ).alias("__v")
     )
-    pre = Window.partitionBy(*by).orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
+    pre = ordered(by, "bucket", rows=(None, -1))
     flagged = b.select(
         *by,
         (F.max("__v").over(pre).isNull()
@@ -6434,7 +6372,7 @@ def turning_points(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -6442,7 +6380,7 @@ def turning_points(
             / F.count(value_col)
         ).alias("__v")
     )
-    w = Window.partitionBy(*by).orderBy("bucket")
+    w = ordered(by, "bucket")
     prev = F.lag("__v").over(w)
     nxt = F.lead("__v").over(w)
     flagged = b.select(
@@ -6506,7 +6444,7 @@ def cointegration(
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
         F.col(key_col).alias("__k"),
-        F.window(F.col(time_col), every).start.alias("bucket"),
+        time_bucket(time_col, every).alias("bucket"),
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -6524,7 +6462,7 @@ def cointegration(
         return F.sum(F.round(e, 6).cast("decimal(30,6)")).cast("double")
 
     keys = ["key_x", "key_y"]
-    wk = Window.partitionBy(*keys)
+    wk = ordered(keys)
     # pass 1: @6 per-pair means (exact decimal sums over the window)
     mx = F.round(
         F.sum(F.col("__x").cast("decimal(30,8)")).over(wk).cast("double")
@@ -6561,7 +6499,7 @@ def cointegration(
                             + F.col("__beta") * F.col("__x")), 6,
         ).alias("__e"),
     )
-    wo = Window.partitionBy(*keys).orderBy("bucket")
+    wo = ordered(keys, "bucket")
     lagged = resid.select(
         *keys, "n_buckets", "__beta", "__alpha", "__e",
         F.lag("__e").over(wo).alias("__el"),
@@ -6629,7 +6567,7 @@ def variogram(
     df = _time_norm(df, time_col)
     step_us = _interval_us(every)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -6773,7 +6711,7 @@ def intermittency(
     df = _time_norm(df, time_col)
     step_us = _interval_us(every)
     b = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(F.count(F.lit(1)).cast("long").alias("__d"))
     g = b.groupBy(*by).agg(
         F.count(F.lit(1)).cast("long").alias("n_demand_buckets"),
@@ -6845,6 +6783,8 @@ def croston(
     replays, so results are bit-exact cross-engine.
 
     Returns (*by, n_demands, z_hat, p_hat, forecast, forecast_sba)."""
+    import math
+
     import pandas as pd
 
     from pyspark.sql.types import (
@@ -6855,7 +6795,7 @@ def croston(
     df = _time_norm(df, time_col)
     step_us = _interval_us(every)
     b = df.groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("__bucket")
+        *by, time_bucket(time_col, every).alias("__bucket")
     ).agg(F.count(F.lit(1)).cast("long").alias("__d"))
     b = b.select(
         *by,
@@ -6877,14 +6817,16 @@ def croston(
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame | None:
         es = pdf["__e"].tolist()
         ds = pdf["__d"].tolist()
-        if len(es) < 2:
-            return None
         z = float(ds[0])
         q = None
         for i in range(1, len(es)):
             iv = float(es[i] - es[i - 1])
             z = (1.0 - a) * z + a * float(ds[i])
             q = iv if q is None else (1.0 - a) * q + a * iv
+        if q is None or math.isnan(q):
+            # a null-time bucket sorts last and leaves a null interval:
+            # no forecast, as the oracle's `q IS NOT NULL`
+            return None
         f = z / q
         row = [pdf.iloc[0][k] for k in by] + [
             len(es), z, q, f, (1.0 - a / 2.0) * f,
@@ -6947,8 +6889,9 @@ def iact(
     # py4j round-trips as Column loops; the strings emit the SAME
     # expression trees in a handful of calls
     part = ", ".join(f"`{c}`" for c in by)
+    # the null-time rule of `ordered`, spelled out in SQL
     ordr = ", ".join(
-        [f"`{time_col}`"] + [f"`{c}`" for c in (order_tiebreak or [])]
+        f"`{c}` ASC NULLS LAST" for c in [time_col, *(order_tiebreak or [])]
     )
     over = (
         "OVER ("
@@ -7042,7 +6985,7 @@ def kpss(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -7050,7 +6993,7 @@ def kpss(
             / F.count(value_col)
         ).alias("__v")
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     mu = F.round(
         F.sum(F.col("__v").cast("decimal(30,8)")).over(wk).cast("double")
         / F.count("__v").over(wk), 6,
@@ -7058,10 +7001,8 @@ def kpss(
     centered = b.select(
         *by, "bucket", (F.col("__v") - mu).alias("__e")
     )
-    wc = Window.partitionBy(*by).orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wo = Window.partitionBy(*by).orderBy("bucket")
+    wc = ordered(by, "bucket", rows=(None, 0))
+    wo = ordered(by, "bucket")
     staged = centered.select(
         *by, "__e",
         F.sum(F.round(F.col("__e"), 6).cast("decimal(30,6)")).over(wc)
@@ -7132,7 +7073,7 @@ def capability(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -7140,7 +7081,7 @@ def capability(
             / F.count(value_col)
         ).alias("__v")
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     mu = (
         F.round(F.sum(F.col("__v").cast("decimal(30,8)")).over(wk), 4)
         .cast("double")
@@ -7203,7 +7144,7 @@ def seasonal_mk(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("__bucket")
+        *by, time_bucket(time_col, every).alias("__bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -7300,7 +7241,7 @@ def spc_rules(
     by = by or []
     df = _time_norm(df, time_col)
     b = df.filter(F.col(value_col).isNotNull()).groupBy(
-        *by, F.window(F.col(time_col), every).start.alias("bucket")
+        *by, time_bucket(time_col, every).alias("bucket")
     ).agg(
         (
             F.round(F.sum(F.col(value_col).cast("decimal(30,8)")), 4)
@@ -7308,7 +7249,7 @@ def spc_rules(
             / F.count(value_col)
         ).alias("__v")
     )
-    wk = Window.partitionBy(*by)
+    wk = ordered(by)
     mu = (
         F.round(F.sum(F.col("__v").cast("decimal(30,8)")).over(wk), 4)
         .cast("double")
@@ -7329,10 +7270,7 @@ def spc_rules(
     ).filter(F.col("__sg") > 0).drop("__sg")
 
     def frame(n):
-        return (
-            Window.partitionBy(*by).orderBy("bucket")
-            .rowsBetween(-(n - 1), 0)
-        )
+        return ordered(by, "bucket", rows=(-(n - 1), 0))
 
     def cnt(cond, n):
         return F.sum(cond.cast("int")).over(frame(n))

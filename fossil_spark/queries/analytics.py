@@ -6,9 +6,10 @@ counting. Each demonstrates a Spark plan pattern that matters at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fossil_spark.operators.timeseries import ordered, time_bucket
 from fossil_spark.queries.tpch import dsum
 from fossil_spark.session import read_table
 
@@ -18,11 +19,7 @@ def running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkey; the running sum is a single window pass within each key
     (decimal accumulation: partition-order independent)."""
     o = read_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = ordered("o_custkey", "o_orderdate", "o_orderkey", rows=(None, 0))
     return o.select(
         "o_custkey",
         "o_orderkey",
@@ -71,7 +68,7 @@ def rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     fine = (
         ev.groupBy(
-            F.window("ts", "15 minutes").start.alias("bucket15"),
+            time_bucket("ts", "15 minutes").alias("bucket15"),
             "event_type",
         )
         .agg(
@@ -156,7 +153,7 @@ def user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _user_feature_agg(ev: DataFrame) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered("user_id", "ts", "event_id")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
     new_session = F.when(
         gap_us.isNull() | (gap_us > 30 * 60 * 1_000_000), F.lit(1)
@@ -285,11 +282,11 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-aligned on BOTH engines (window() is epoch-aligned; the
     oracle pins time_bucket's origin to 1970-01-01)."""
     ev = read_table(spark, sf_dir, "events")
-    week = F.window("ts", "1 week").start
+    week = time_bucket("ts", "1 week")
     b = ev.select(
         "user_id", "event_type", "value", week.alias("period"),
     )
-    cohort = F.min("period").over(Window.partitionBy("user_id"))
+    cohort = F.min("period").over(ordered("user_id"))
     c = b.select(
         "user_id", "event_type", "value", "period", cohort.alias("cohort"),
     )
@@ -322,7 +319,7 @@ def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     via a window over the tiny transition table (k^2 rows) — the
     event scan runs once. Integer counts, one double division."""
     ev = read_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered("user_id", "ts", "event_id")
     pairs = ev.select(
         F.lag("event_type").over(w).alias("prev_type"),
         F.col("event_type").alias("next_type"),
@@ -330,7 +327,7 @@ def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = pairs.groupBy("prev_type", "next_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    row_total = F.sum("n").over(Window.partitionBy("prev_type"))
+    row_total = F.sum("n").over(ordered("prev_type"))
     return counts.select(
         "prev_type", "next_type", F.col("n").cast("long").alias("n"),
         F.round(F.col("n").cast("double") / row_total.cast("double"), 6)
@@ -377,10 +374,10 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "monetary",
     )
     r = F.ntile(5).over(
-        Window.orderBy(F.col("recency_days").desc(), "user_id")
+        ordered([], F.col("recency_days").desc_nulls_last(), "user_id")
     )
-    f = F.ntile(5).over(Window.orderBy(F.col("frequency").asc(), "user_id"))
-    m = F.ntile(5).over(Window.orderBy(F.col("monetary").asc(), "user_id"))
+    f = F.ntile(5).over(ordered([], "frequency", "user_id"))
+    m = F.ntile(5).over(ordered([], "monetary", "user_id"))
     return staged.select(
         "user_id", "recency_days", "frequency", "monetary",
         r.cast("long").alias("r_score"),
@@ -410,15 +407,15 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains. Returns (item_a, item_b, n_a, n_b, n_ab, support,
     conf_a_to_b, conf_b_to_a, lift) with item_a < item_b."""
     ev = read_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered("user_id", "ts", "event_id")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
     new_s = (
-        F.when(gap_us.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
+        F.when(gap_us > 30 * 60 * 1_000_000, 1)
         .otherwise(0)
         .cast("long")
     )
     sid = F.sum(new_s).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ordered("user_id", "ts", "event_id", rows=(None, 0))
     )
     si = ev.select(
         "user_id", "event_type", sid.alias("session_seq")
@@ -511,7 +508,7 @@ def user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = per_user.select(
         "user_id", "x",
         F.row_number()
-        .over(Window.orderBy(F.col("x").asc(), F.col("user_id").asc()))
+        .over(ordered([], "x", "user_id"))
         .alias("i"),
     )
     agg = ranked.agg(
@@ -541,27 +538,29 @@ def session_paths(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     and agg_basket (order matters here).
 
     Determinism note: collect_list order under groupBy is undefined,
-    so the path is built by array_sort over (ts, event_id, type)
-    structs — a total order — then projected to types. Shape: the
+    so the path is built by array_sort over (row number in the
+    sessionization window's (ts, event_id) order, type) structs — a
+    total order, null time last — then projected to types. Shape: the
     sessionization window + ONE groupBy per session (path strings
     bounded by session length), a path-count groupBy, and a top-k cut
     (TakeOrderedAndProject; ties break on the path). Returns (path,
     n_sessions, n_events_per_session)."""
     ev = read_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered("user_id", "ts", "event_id")
     gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
     new_s = (
-        F.when(gap_us.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
+        F.when(gap_us > 30 * 60 * 1_000_000, 1)
         .otherwise(0)
         .cast("long")
     )
     sid = F.sum(new_s).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ordered("user_id", "ts", "event_id", rows=(None, 0))
     )
     staged = ev.select(
         "user_id",
         sid.alias("session_seq"),
-        F.struct("ts", "event_id", "event_type").alias("__s"),
+        F.struct(F.row_number().over(w).alias("__i"), "event_type")
+        .alias("__s"),
     )
     paths = staged.groupBy("user_id", "session_seq").agg(
         F.array_join(
@@ -577,7 +576,7 @@ def session_paths(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
         F.count(F.lit(1)).alias("n_sessions"),
         F.max("__n_ev").cast("long").alias("n_events_per_session"),
     )
-    return counts.orderBy(F.col("n_sessions").desc(), "path").limit(k)
+    return counts.orderBy(F.col("n_sessions").desc_nulls_last(), "path").limit(k)
 
 
 def _ab_variant(user_col: str = "user_id"):
@@ -668,11 +667,11 @@ def new_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Weekly buckets are epoch-aligned on BOTH engines (the
     agg_cohort_ltv rule)."""
     ev = read_table(spark, sf_dir, "events")
-    week = F.window("ts", "1 week").start
+    week = time_bucket("ts", "1 week")
     uw = ev.groupBy(F.col("user_id"), week.alias("week")).agg(
         F.count(F.lit(1)).alias("__n")
     )
-    first = F.min("week").over(Window.partitionBy("user_id"))
+    first = F.min("week").over(ordered("user_id"))
     c = uw.select("user_id", "week", first.alias("first_week"))
     agg = c.groupBy("week").agg(
         F.count(F.lit(1)).alias("active_users"),
@@ -748,8 +747,8 @@ def user_outliers(
     Returns (user_id, n_events, mod_zscore)."""
     ev = read_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    w_rank = Window.orderBy("n_events", "user_id")
-    w_all = Window.partitionBy()
+    w_rank = ordered([], "n_events", "user_id")
+    w_all = ordered([])
     r = counts.select(
         "user_id", "n_events",
         F.row_number().over(w_rank).alias("__rn"),
@@ -766,7 +765,7 @@ def user_outliers(
         F.abs(F.col("n_events").cast("double") - med).alias("__ad"),
         med.alias("__med"),
     )
-    w_rank2 = Window.orderBy("__ad", "user_id")
+    w_rank2 = ordered([], "__ad", "user_id")
     r2 = d.select(
         "user_id", "n_events", "__ad", "__med",
         F.row_number().over(w_rank2).alias("__rn2"),
@@ -805,11 +804,7 @@ def attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer counts, decimal revenue. Returns (attributed_type,
     n_purchases, revenue, share)."""
     ev = read_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = ordered("user_id", "ts", "event_id", rows=(None, -1))
     prev = F.max(
         F.when(
             F.col("event_type") != "purchase",
@@ -835,7 +830,7 @@ def attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("revenue"),
     )
-    total = Window.partitionBy()
+    total = ordered([])
     return agg.select(
         "attributed_type",
         "n_purchases",
@@ -863,7 +858,7 @@ def purchase_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_gap_hours, median_gap_hours, p90_gap_hours, max_gap_hours)."""
     ev = read_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered("user_id", "ts", "event_id")
     g = p.select(
         "user_id",
         (
@@ -884,12 +879,8 @@ def purchase_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row_number over the pooled table, but the single-partition
     # window input shrinks from |purchase events| to |distinct gaps|.
     d = g.groupBy("gap_us").agg(F.count(F.lit(1)).alias("__c"))
-    wcum = Window.orderBy("gap_us").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    wcum = ordered([], "gap_us", rows=(None, 0))
+    wall = ordered([])
     r = d.select(
         "gap_us",
         F.sum("__c").over(wcum).alias("__cum"),
@@ -942,7 +933,7 @@ def conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     row: (n_signup_users, n_converted, conversion_rate,
     median_lag_hours, p90_lag_hours, max_lag_hours)."""
     ev = read_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
+    w = ordered("user_id")
     s1 = ev.select(
         "user_id",
         F.col("event_type"),
@@ -968,8 +959,8 @@ def conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", (F.col("__p") - F.col("__s")).alias("__lag")
     )
     conv = d.filter(F.col("__lag").isNotNull())
-    wrank = Window.orderBy("__lag")
-    wall = Window.partitionBy()
+    wrank = ordered([], "__lag")
+    wall = ordered([])
     r = conv.select(
         "__lag",
         F.row_number().over(wrank).alias("__rn"),
@@ -1021,7 +1012,7 @@ def net_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero week-0 revenue report NULL nrr (documented). Returns
     (cohort, period_offset, n_active, revenue, nrr)."""
     ltv = cohort_ltv(spark, sf_dir)
-    w = Window.partitionBy("cohort")
+    w = ordered("cohort")
     rev0 = F.max(
         F.when(F.col("period_offset") == 0, F.col("revenue"))
     ).over(w)
@@ -1057,12 +1048,12 @@ def growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     week_us = 604_800_000_000
     uw = ev.select(
         "user_id",
-        F.window("ts", "1 week").start.alias("week"),
+        time_bucket("ts", "1 week").alias("week"),
     ).distinct()
-    w = Window.partitionBy("user_id").orderBy("week")
+    w = ordered("user_id", "week")
     s = uw.select(
         "user_id", "week",
-        F.min("week").over(Window.partitionBy("user_id")).alias("__first"),
+        F.min("week").over(ordered("user_id")).alias("__first"),
         F.lag("week").over(w).alias("__prev"),
         F.lead("week").over(w).alias("__next"),
     )
@@ -1074,9 +1065,10 @@ def growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit("resurrected"))
     )
-    lapsing = F.col("__next").isNull() | (
+    # a null week (null time) lapses into no week: no churn marker
+    lapsing = F.col("week").isNotNull() & (F.col("__next").isNull() | (
         F.unix_micros("__next") - F.unix_micros("week") > week_us
-    )
+    ))
     # ONE pass: each user-week emits its status marker plus, when the
     # user lapses, a churn marker on the following week — a
     # conditional explode instead of a second branch over the same
@@ -1155,7 +1147,7 @@ def retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = retention(
         read_table(spark, sf_dir, "events"), "1 week", "ts", "user_id"
     )
-    wch = Window.partitionBy("cohort")
+    wch = ordered("cohort")
     base = r.select(
         "cohort", "period_offset", "n_active",
         F.max(F.when(F.col("period_offset") == 0, F.col("n_active")))
@@ -1276,12 +1268,12 @@ def skew_audit(
     # NOT a single-partition rank window (|keys| can be 1e9 at 100 TB);
     # totals are a 1-row broadcast. The counts table is checkpointed:
     # both branches consume it.
-    top = counts.orderBy(F.col("n_rows").desc(), "key_value").limit(k)
+    top = counts.orderBy(F.col("n_rows").desc_nulls_last(), "key_value").limit(k)
     totals = counts.agg(
         F.sum("n_rows").alias("__total"),
         F.count(F.lit(1)).alias("__nkeys"),
     )
-    w = Window.orderBy(F.col("n_rows").desc(), F.col("key_value"))
+    w = ordered([], F.col("n_rows").desc_nulls_last(), "key_value")
     r = top.crossJoin(F.broadcast(totals)).withColumn(
         "rank", F.row_number().over(w)
     )
@@ -1319,8 +1311,8 @@ def lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    w = Window.orderBy(F.col("__rev"), F.col("user_id"))
-    wall = Window.partitionBy()
+    w = ordered([], "__rev", "user_id")
+    wall = ordered([])
     r = u.select(
         "__rev",
         F.row_number().over(w).alias("__rn"),
@@ -1331,10 +1323,8 @@ def lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_users"),
         F.sum("__rev").alias("__drev"),
     )
-    wcum = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wtot = Window.partitionBy()
+    wcum = ordered([], "decile", rows=(None, 0))
+    wtot = ordered([])
     return g.select(
         "decile", "n_users",
         F.round(F.col("__drev"), 4).cast("double").alias("decile_revenue"),
@@ -1364,9 +1354,9 @@ def chi2_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = ev.groupBy(
         "event_type", F.dayofweek("ts").alias("__wd")
     ).agg(F.count(F.lit(1)).alias("__o"))
-    wr = Window.partitionBy("event_type")
-    wc = Window.partitionBy("__wd")
-    wall = Window.partitionBy()
+    wr = ordered("event_type")
+    wc = ordered("__wd")
+    wall = ordered([])
     t = g.select(
         "__o",
         F.sum("__o").over(wr).alias("__rt"),
@@ -1448,18 +1438,14 @@ def survival_km(spark: SparkSession, sf_dir: str,
         F.count(F.lit(1)).alias("__n_at"),
         F.sum("__ev").alias("n_events"),
     )
-    w_desc = Window.orderBy(F.col("t_days").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
+    w_desc = ordered([], F.col("t_days").desc_nulls_last(), rows=(None, 0))
     risk = per_t.withColumn("n_risk", F.sum("__n_at").over(w_desc)).filter(
         F.col("n_events") >= 1
     )
     term = F.lit(1.0) - F.col("n_events").cast("double") / F.col(
         "n_risk"
     ).cast("double")
-    w_asc = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
+    w_asc = ordered([], "t_days", rows=(None, 0))
     km = risk.withColumn(
         "__lncum",
         F.sum(
@@ -1556,7 +1542,7 @@ def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("__v") == 0, 1).otherwise(0)).alias("__ca"),
         F.sum(F.when(F.col("__v") == 1, 1).otherwise(0)).alias("__cb"),
     )
-    w = Window.orderBy("__m").rowsBetween(Window.unboundedPreceding, -1)
+    w = ordered([], "__m", rows=(None, -1))
     # exact U contribution per distinct value: halves live in dec(38,1)
     contrib = grid.select(
         "__ca", "__cb",
@@ -1965,7 +1951,7 @@ def spearman_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets, spearman_rho, t_stat)."""
     ev = read_table(spark, sf_dir, "events")
     b = ev.filter(F.col("value").isNotNull()).groupBy(
-        "event_type", F.window("ts", "1 hour").start.alias("bucket")
+        "event_type", time_bucket("ts", "1 hour").alias("bucket")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         (
@@ -1974,10 +1960,10 @@ def spearman_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("value")
         ).alias("__v"),
     )
-    wx = Window.partitionBy("event_type").orderBy("__n")
-    wy = Window.partitionBy("event_type").orderBy("__v")
-    cx = Window.partitionBy("event_type", "__n")
-    cy = Window.partitionBy("event_type", "__v")
+    wx = ordered("event_type", "__n")
+    wy = ordered("event_type", "__v")
+    cx = ordered(["event_type", "__n"])
+    cy = ordered(["event_type", "__v"])
     ranked = b.select(
         "event_type",
         (F.lit(2) * F.rank().over(wx) + F.count(F.lit(1)).over(cx)
@@ -2191,12 +2177,10 @@ def bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(t, 6).alias("t_stat"),
         p.alias("__p"),
     ).filter(F.col("__p").isNotNull())
-    wr = Window.orderBy("__p", "event_type")
-    wm = Window.orderBy(F.col("__p").desc(), F.col("event_type").desc()) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    mtot = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    wr = ordered([], "__p", "event_type")
+    wm = ordered([], F.col("__p").desc_nulls_last(),
+                 F.col("event_type").desc_nulls_last(), rows=(None, 0))
+    mtot = ordered([])
     ranked = scored.select(
         "event_type", "n_a", "n_b", "t_stat", "__p",
         F.row_number().over(wr).cast("long").alias("bh_rank"),
@@ -2279,8 +2263,8 @@ def poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.try_divide(F.col("__sx"), F.col("__nw").cast("double"))
         .alias("__mean"),
     )
-    wr = Window.orderBy("__mean", "__b")
-    ordered = per_rep.select(
+    wr = ordered([], "__mean", "__b")
+    by_mean = per_rep.select(
         "__mean", F.row_number().over(wr).alias("__rn")
     )
     base = per_user.agg(
@@ -2293,7 +2277,7 @@ def poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ), 6,
         ).alias("point_mean"),
     )
-    stats = ordered.agg(
+    stats = by_mean.agg(
         F.count(F.lit(1)).cast("long").alias("n_boot"),
         F.round(
             F.sum(F.round(F.col("__mean"), 8).cast("decimal(30,8)")), 8
@@ -2400,12 +2384,9 @@ def pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
             ), 2,
         ).alias("__rev")
     )
-    w = Window.orderBy(F.col("__rev").desc(), "l_partkey").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tot = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    w = ordered([], F.col("__rev").desc_nulls_last(), "l_partkey",
+                rows=(None, 0))
+    tot = ordered([])
     cum = (
         F.sum("__rev").over(w).cast("double")
         / F.sum("__rev").over(tot).cast("double")
@@ -2419,9 +2400,7 @@ def pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_parts"),
         F.sum(F.col("__rev").cast("decimal(30,2)")).alias("__crev"),
     )
-    gt = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    gt = ordered([])
     return g.select(
         "abc_class", "n_parts",
         F.col("__crev").cast("double").alias("revenue"),
@@ -2464,9 +2443,7 @@ def msprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RANGE frame, not ROWS: both variants' rows for the same day are
     # frame peers, so every row's cumulative covers the full day
     # regardless of intra-day row order (sign-safe, unlike a max-fix)
-    wc = Window.orderBy("day").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    wc = ordered([], "day", range=(None, 0))
 
     def cum(v, col):
         e = F.when(F.col("__v") == v, F.col(col))
@@ -2498,9 +2475,7 @@ def msprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2.0) * sig2 * (F.lit(1.0) + neff),
     )
     p_day = F.least(F.exp(-loglam), F.lit(1.0))
-    wmin = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    wmin = ordered([], "day", rows=(None, 0))
     staged = pivoted.select(
         "day", "n_a", "n_b",
         F.round(theta, 6).alias("theta_hat"),
@@ -2537,12 +2512,8 @@ def ks_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__m",
         (F.lit(1) - _ab_variant().cast("int")).alias("__a"),
     )
-    w = Window.orderBy("__m").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    w = ordered([], "__m", range=(None, 0))
+    wall = ordered([])
     staged = tagged.select(
         F.sum("__a").over(w).alias("__ca"),
         F.sum(1 - F.col("__a")).over(w).alias("__cb"),
@@ -2862,7 +2833,7 @@ def markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms @8-quantized. Returns (state, n_transitions,
     row_entropy_bits, occupancy, entropy_rate_bits)."""
     ev = read_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered("user_id", "ts", "event_id")
     pairs = ev.select(
         F.lag("event_type").over(w).alias("__prev"),
         F.col("event_type").alias("__next"),
@@ -2870,7 +2841,7 @@ def markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = pairs.groupBy("__prev", "__next").agg(
         F.count(F.lit(1)).cast("long").alias("__n")
     )
-    row_tot = F.sum("__n").over(Window.partitionBy("__prev"))
+    row_tot = F.sum("__n").over(ordered("__prev"))
     p = F.col("__n").cast("double") / row_tot.cast("double")
     _LN2 = 0.6931471805599453
     term = F.round(
@@ -2882,9 +2853,7 @@ def markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("__n").cast("long").alias("n_transitions"),
         F.round(F.sum("__t"), 8).cast("double").alias("__h"),
     )
-    total = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    total = ordered([])
     occ = (
         F.col("n_transitions").cast("double")
         / F.sum("n_transitions").over(total).cast("double")
@@ -2936,7 +2905,7 @@ def stratified_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "user_id", "__n_ev", "__y", _ab_variant().alias("__v")
     )
-    w = Window.orderBy("__n_ev", "user_id")
+    w = ordered([], "__n_ev", "user_id")
     staged = per_user.select(
         "__v", "__y", F.ntile(10).over(w).alias("stratum")
     )
@@ -2962,7 +2931,7 @@ def stratified_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan-budget lint)
     nt = F.sum(
         (F.col("n_a") + F.col("n_b")).cast("double")
-    ).over(Window.partitionBy(F.lit(1)))
+    ).over(ordered([]))
     mean_a = F.try_divide(F.col("__sa"), F.col("n_a").cast("double"))
     mean_b = F.try_divide(F.col("__sb"), F.col("n_b").cast("double"))
     return (
@@ -3085,8 +3054,8 @@ def theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )),
         "o_custkey",
     )
-    wg = Window.partitionBy("segment")
-    wall = Window.partitionBy(F.lit(1))
+    wg = ordered("segment")
+    wall = ordered([])
     mu_g = (
         F.round(F.sum(F.col("__y").cast("decimal(30,8)")).over(wg), 4)
         .cast("double")
@@ -3167,17 +3136,15 @@ def raking(
     # same subtree would self-join-dedup into two re-aliased scans
     # (caught by the live-scan probe); the two windows share the
     # user_id partitioning, so this is one scan + one shuffle
-    wdom = Window.partitionBy("user_id").orderBy(
-        F.col("__c").desc(), F.col("event_type").asc()
-    )
-    wtot = Window.partitionBy("user_id")
+    wdom = ordered("user_id", F.col("__c").desc_nulls_last(), "event_type")
+    wtot = ordered("user_id")
     u0 = per_ut.select(
         "user_id",
         "event_type",
         F.row_number().over(wdom).alias("__rn"),
         F.sum("__c").over(wtot).cast("long").alias("__n_ev"),
     ).filter(F.col("__rn") == 1)
-    wq = Window.orderBy("__n_ev", "user_id")
+    wq = ordered([], "__n_ev", "user_id")
     u = u0.select(
         F.col("event_type").alias("__dom"),
         F.ntile(4).over(wq).alias("quartile"),
@@ -3186,7 +3153,7 @@ def raking(
         F.col("__dom").alias("event_type"), "quartile"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_users"))
 
-    wall = Window.partitionBy()
+    wall = ordered([])
     n_total = F.sum("n_users").over(wall).cast("double")
     n_rowcats = F.size(F.collect_set("event_type").over(wall)).cast(
         "double"
@@ -3202,14 +3169,14 @@ def raking(
     ).cast("decimal(30,8)")
     for _ in range(rounds):
         cur_row = (
-            F.sum(mass()).over(Window.partitionBy("event_type"))
+            F.sum(mass()).over(ordered("event_type"))
             .cast("double")
         )
         c = c.withColumn(
             "__w", F.col("__w") * (F.col("__t_row") / cur_row)
         )
         cur_col = (
-            F.sum(mass()).over(Window.partitionBy("quartile"))
+            F.sum(mass()).over(ordered("quartile"))
             .cast("double")
         )
         c = c.withColumn(

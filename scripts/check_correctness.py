@@ -8,10 +8,13 @@ Compares row count, column names, and order-insensitive values
 pandas normalization).
 
 Usage: python scripts/check_correctness.py [sf_dir] [key ...]
+
+A key argument may be an fnmatch pattern ('ts_*').
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -21,6 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
+TABLES = ("region nation customer supplier part orders lineitem events "
+          "documents embeddings").split()
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
@@ -38,6 +43,9 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def values_equal(a, b) -> bool:
     if isinstance(a, float) and isinstance(b, float):
         return (math.isnan(a) and math.isnan(b)) or a == b
+    if a is pd.NaT or b is pd.NaT:
+        # NaT != NaT: two null timestamps are equal, NaT vs a time is not
+        return all(v is None or v is pd.NaT for v in (a, b))
     return a == b
 
 
@@ -62,9 +70,20 @@ def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, str]:
     return True, ""
 
 
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per table of `sf_dir`, the
+    names the oracle SQL reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
 
     import __spark_entry__ as e
     from fossil_spark.session import get_spark
@@ -76,18 +95,11 @@ def main() -> int:
     n = res.count()
     print(f"entry(): OK, {n} row(s), schema: {res.schema.simpleString()}")
 
-    # --- DuckDB views -----------------------------------------------------
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    con = oracle_connection(sf_dir)
     qs, oracles = e.queries(), e.oracle_sql()
     failed = []
     for key, fn in qs.items():
-        if only and key not in only:
+        if only and not any(fnmatch.fnmatchcase(key, p) for p in only):
             continue
         try:
             got = normalize(fn(spark, sf_dir).toPandas())

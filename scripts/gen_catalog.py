@@ -33,6 +33,20 @@ GROUPS = [
      lambda k: k.startswith("streaming_")),
 ]
 
+NOTES = {
+    "Time-series analytics": [
+        "Null times follow DuckDB's defaults, through the two builders in",
+        "`operators/timeseries.py` that every time-series and analytics",
+        "query uses: `ordered(by, *order, rows=, range=)` sorts a null",
+        "time (and any null order key) LAST, ascending or",
+        "`desc_nulls_last`; `time_bucket(col, every)` gives a null time a null",
+        "bucket, which groups as a bucket of its own (Spark's",
+        "`window()` would drop the row). The per-key pandas operators",
+        "(`_per_key`) sort nulls last too.",
+        "",
+    ],
+}
+
 
 def main() -> None:
     qs = sorted(entry.queries())
@@ -53,7 +67,8 @@ def main() -> None:
     for title, pred in GROUPS:
         keys = [k for k in qs if pred(k) and k not in seen]
         seen.update(keys)
-        lines += ["", f"## {title}", "", "| key | check |", "|---|---|"]
+        lines += ["", f"## {title}", "", *NOTES.get(title, []),
+                  "| key | check |", "|---|---|"]
         lines += [
             f"| `{k}` | {'oracle' if k in oracles else 'rows-only'} |"
             for k in keys

@@ -1,8 +1,10 @@
 """Source lint: every pandas boundary (mapInPandas / applyInPandas /
 applyInPandasWithState) in fossil_spark/ and __spark_entry__.py sits in one of
-the two harnesses or in a listed site that cannot use them, and no Python-RDD
-path (`.rdd`, mapPartitions / mapPartitionsWithIndex) is left at all. Pure
-AST scan (comments never match), no Spark session."""
+the two harnesses or in a listed site that cannot use them, no Python-RDD
+path (`.rdd`, mapPartitions / mapPartitionsWithIndex) is left at all, and the
+time-series and analytics queries build windows and time buckets only through
+timeseries.ordered / timeseries.time_bucket. Pure AST scan (comments never match),
+no Spark session."""
 
 import ast
 import os
@@ -48,23 +50,28 @@ def _trees():
             yield rel, ast.parse(f.read(), rel)
 
 
+def _outer_defs(tree):
+    """(node, name of its outermost enclosing def) for every node."""
+    def walk(node, outer):
+        for child in ast.iter_child_nodes(node):
+            name = outer
+            if outer is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                name = child.name
+            yield child, outer
+            yield from walk(child, name)
+
+    return walk(tree, None)
+
+
 def _boundary_calls():
     for rel, tree in _trees():
-
-        def walk(node, outer):
-            for child in ast.iter_child_nodes(node):
-                name = outer
-                if outer is None and isinstance(
-                    child, (ast.FunctionDef, ast.AsyncFunctionDef)
-                ):
-                    name = child.name
-                if (isinstance(child, ast.Call)
-                        and isinstance(child.func, ast.Attribute)
-                        and child.func.attr in METHODS):
-                    yield rel, child.lineno, outer, child.func.attr
-                yield from walk(child, name)
-
-        yield from walk(tree, None)
+        for node, outer in _outer_defs(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in METHODS):
+                yield rel, node.lineno, outer, node.func.attr
 
 
 def test_pandas_boundaries_go_through_the_harnesses():
@@ -94,4 +101,40 @@ def test_no_python_rdd_paths():
     assert not found, (
         "Python-RDD path (rows leave the plan through Python workers); "
         "build it as a DataFrame plan: " + "; ".join(found)
+    )
+
+
+# The null-time rule (a null time sorts last and buckets alone) lives in
+# timeseries.time_bucket / timeseries.ordered; these files order and bucket
+# only through them.
+ORDERED_FILES = {
+    "fossil_spark/operators/timeseries.py",
+    "fossil_spark/queries/analytics.py",
+    "__spark_entry__.py",
+}
+BUILDERS = {"time_bucket", "ordered"}
+
+
+def test_windows_and_buckets_go_through_the_builders():
+    found = []
+    for rel, tree in _trees():
+        if rel not in ORDERED_FILES:
+            continue
+        for node, fn in _outer_defs(tree):
+            line = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if fn not in BUILDERS and (
+                (isinstance(node, ast.Name) and node.id == "Window")
+                or (isinstance(node, ast.Attribute) and node.attr == "window")
+            ):
+                found.append(f"{line} {ast.unparse(node)} in {fn}")
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("asc", "desc")
+                    and (not node.args
+                         or ast.unparse(node.func.value) == "F")):
+                found.append(f"{line} {ast.unparse(node)}: nulls order "
+                             "unstated (asc_nulls_last / desc_nulls_last)")
+    assert not found, (
+        "order and bucket rows through timeseries.ordered / "
+        "timeseries.time_bucket: " + "; ".join(found)
     )
